@@ -1345,8 +1345,7 @@ def node_similarity(
     # reference re-runs the distinct's shuffle (r16 audit: 62 Exchange
     # / 61 InMemoryTableScan nodes, zero ReusedExchange — AQE plans
     # each cached-scan subtree independently). Caching the two tiny
-    # keyed tables (|E| and |V| rows, the same tracked_cache contract
-    # as the LSH signature table) collapses the recomputation: one
+    # keyed tables (|E| and |V| rows) collapses the recomputation: one
     # distinct, one degree agg, every other reference an
     # InMemoryTableScan.
     nbrs = tracked_cache(

@@ -526,14 +526,6 @@ def minhash_lsh_pairs(
         max(threshold - 0.15, 0.0),
     )
 
-    # Materialize the survivors before the verify joins: cand has ONE
-    # consumer, but without a materialization boundary AQE plans the
-    # verify joins blind to the (tiny) survivor count and the measured
-    # sf1 wall-clock swings 7.3–10.7s run-to-run (sort-merge draws);
-    # with it, the verify stage sees exact stats, broadcasts the
-    # survivors, and the line is a stable ~7.5s (r11 A/B).
-    cand = tracked_cache(cand)
-
     # Exact verify from the kernel's sorted hash sets: set
     # intersection/union on long arrays — no second pass over the
     # text, no collect_set aggregate (the kernel already emitted the
@@ -736,7 +728,7 @@ def minhash_index_query(
     kept = spark.read.parquet(path + "/bands").join(
         oversized, ["band", "key"], "left_anti"
     )
-    cand = tracked_cache(
+    cand = (
         nbanded.join(oversized, ["band", "key"], "left_anti")
         .withColumnRenamed(id_col, "query_id")
         .join(kept.withColumnRenamed(idx_id, "index_id"), ["band", "key"])

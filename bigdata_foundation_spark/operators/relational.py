@@ -716,17 +716,8 @@ def ks_drift(
     integer-ratio arithmetic is bit-identical across engines, and
     rounding at compare time avoids the engine-specific
     .xx5-boundary divergence class (the r5 q9 lesson)."""
-    from bigdata_foundation_spark.operators._cache import tracked_cache
-
     base = df.filter(F.col(group_col).isNotNull() & F.col(value_col).isNotNull())
-    # counts feeds the per-group totals, the per-value totals AND the
-    # grid join — three plan references; cached (it is |distinct
-    # (group, value)| rows), the corpus really is scanned once, as the
-    # shape note below promises (r16; the uncached plan re-scanned and
-    # re-aggregated the corpus per reference).
-    counts = tracked_cache(
-        base.groupBy(group_col, value_col).agg(F.count("*").alias("_c"))
-    )
+    counts = base.groupBy(group_col, value_col).agg(F.count("*").alias("_c"))
     groups = counts.groupBy(group_col).agg(F.sum("_c").alias("_ng"))
     values = counts.groupBy(value_col).agg(F.sum("_c").alias("_nv"))
     tot = groups.agg(F.sum("_ng").alias("_n"))

@@ -1073,12 +1073,7 @@ def embedding_neardup_pairs(
         raise ValueError("pass both n_planes and bands, or neither (auto)")
 
     planes = hyperplanes(dim, n_planes, seed)
-    sig_df = tracked_cache(
-        df.select(
-            F.col(id_col).alias("_id"),
-            _as_double(F.col(vec_col)).alias("_v"),
-        )
-    )  # both sides of the bucket self-join + the verify join read it
+    sig_df = df.select(F.col(id_col).alias("_id"), _as_double(F.col(vec_col)).alias("_v"))
     pieces = sig_df.select(
         "_id",
         F.explode(band_key_structs(F.col("_v"), planes, bands)).alias("b"),

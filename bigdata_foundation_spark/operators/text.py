@@ -710,14 +710,11 @@ def pmi_collocations(
     rank column is a row_number window over the ≤k survivors only.
 
     Returns (rank, w1, w2, n_pair, pmi), rank 1-based by pmi desc."""
-    # toks feeds the unigram AND the bigram branches — cached, the
-    # corpus is scanned and tokenized ONCE (r16; was 4 scans: each
-    # count table and each corpus total re-ran the split). The totals
-    # fold from the count tables instead of re-aggregating the corpus:
-    # N_uni = Σ c_x and N_bi = Σ c_xy exactly (long sums of the same
-    # rows the counts grouped; cast after the sum, so the doubles are
-    # bit-identical to the old count(*) path).
-    toks = tracked_cache(df.select(tokens(text_col).alias("_t")))
+    # The totals fold from the count tables instead of re-aggregating
+    # the corpus: N_uni = Σ c_x and N_bi = Σ c_xy exactly (long sums of
+    # the same rows the counts grouped; cast after the sum, so the
+    # doubles are bit-identical to the old count(*) path).
+    toks = df.select(tokens(text_col).alias("_t"))
     uni = toks.select(F.explode("_t").alias("w"))
     ucnt = uni.groupBy("w").agg(F.count("*").alias("_c"))
     nu = ucnt.agg(F.sum("_c").cast("double").alias("_nu"))
@@ -788,15 +785,10 @@ def unigram_logprob_score(
     decimal repr while DuckDB rounds the binary double — the exact
     .xx5-boundary divergence class the r5 q9 fix closed; per-doc avg
     wobble is ~1e-14, far below any sane consumer threshold)."""
-    # toks feeds the count table AND the scoring probe — cached, the
-    # corpus is scanned and tokenized ONCE (r16; was two full
-    # scan+split passes).
-    toks = tracked_cache(
-        documents.select(
-            F.col(id_col),
-            F.explode(F.split(F.lower(F.col(text_col)), r"\s+")).alias("tok"),
-        ).filter(F.col("tok") != "")
-    )
+    toks = documents.select(
+        F.col(id_col),
+        F.explode(F.split(F.lower(F.col(text_col)), r"\s+")).alias("tok"),
+    ).filter(F.col("tok") != "")
     counts = toks.groupBy("tok").agg(F.count("*").alias("c"))
     scalars = counts.agg(
         F.sum("c").alias("_N"), F.count("*").alias("_V")
@@ -1011,15 +1003,7 @@ def stupid_backoff_score(
             F.col("g.w3").alias("w3"),
         )
 
-    # tbase feeds the tri/bi/uni count tables — three plan references,
-    # each of which would otherwise re-scan the train slice and re-run
-    # the split/lower tokenization (r16 audit: 14 parquet scans, 30
-    # Exchanges in the gate plan). Cached, the train corpus is scanned
-    # and tokenized ONCE (guide §4 — the regex split is the per-task
-    # cost; the scored corpus stays uncached, it is read once).
-    tbase = tracked_cache(
-        train.select(toks_arr.alias("_ts")).filter(F.size("_ts") > 0)
-    )
+    tbase = train.select(toks_arr.alias("_ts")).filter(F.size("_ts") > 0)
     # In hashed mode the count tables aggregate on the 8-byte gram
     # hash directly — gram STRINGS never enter any shuffle, train or
     # score side (the hash is computed in the explode stage's codegen).
@@ -1191,19 +1175,18 @@ def bm25_scores(
     # to compute what size(tokens) already knows per row. Same
     # values: per-id sums of per-row counts equal the exploded
     # count-by-id, and the dl >= 1 filter reproduces the
-    # zero-token-docs-absent contract.
-    # dl feeds the scalars and the score join; tf feeds the df table
-    # and the score probe — cached (doc-level and matched-term-level
-    # rows), each corpus pass runs once (r16; uncached, every
-    # reference re-scanned the corpus).
-    dl = tracked_cache(
-        documents.select(F.col(id_col), whitespace_token_count(text_col).alias("_wc"))
+    # zero-token-docs-absent contract. NULL text counts 0 tokens
+    # explicitly: under ANSI off + legacy sizeOfNull, size(NULL) is -1
+    # and would shorten the doc's dl.
+    wc = F.when(F.col(text_col).isNull(), 0).otherwise(whitespace_token_count(text_col))
+    dl = (
+        documents.select(F.col(id_col), wc.alias("_wc"))
         .groupBy(id_col)
         .agg(F.sum("_wc").alias("dl"))
         .filter(F.col("dl") >= 1)
     )
     scalars = dl.agg(F.count("*").alias("_N"), F.avg("dl").alias("_avgdl"))
-    tf = tracked_cache(
+    tf = (
         toks.filter(F.col("tok").isin(terms))
         .groupBy(id_col, "tok")
         .agg(F.count("*").alias("tf"))
@@ -1261,11 +1244,7 @@ def unimax_mixture(
     by group: allocation/epochs 6-dp rounded, ``capped`` = the group
     hit its repeat cap (epochs == max_epochs; always False for a
     zero-token group, whose epochs is pinned to 0)."""
-    # g feeds the budget total AND the water-filling frame — cached
-    # (|groups| rows), the corpus token-count aggregate runs ONCE
-    # (r16; uncached, each reference — tot, ord_, lvl, the result —
-    # re-scanned the corpus).
-    g = tracked_cache(
+    g = (
         df.groupBy(group_col)
         .agg(F.sum(whitespace_token_count(text_col)).cast("double").alias("_n"))
         .withColumn("_cap", F.lit(max_epochs) * F.col("_n"))
@@ -1330,9 +1309,7 @@ def temperature_mixture(
     temperature mixes famously lack a cap on; 0 for an empty group)."""
     if not (0.0 < alpha <= 1.0):
         raise ValueError("alpha must be in (0, 1]")
-    # pw feeds the normalizer AND the result frame — cached (|groups|
-    # rows), the corpus token-count aggregate runs once (r16).
-    pw = tracked_cache(
+    pw = (
         df.groupBy(group_col)
         .agg(F.sum(whitespace_token_count(text_col)).cast("double").alias("_n"))
         .withColumn("_p", F.pow(F.col("_n"), F.lit(float(alpha))))
@@ -1390,22 +1367,21 @@ def dsir_logratio_scores(
     dsir_logratio) with the RAW double (compare layer rounds)."""
     k = float(k_smoothing)
 
-    def _feats(df: DataFrame, keep_id: bool = False):
-        cols = [F.col(id_col)] if keep_id else []
-        out = df.select(
-            *cols,
-            F.explode(F.split(F.lower(F.col(text_col)), r"\s+")).alias("tok"),
-        ).filter(F.col("tok") != "")
+    def _feats(arrays: DataFrame):
+        out = arrays.withColumn("tok", F.explode("_ts")).drop("_ts")
         if hash_buckets is not None:
             out = out.withColumn("tok", F.pmod(F.xxhash64("tok"), F.lit(int(hash_buckets))))
         return out
 
-    # toks feeds the source LM counts AND the scoring probe — cached,
-    # the raw corpus is scanned and tokenized once (r16; same contract
-    # as unigram_logprob_score's cache).
-    toks = tracked_cache(_feats(documents, keep_id=True))
+    # base feeds the source LM counts AND the scoring probe — cached in
+    # its token-array form (one row per document, before the explode),
+    # so the raw corpus is scanned and tokenized once.
+    base = tracked_cache(documents.select(F.col(id_col), tokens(text_col).alias("_ts")))
+    toks = _feats(base)
     src = toks.groupBy("tok").agg(F.count("*").alias("c_src"))
-    tgt = _feats(target).groupBy("tok").agg(F.count("*").alias("c_tgt"))
+    tgt = _feats(target.select(tokens(text_col).alias("_ts"))).groupBy("tok").agg(
+        F.count("*").alias("c_tgt")
+    )
     # feat feeds the scalars AND the per-token probe join — cached
     # (vocab/bucket-sized), both corpora's count aggregates run once,
     # and the probe join plans against EXACT cached stats (AQE then

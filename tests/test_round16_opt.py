@@ -155,6 +155,46 @@ def test_bm25_doc_length_from_scan_side_count(spark):
     assert abs(out[4][1] - (idf(2) * norm(1, 3) + idf(1) * norm(1, 3))) < 1e-12
 
 
+def test_bm25_null_text_under_legacy_size_of_null(spark):
+    """With ANSI off and legacy sizeOfNull, size(NULL) is -1; a NULL
+    text row of a doc id must still add 0 to that doc's length, so
+    the scores equal the default-config ones."""
+    from bigdata_foundation_spark.operators.text import bm25_scores
+
+    docs = spark.createDataFrame(
+        [
+            (1, "spark window spark"),
+            (1, None),            # same id, NULL row: adds 0 to dl
+            (2, "hash stream spark"),
+            (3, None),
+            (4, "stream window"),
+        ],
+        "doc_id int, text string",
+    )
+
+    def scores():
+        return {
+            r["doc_id"]: (r["n_matched_terms"], r["bm25"])
+            for r in bm25_scores(docs, ["spark", "hash"]).collect()
+        }
+
+    want = scores()
+    assert set(want) == {1, 2}
+    keys = ("spark.sql.ansi.enabled", "spark.sql.legacy.sizeOfNull")
+    old = {k: spark.conf.get(k, None) for k in keys}
+    try:
+        for k in keys:
+            spark.conf.set(k, "false" if k.endswith("ansi.enabled") else "true")
+        got = scores()
+    finally:
+        for k, v in old.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+    assert got == want
+
+
 def test_pmi_totals_fold_equals_corpus_count(spark):
     """r16 folds N_uni/N_bi from the count tables (exact long sums);
     the PMI values must equal the closed-form corpus-count math."""
@@ -192,43 +232,51 @@ def test_local_df_rejects_wide_rows(spark):
 
 
 def test_round16_operator_caches_register_and_release(spark):
-    """r16 cached the shared subtrees of node_similarity (nbrs/deg)
-    and the LM scorers' tokenized corpora through tracked_cache: the
-    caches must register with the hygiene registry (release reclaims
-    them) and the operators must stay correct after release."""
-    from bigdata_foundation_spark.operators import text as TXm
-    from bigdata_foundation_spark.operators._cache import release_operator_caches
+    """Operator caches are held by the registry until
+    release_operator_caches() unpersists them: after the operators
+    run, the release alone (no clearCache) brings the session's
+    persistent-RDD count back to its value from before they ran, and
+    a re-run recomputes identical values."""
     from bigdata_foundation_spark.graph.etl import node_similarity
+    from bigdata_foundation_spark.operators import release_operator_caches
+    from bigdata_foundation_spark.operators import text as TXm
 
-    release_operator_caches()
     docs = spark.createDataFrame(
-        [(1, "a b a b c"), (2, "a b a b c"), (3, "x y z w q")],
+        [(1, "a b a b c"), (2, "a b a b c"), (3, "x y z w q"), (4, "b c x")],
         "doc_id int, text string",
     )
-    lm1 = {
-        r["doc_id"]: round(r["nll_per_token"], 9)
-        for r in TXm.bigram_logprob_score(docs).collect()
-    }
+    target = docs.filter(F.col("doc_id") >= 3)
     roads = spark.createDataFrame(
         [("a", "b", 1.0), ("a", "c", 1.0), ("d", "b", 1.0), ("d", "c", 1.0)],
         "src string, dst string, cost double",
     )
-    ns1 = [tuple(r) for r in node_similarity(roads, k=10).collect()]
-    assert ns1 and ns1[0][:2] == ("a", "d") and ns1[0][3] == 1.0
-    # the internal frames are operator-local (the WeakSet registry
-    # only releases still-referenced caches); the blunt-hammer clear
-    # is the bench's own regime — values must be identical after it
+
+    def rows(df):
+        return sorted(
+            tuple(round(v, 9) if isinstance(v, float) else v for v in r) for r in df.collect()
+        )
+
+    def run_all():
+        return [
+            rows(df)
+            for df in (
+                TXm.bm25_scores(docs, ["a", "x"]),
+                TXm.dsir_logratio_scores(docs, target),
+                TXm.bigram_logprob_score(docs),
+                node_similarity(roads, k=10),
+            )
+        ]
+
+    jsc = spark.sparkContext._jsc.sc()
+    release_operator_caches()  # caches earlier tests left registered
+    before = jsc.getPersistentRDDs().size()
+    first = run_all()
+    assert first[3] and first[3][0][:2] == ("a", "d") and first[3][0][3] == 1.0
     release_operator_caches()
-    spark.catalog.clearCache()
-    # rerun post-clear: recompute, identical values
-    lm2 = {
-        r["doc_id"]: round(r["nll_per_token"], 9)
-        for r in TXm.bigram_logprob_score(docs).collect()
-    }
-    assert lm1 == lm2
-    ns2 = [tuple(r) for r in node_similarity(roads, k=10).collect()]
-    assert ns1 == ns2
+    assert jsc.getPersistentRDDs().size() == before
+    assert run_all() == first
     release_operator_caches()
+    assert jsc.getPersistentRDDs().size() == before
 
 
 def test_local_df_routes_dict_rows_to_classic_path(spark):
