@@ -1,13 +1,14 @@
-"""Exact in-memory path kernels (no Spark imports — runs inside tasks).
+"""Exact in-memory path kernels (no Spark imports).
 
-This module is the compute core that executes *inside executor tasks*
-over a broadcast graph projection (see ``paths.py``). It mirrors the
-reference's execution model: GDS materializes an in-memory projection
-and runs the algorithm single-machine even in cluster mode
-(neo4j-code.txt:3–15; SURVEY.md §4.2). Our scale story is different —
-the projection is broadcast once and *queries* are distributed across
-executors (one task per source batch for SSSP/APSP waves) — but the
-per-query kernel is the same binary-heap Dijkstra family.
+This module is the compute core behind the kernel tiers of
+``paths.py``. It mirrors the reference's execution model: GDS
+materializes an in-memory projection and runs the algorithm
+single-machine even in cluster mode (neo4j-code.txt:3–15; SURVEY.md
+§4.2). Point queries (Dijkstra, A*, Yen) call it in the driver against
+the driver-held projection; multi-source work (SSSP/APSP waves, the
+centralities) calls it inside executor tasks over the broadcast
+projection, one task per source batch. The per-query kernel is the
+same binary-heap Dijkstra family either way.
 
 Node ids are dictionary-encoded to dense ints and adjacency is stored
 CSR-style (flat indptr / neighbor / weight arrays) at projection
@@ -50,8 +51,9 @@ class Projection:
     pickle — the form a 50M-edge projection actually fits in. The
     pure-Python heap kernels index Python lists ~3× faster than numpy
     scalars, so compute sites call :meth:`hot` for lazily-converted,
-    per-process-cached list views (~90 B/edge, paid only where the
-    kernel runs, never shipped).
+    per-process-cached list views (~90 B/edge, never shipped). They are
+    paid once in the driver, where the point queries run, and once in
+    each executor Python worker that runs a broadcast-tier task.
     """
 
     __slots__ = (
@@ -616,7 +618,10 @@ def yens_k(proj: Projection, source: str, target: str, k: int) -> list[tuple[lis
     a_paths: list[tuple[list[int], list[float], list[int]]] = [r]
     candidates: list[tuple[float, list[int], list[float], list[int]]] = []
     seen: set[tuple[int, ...]] = {tuple(r[2])}
-    h = reverse_dist_to(proj, t)  # landmark heuristic for spur probes
+    # Landmark heuristic for the spur probes: the exact unmasked
+    # distance-to-target. Masking only removes edges, so it stays
+    # admissible and consistent, and every probe is goal-directed.
+    h = reverse_dist_to(proj, t)
 
     while len(a_paths) < k:
         prev_nodes, prev_costs, prev_eidxs = a_paths[-1]
@@ -704,26 +709,6 @@ def per_source_longest(
             )
         out.extend((src, t, -negd) for negd, t in best)
     return out
-
-
-def spur_search(
-    proj: Projection,
-    spur: int,
-    t: int,
-    masked_edges: frozenset[int] | set[int],
-    masked_nodes: frozenset[int] | set[int],
-    h_array: Sequence[float] | None = None,
-):
-    """One Yen spur-path probe (int ids): masked point-to-point search.
-    Returns (nodes, hop_costs, edge_idxs) or None. Independent per
-    spur — the distributed Yen in paths.py fans these out, passing the
-    reverse-distance landmark heuristic so each probe is goal-directed
-    (masking only removes edges, so the unmasked distance-to-target
-    stays admissible and consistent)."""
-    _d, par = _dijkstra_idx(
-        proj, spur, t, excluded_edges=masked_edges, excluded_nodes=masked_nodes, h_array=h_array
-    )
-    return _reconstruct_idx(par, spur, t)
 
 
 def _reverse_csr(

@@ -4,12 +4,15 @@ Strategy dispatch mirrors how a 100 TB deployment would actually run
 these workloads:
 
 * ``broadcast`` — the graph projection (min ~16 B/edge) fits in one
-  executor's memory, so it is collected once, broadcast to every
-  executor, and each *query* (a source, or a wave of sources) runs as
-  one task with the exact heap kernel (`kernel.py`). This is the same
-  execution model as the reference's GDS (single-JVM in-memory
-  projection, SURVEY.md §4.2) — except our queries fan out across the
-  cluster: APSP distributes sources over all executors.
+  process's memory, so it is collected once to the driver. Point
+  queries (Dijkstra, bidirectional Dijkstra, A*, Yen) then run the
+  exact heap kernel (`kernel.py`) right there, in the calling process,
+  with no Spark job: the reference's GDS model, where a query runs
+  inside one JVM on the member that received it against the in-memory
+  projection (SURVEY.md §3.2 step 3, §4.2). Queries whose output is
+  |V|-sized (SSSP) or that are genuinely multi-source (APSP, the
+  centralities) broadcast the projection to every executor instead and
+  fan their sources out as tasks.
 * ``bsp`` — the graph is too big to broadcast: distributed
   whole-frontier relaxation (`bsp.py`).
 * ``auto`` — picks by edge count (`BROADCAST_EDGE_LIMIT`, default 50 M
@@ -41,10 +44,12 @@ from bigdata_foundation_spark.graph import kernel as _k
 # (int32 neighbor + float64 weight + int32 edge-id) plus ~60 B/node
 # for the string id list/index — 25M edges ≈ 400 MB arrays + id
 # overhead, comfortably inside a 4 GB driver. The list-view kernel
-# working set (~90 B/edge, Projection.hot()) is paid per executor
-# process at compute time: ≈ 2.3 GB at the limit, the realistic
-# per-worker ceiling. Past this, paths.py dispatches to the BSP
-# kernels instead.
+# working set (~90 B/edge, Projection.hot()) is paid once in the
+# driver's Python process, where the point queries run (≈ 2.3 GB at
+# the limit, on top of the numpy CSR), and again in each executor
+# Python worker that serves a broadcast SSSP/APSP/centrality task —
+# the realistic per-process ceiling. Past this, paths.py dispatches to
+# the BSP kernels instead.
 BROADCAST_EDGE_LIMIT = 25_000_000
 
 # Ceiling of the r12 file-spilled kernel tier (apsp_topk strategy
@@ -131,6 +136,15 @@ def _resolve_strategy(roads: DataFrame, strategy: str, edge_count: int | None = 
     if edge_count is None:
         edge_count = _resolve_edge_count(roads)
     return "broadcast" if edge_count <= BROADCAST_EDGE_LIMIT else "bsp"
+
+
+def _check_point_strategy(strategy: str) -> None:
+    """Point queries (Dijkstra, A*, Yen) have no file tier. Validated
+    before any dispatch, so a passed ``projection`` cannot hide a typo."""
+    if strategy not in ("auto", "broadcast", "bsp"):
+        raise ValueError(
+            f"unknown strategy {strategy!r}: point queries support 'auto', 'broadcast' or 'bsp'"
+        )
 
 
 def build_projection(roads: DataFrame, nodes: DataFrame | None = None) -> _k.Projection:
@@ -254,21 +268,9 @@ def _require_file_tier(spark: SparkSession, spill_dir: str | None) -> None:
         )
 
 
-def _run_on_executor(spark: SparkSession, proj: _k.Projection, fn):
-    """Run ``fn(proj) -> list[Row-tuples]`` inside a single executor
-    task against the broadcast projection (keeps the compute off the
-    driver; result streams back like a YIELD)."""
-    sc = spark.sparkContext
-    proj_b = _get_broadcast(spark, proj)
-
-    def _task(_it):
-        return iter(fn(proj_b.value))
-
-    return sc.parallelize([0], 1).mapPartitions(_task).collect()
-
-
 def _run_on_executor_df(spark: SparkSession, proj: _k.Projection, fn, schema) -> DataFrame:
-    """Like ``_run_on_executor`` but the rows become a DataFrame
+    """Run ``fn(proj) -> list[Row-tuples]`` inside a single executor
+    task against the broadcast projection; the rows become a DataFrame
     WITHOUT ever materializing on the driver — for per-node result
     sets (SSSP streams |V| rows; at a 10M-node broadcast graph that is
     GBs the driver must not hold)."""
@@ -380,7 +382,11 @@ def dijkstra(
     coordinates exist — its goal-direction beats both). The two-ended
     heap search is a broadcast-kernel algorithm, so the flag FORCES
     the broadcast strategy — it is consulted before the BSP dispatch
-    rather than silently ignored past the edge limit."""
+    rather than silently ignored past the edge limit.
+
+    On the broadcast tier the kernel runs in the calling process
+    against the driver-held projection: no Spark job."""
+    _check_point_strategy(strategy)
     if (
         projection is None
         and not bidirectional
@@ -389,15 +395,11 @@ def dijkstra(
         res = _bsp.bsp_sssp(spark, roads, source, target=target)
         return _bsp_path_stream(spark, res, target)
     proj = projection or build_projection(roads)
-
-    def _task(p: _k.Projection):
-        if bidirectional:
-            r = _k.bidirectional_shortest_path(p, source, target)
-        else:
-            r = _k.shortest_path(p, source, target)
-        return _cumulative_stream(*r) if r else []
-
-    return local_df(spark, _run_on_executor(spark, proj, _task), _PATH_STREAM_SCHEMA)
+    if bidirectional:
+        r = _k.bidirectional_shortest_path(proj, source, target)
+    else:
+        r = _k.shortest_path(proj, source, target)
+    return local_df(spark, _cumulative_stream(*r) if r else [], _PATH_STREAM_SCHEMA)
 
 
 def astar(
@@ -415,17 +417,15 @@ def astar(
     (XCoord, YCoord) — returns *optimal* costs (equal to Dijkstra),
     deliberately deviating from the reference's inadmissible
     meters-into-haversine heuristic and its suboptimal 54140.0 result
-    (MAIN:480–487; SURVEY.md §2.2 G4)."""
+    (MAIN:480–487; SURVEY.md §2.2 G4). The broadcast tier runs in the
+    calling process, like :func:`dijkstra`."""
+    _check_point_strategy(strategy)
     if projection is None and _resolve_strategy(roads, strategy) == "bsp":
         res = _bsp.bsp_sssp(spark, roads, source, target=target, nodes=nodes, use_heuristic=True)
         return _bsp_path_stream(spark, res, target)
     proj = projection or build_projection(roads, nodes)
-
-    def _task(p: _k.Projection):
-        r = _k.shortest_path(p, source, target, use_heuristic=True)
-        return _cumulative_stream(*r) if r else []
-
-    return local_df(spark, _run_on_executor(spark, proj, _task), _PATH_STREAM_SCHEMA)
+    r = _k.shortest_path(proj, source, target, use_heuristic=True)
+    return local_df(spark, _cumulative_stream(*r) if r else [], _PATH_STREAM_SCHEMA)
 
 
 def _bsp_path_stream(spark: SparkSession, state: DataFrame, target: str) -> DataFrame:
@@ -479,16 +479,17 @@ def yens_k(
     equals Dijkstra's (the reference's own consistency oracle,
     MAIN:703).
 
-    Yen's is inherently sequential in k (SURVEY.md §3.3), but the
-    ~|path| spur probes *within* one iteration are independent masked
-    point-to-point searches — so each iteration fans them out across
-    all executors over the broadcast projection and merges candidates
-    on the driver. Wall-clock per iteration ≈ the slowest single spur
-    search instead of their sum.
+    Yen's is inherently sequential in k (SURVEY.md §3.3). Its ~|path|
+    spur probes per iteration are independent masked point-to-point
+    searches, each goal-directed by one reverse-distance landmark, so
+    they take milliseconds; they run back to back in the calling
+    process (``kernel.yens_k``) against the driver-held projection,
+    with no Spark job. Fanning them out as executor tasks cost more in
+    scheduling than it saved, up to a 250k-node grid (KERNEL_BENCH.md).
 
     ``strategy`` semantics: below ``BROADCAST_EDGE_LIMIT`` Yen runs on
-    the broadcast projection (each iteration's spur probes fan out as
-    executor tasks). Past the limit, ``auto`` (or explicit ``'bsp'``)
+    the driver-held projection. ``k < 1`` raises ``ValueError`` on
+    every tier. Past the limit, ``auto`` (or explicit ``'bsp'``)
     dispatches to ``bsp.bsp_yens_k``: each iteration's ~|path| masked
     probes share ONE probe-keyed BSP relaxation (wave-bounded state,
     no driver-side per-node structures), goal-directed by a single
@@ -499,10 +500,9 @@ def yens_k(
     see them select/order those alternatives differently); latency
     is ~(1 + k·ceil(|path|/wave)) BSP runs, so broadcast is always
     preferred when the projection fits."""
-    if strategy not in ("auto", "broadcast", "bsp"):
-        raise ValueError(
-            "yens_k supports strategy 'auto', 'broadcast' or 'bsp' (see docstring)"
-        )
+    _check_point_strategy(strategy)
+    if k < 1:
+        raise ValueError(f"yens_k needs k >= 1, got {k!r}")
     if projection is None and _resolve_strategy(roads, strategy) == "bsp":
         paths = _bsp.bsp_yens_k(spark, roads, source, target, k=k)
         rows = [
@@ -511,90 +511,9 @@ def yens_k(
         ]
         return local_df(spark, rows, _YENS_SCHEMA)
     proj = projection or build_projection(roads)
-    s, t = proj.index.get(source), proj.index.get(target)
-    if s is None or t is None:
-        return local_df(spark, [], _YENS_SCHEMA)
-
-    sc = spark.sparkContext
-    proj_b = _get_broadcast(spark, proj)
-
-    def _first(p: _k.Projection):
-        dist, parent = _k._dijkstra_idx(p, s, t)
-        r = _k._reconstruct_idx(parent, s, t)
-        if r is None:
-            return []
-        # Reverse-distance landmark heuristic, computed once next to
-        # the first search: every spur probe becomes goal-directed A*
-        # (exact h ⇒ probes only walk near-optimal corridors).
-        return [(r, _k.reverse_dist_to(p, t))]
-
-    first = _run_on_executor(spark, proj, _first)
-    if not first:
-        return local_df(spark, [], _YENS_SCHEMA)
-    first, h_to_t = [first[0][0]], first[0][1]
-    h_b = sc.broadcast(h_to_t)
-
-    a_paths: list[tuple[list[int], list[float], list[int]]] = [tuple(first[0])]
-    seen: set[tuple[int, ...]] = {tuple(first[0][2])}
-    import heapq as _hq
-
-    candidates: list[tuple[float, list[int], list[float], list[int]]] = []
-    parallelism = max(sc.defaultParallelism, 2)
-
-    while len(a_paths) < k:
-        prev_nodes, prev_costs, prev_eidxs = a_paths[-1]
-        tasks = []
-        for i in range(len(prev_nodes) - 1):
-            spur = prev_nodes[i]
-            root_nodes = prev_nodes[: i + 1]
-            masked_edges = frozenset(
-                p_eidxs[i]
-                for p_nodes, _pc, p_eidxs in a_paths
-                if p_nodes[: i + 1] == root_nodes and len(p_eidxs) > i
-            )
-            tasks.append(
-                (
-                    list(root_nodes),
-                    list(prev_costs[:i]),
-                    list(prev_eidxs[:i]),
-                    spur,
-                    masked_edges,
-                    frozenset(root_nodes[:-1]),
-                )
-            )
-
-        def _probe(batch):
-            p = proj_b.value
-            h = h_b.value
-            for root_nodes, root_costs, root_eidxs, spur, masked_e, masked_n in batch:
-                sp = _k.spur_search(p, spur, t, masked_e, masked_n, h_array=h)
-                if sp is not None:
-                    yield (
-                        root_nodes[:-1] + sp[0],
-                        root_costs + sp[1],
-                        root_eidxs + sp[2],
-                    )
-
-        # Post-landmark, each probe is ~ms-scale: fewer, larger slices
-        # cut per-task scheduling overhead (probes are uniform enough
-        # that slice skew doesn't bite).
-        n_slices = min(len(tasks), parallelism) or 1
-        results = sc.parallelize(tasks, n_slices).mapPartitions(_probe).collect()
-        for nodes_i, costs_i, eidxs_i in results:
-            key = tuple(eidxs_i)
-            if key in seen:
-                continue
-            seen.add(key)
-            _hq.heappush(candidates, (float(sum(costs_i)), nodes_i, costs_i, eidxs_i))
-        if not candidates:
-            break
-        _total, nodes_i, costs_i, eidxs_i = _hq.heappop(candidates)
-        a_paths.append((nodes_i, costs_i, eidxs_i))
-
-    ids = proj.ids
     rows = [
-        (i, [ids[n] for n in nodes_i], hop_costs, float(sum(hop_costs)))
-        for i, (nodes_i, hop_costs, _e) in enumerate(a_paths)
+        (i, nodes_i, hop_costs, float(sum(hop_costs)))
+        for i, (nodes_i, hop_costs) in enumerate(_k.yens_k(proj, source, target, k))
     ]
     return local_df(spark, rows, _YENS_SCHEMA)
 

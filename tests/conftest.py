@@ -21,7 +21,10 @@ def spark():
 
 @pytest.fixture(scope="session")
 def csv1():
-    return f"{REFERENCE_DIR}/Shenzhen_Edgelist_1.csv"
+    path = f"{REFERENCE_DIR}/Shenzhen_Edgelist_1.csv"
+    if not os.path.exists(path):
+        pytest.skip(f"reference CSV missing: {path}")
+    return path
 
 
 @pytest.fixture(scope="session")

@@ -619,6 +619,156 @@ def test_projection_rejects_negative_costs(spark):
         build_projection(roads)
 
 
+def _seeded_grid(spark, side, seed=5):
+    """A side×side two-way grid with integer costs from a narrow range
+    (many equal-cost alternatives) and a parallel copy of every
+    seventh link (half at the same cost, half dearer). Costs are at
+    least the unit grid spacing, so the planar A* heuristic on the
+    grid coordinates stays admissible. Returns (roads, nodes, edges)."""
+    import random
+
+    rng = random.Random(seed)
+    edges = []
+
+    def link(a, b):
+        c = float(rng.randint(1, 3))
+        edges.append((a, b, f"r{len(edges)}", c))
+        if len(edges) % 7 == 0:
+            edges.append((a, b, f"r{len(edges)}", c + rng.choice((0.0, 1.0))))
+
+    for x in range(side):
+        for y in range(side):
+            for nx_, ny_ in ((x + 1, y), (x, y + 1)):
+                if nx_ < side and ny_ < side:
+                    link(f"{x}_{y}", f"{nx_}_{ny_}")
+                    link(f"{nx_}_{ny_}", f"{x}_{y}")
+    roads = spark.createDataFrame(edges, "src string, dst string, road_id string, cost double")
+    nodes = spark.createDataFrame(
+        [(f"{x}_{y}", float(x), float(y)) for x in range(side) for y in range(side)],
+        "NodeId string, XCoord double, YCoord double",
+    )
+    return roads, nodes, edges
+
+
+def test_point_queries_start_no_spark_job(spark):
+    """Broadcast-tier point queries run the kernel in the calling
+    process against the driver-held projection: dijkstra (both
+    directions), astar and yens_k, each called and collected, start
+    zero Spark jobs, and their costs equal networkx Dijkstra."""
+    import uuid
+
+    import networkx as nx
+
+    side = 14
+    roads, nodes, edges = _seeded_grid(spark, side)
+    proj = build_projection(roads, nodes)
+    G = nx.DiGraph()
+    for s, d, _rid, c in edges:
+        if not G.has_edge(s, d) or c < G[s][d]["w"]:
+            G.add_edge(s, d, w=c)
+
+    pairs = [("0_0", f"{side - 1}_{side - 1}"), ("3_9", "12_1"), ("13_0", "0_13"), ("6_6", "6_7")]
+    sc = spark.sparkContext
+    group = f"point-queries-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "point queries in the driver", False)
+    try:
+        got = []
+        for s, t in pairs:
+            got.append(
+                (
+                    s,
+                    t,
+                    dijkstra(spark, roads, s, t, projection=proj).collect(),
+                    dijkstra(spark, roads, s, t, projection=proj, bidirectional=True).collect(),
+                    astar(spark, roads, nodes, s, t, projection=proj).collect(),
+                    yens_k(spark, roads, s, t, k=3, projection=proj).collect(),
+                )
+            )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+    for s, t, fwd, bid, ast, yen in got:
+        want = nx.dijkstra_path_length(G, s, t, weight="w")
+        for rows in (fwd, bid, ast):
+            assert rows[0]["NodeId"] == s and rows[-1]["NodeId"] == t
+            assert rows[-1]["cost"] == pytest.approx(want, abs=1e-9)
+        totals = [r["totalCost"] for r in yen]
+        assert len(yen) == 3 and totals == sorted(totals)
+        assert totals[0] == pytest.approx(want, abs=1e-9)
+        assert yen[0]["nodeIds"] == [r["NodeId"] for r in fwd]
+
+
+def test_yens_k_equals_brute_force_on_multigraph(spark):
+    """Yen's totalCost list equals the k cheapest loopless edge-paths
+    of a small multigraph, enumerated by brute force (parallel edges
+    are distinct paths), and path #0 is the Dijkstra path."""
+    import networkx as nx
+
+    edges = [
+        ("a", "b", "r1", 1.0),
+        ("a", "b", "r2", 1.0),  # parallel, same cost
+        ("a", "b", "r3", 2.0),  # parallel, dearer
+        ("b", "c", "r4", 1.0),
+        ("a", "c", "r5", 2.0),
+        ("c", "d", "r6", 1.0),
+        ("c", "d", "r7", 2.0),
+        ("b", "d", "r8", 3.0),
+        ("a", "d", "r9", 4.0),
+        ("d", "b", "r10", 1.0),
+        ("c", "a", "r11", 1.0),
+    ]
+    roads = spark.createDataFrame(edges, "src string, dst string, road_id string, cost double")
+    proj = build_projection(roads)
+    M = nx.MultiDiGraph()
+    for s, d, rid, c in edges:
+        M.add_edge(s, d, key=rid, w=c)
+    brute = sorted(
+        sum(M[u][v][key]["w"] for u, v, key in p) for p in nx.all_simple_edge_paths(M, "a", "d")
+    )
+    k = 6
+    assert len(brute) > k
+    yen = yens_k(spark, roads, "a", "d", k=k, projection=proj).collect()
+    assert [r["totalCost"] for r in yen] == pytest.approx(brute[:k], abs=1e-9)
+    for r in yen:
+        assert len(set(r["nodeIds"])) == len(r["nodeIds"])
+        assert sum(r["costs"]) == pytest.approx(r["totalCost"], abs=1e-9)
+    path0 = dijkstra(spark, roads, "a", "d", projection=proj).collect()
+    assert yen[0]["nodeIds"] == [r["NodeId"] for r in path0]
+
+
+@pytest.mark.parametrize("strategy", ["broadcast", "bsp"])
+@pytest.mark.parametrize("k", [0, -1])
+def test_yens_k_rejects_k_below_one(spark, strategy, k):
+    roads = spark.createDataFrame(
+        [("a", "b", 1.0), ("b", "c", 1.0), ("a", "c", 5.0)],
+        "src string, dst string, cost double",
+    )
+    with pytest.raises(ValueError, match="k >= 1"):
+        yens_k(spark, roads, "a", "c", k=k, strategy=strategy)
+
+
+@pytest.mark.parametrize("strategy", ["bogus", "file"])
+def test_point_queries_validate_strategy(spark, strategy):
+    """dijkstra and astar accept only 'auto', 'broadcast' and 'bsp',
+    with or without a projection: a passed projection used to skip the
+    check and silently run the broadcast kernel."""
+    roads = spark.createDataFrame(
+        [("a", "b", 1.0), ("b", "c", 1.0)], "src string, dst string, cost double"
+    )
+    nodes = spark.createDataFrame(
+        [("a", 0.0, 0.0), ("b", 1.0, 0.0), ("c", 2.0, 0.0)],
+        "NodeId string, XCoord double, YCoord double",
+    )
+    proj = build_projection(roads, nodes)
+    for projection in (None, proj):
+        with pytest.raises(ValueError, match="unknown strategy"):
+            dijkstra(spark, roads, "a", "c", strategy=strategy, projection=projection)
+        with pytest.raises(ValueError, match="unknown strategy"):
+            astar(spark, roads, nodes, "a", "c", strategy=strategy, projection=projection)
+
+
 def test_bidirectional_dijkstra_equivalence(spark, graph1):
     """Bidirectional Dijkstra (Pohl 1971): exact same cost as the
     single-sided kernel on the CSV1 golden pair and on random pairs;
