@@ -225,8 +225,9 @@ def bsp_sssp(
     in-memory probe decisively (measured 521 → 1688 s on the 520×520
     grid, KERNEL_BENCH §r9 — which is why the default is 0/off).
     The beyond-cache side of the crossover is now MEASURED too
-    (r10, tools/bsp_prune_ab_r10.py — the r9 verdict's "validate or
-    retire" ask): with the edge projection DISK_ONLY (what
+    (r10, KERNEL_BENCH §r10, where the result of the since-removed
+    A/B script is recorded — the r9 verdict's "validate or retire"
+    ask): with the edge projection DISK_ONLY (what
     MEMORY_AND_DISK degrades to past memory scale) on a 5M-edge table
     whose wavefront touches a 3.6k-node lattice, the pruned probe wins
     0.57× (95.5 → 54.5 s over 119 supersteps, bit-equal) — the full

@@ -29,8 +29,18 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from bigdata_foundation_spark._local import local_df
-
+from bigdata_foundation_spark.graph import kernel as _k
+from bigdata_foundation_spark.graph import paths as _p
 from bigdata_foundation_spark.io import EDGELIST_RAW_SCHEMA, read_csv
+
+# Output schemas shared by a kernel tier and its superstep twin (or by
+# two analytics).
+_RANK_DDL = "NodeId string NOT NULL, rank double NOT NULL"
+_COMMUNITY_DDL = "NodeId string NOT NULL, community string NOT NULL"
+_SCC_DDL = "NodeId string NOT NULL, scc_id string NOT NULL"
+_MSF_DDL = "src string NOT NULL, dst string NOT NULL, cost double NOT NULL"
+_HYPERBALL_DDL = "t int NOT NULL, nf_est double NOT NULL"
+_TRUSS_DDL = "src string NOT NULL, dst string NOT NULL, truss int NOT NULL"
 
 
 def read_edgelist(spark: SparkSession, path: str) -> DataFrame:
@@ -98,20 +108,19 @@ def build_edges(edgelist: DataFrame, nodes: DataFrame) -> DataFrame:
 def load_graph(
     spark: SparkSession,
     path: str,
-    cache: bool = True,
     bucketed: bool = False,
     bucket_table: str = "graph_roads_bucketed",
     n_buckets: int = 32,
 ) -> tuple[DataFrame, DataFrame]:
-    """End-to-end ingest: CSV path → (nodes, roads).
+    """End-to-end ingest: CSV path → cached (nodes, roads).
 
-    ``cache=True`` mirrors the reference's in-memory graph projection
+    The cached tables mirror the reference's in-memory graph projection
     (``nodeProjection``/``relationshipProjection``, neo4j-code.txt:3–15)
     — the algorithms iterate over these tables many times. The import
-    is EAGER in that mode (the reference's import is too): the raw
-    edgelist is cached for the duration of the build so the CSV is
-    scanned once instead of once per derived table, both tables are
-    materialized, and the edgelist scratch cache is released.
+    is EAGER (the reference's import is too): the raw edgelist is
+    cached for the duration of the build so the CSV is scanned once
+    instead of once per derived table, both tables are materialized,
+    and the edgelist scratch cache is released.
 
     ``bucketed=True`` additionally writes the roads table BUCKETED BY
     ``src`` (``io.write_bucketed``) and returns the bucketed catalog
@@ -124,12 +133,7 @@ def load_graph(
     a 100 TB deployment wants for an edge table queried repeatedly
     (plan pinned by tests/test_io.py::test_bsp_superstep_bucketed_edges_no_shuffle).
     """
-    edgelist = read_edgelist(spark, path)
-    if not cache and not bucketed:
-        nodes = build_nodes(edgelist)
-        roads = build_edges(edgelist, nodes)
-        return nodes, roads
-    edgelist = edgelist.cache()
+    edgelist = read_edgelist(spark, path).cache()
     try:
         nodes = build_nodes(edgelist).cache()
         roads = build_edges(edgelist, nodes).cache()
@@ -183,34 +187,6 @@ def degree_distribution(roads: DataFrame) -> DataFrame:
     )
 
 
-def _kernel_tier(roads: DataFrame, strategy: str, projection) -> bool:
-    """Tier dispatch shared by the analytics dispatchers (pagerank,
-    LPA, WCC/SCC, k-core, PPR, eigenvector): True → broadcast numpy
-    kernel over the CSR projection; False → distributed superstep
-    (BSP) tier.
-
-    An EXPLICIT ``strategy="bsp"`` always wins (r6 advice): a cached
-    projection is a kernel-tier fast path, and letting it silently
-    override a caller's superstep request meant a benchmark could
-    believe it measured the BSP tier while the kernel ran. We warn
-    that the projection goes unused and honor the request. Otherwise
-    a non-None projection short-circuits auto dispatch to the kernel
-    tier — the caller already paid the CSR build."""
-    if strategy == "bsp":
-        if projection is not None:
-            import warnings
-
-            warnings.warn(
-                "strategy='bsp' runs the distributed superstep tier; the "
-                "passed projection is unused there",
-                stacklevel=3,
-            )
-        return False
-    from bigdata_foundation_spark.graph import paths as _p
-
-    return projection is not None or _p._resolve_strategy(roads, strategy) != "bsp"
-
-
 def k_hop_nodes(
     spark: SparkSession, roads: DataFrame, source: str, k: int
 ) -> DataFrame:
@@ -255,7 +231,7 @@ def connected_components(
     (NodeId, component_id); every edge endpoint is labelled (isolated
     nodes cannot exist in the edge table by construction).
 
-    Strategy dispatch — the same two-tier shape as ``paths.py``:
+    Tiers (``paths._tier``):
 
     * ``broadcast`` (auto below ``paths.BROADCAST_EDGE_LIMIT``): one
       executor task runs the vectorized min-hook + pointer-jumping
@@ -270,23 +246,11 @@ def connected_components(
 
     Both tiers produce the identical min-STRING-label contract
     (equivalence pinned by tests + the kernel-bench assert)."""
-    from bigdata_foundation_spark.graph import paths as _p
-
-    if not _kernel_tier(roads, strategy, projection):
+    if _p._tier(roads, strategy, projection, _p._TWO_TIERS) == "bsp":
         return _connected_components_superstep(roads)
-    from pyspark.sql import types as T
-
-    from bigdata_foundation_spark.graph import kernel as _k
-
-    spark = roads.sparkSession
-    proj = projection or _p.build_projection(roads)
-    schema = T.StructType(
-        [
-            T.StructField("NodeId", T.StringType(), False),
-            T.StructField("component_id", T.StringType(), False),
-        ]
+    return _p._run_kernel(
+        roads, projection, _k.wcc_kernel, "NodeId string NOT NULL, component_id string NOT NULL"
     )
-    return _p._run_on_executor_df(spark, proj, _k.wcc_kernel, schema)
 
 
 def _connected_components_superstep(roads: DataFrame) -> DataFrame:
@@ -342,7 +306,7 @@ def pagerank(
     ``iters`` power iterations, dangling mass redistributed uniformly
     (the classic formulation).
 
-    Strategy dispatch (the ``paths.py`` two-tier shape): ``broadcast``
+    Tiers (``paths._tier``): ``broadcast``
     (auto below ``paths.BROADCAST_EDGE_LIMIT``) runs
     ``kernel.pagerank_kernel`` — the identical power-iteration math,
     one gather + one bincount scatter-add per iteration — as a single
@@ -362,22 +326,9 @@ def pagerank(
     wobbles ~1e-13 per iteration, far below the rounding quantum, so
     results are reproducible and replayable in pure Python
     (tools/gen_pipeline_goldens.py pagerank replay)."""
-    from bigdata_foundation_spark.graph import paths as _p
-
-    if _kernel_tier(roads, strategy, projection):
-        from pyspark.sql import types as T
-
-        from bigdata_foundation_spark.graph import kernel as _k
-
-        proj = projection or _p.build_projection(roads)
-        schema = T.StructType(
-            [
-                T.StructField("NodeId", T.StringType(), False),
-                T.StructField("rank", T.DoubleType(), False),
-            ]
-        )
-        raw = _p._run_on_executor_df(
-            spark, proj, lambda p: _k.pagerank_kernel(p, damping, iters), schema
+    if _p._tier(roads, strategy, projection, _p._TWO_TIERS) == "broadcast":
+        raw = _p._run_kernel(
+            roads, projection, lambda p: _k.pagerank_kernel(p, damping, iters), _RANK_DDL
         )
         return raw.select("NodeId", F.round(F.col("rank"), 6).alias("rank"))
     nodes = roads.select(F.col("src").alias("id")).union(
@@ -437,7 +388,7 @@ def label_propagation(
     PageRank there is no float contract at all, so results are exactly
     reproducible and exactly replayable.
 
-    Strategy dispatch (the ``paths.py`` two-tier shape): ``broadcast``
+    Tiers (``paths._tier``): ``broadcast``
     (auto below ``paths.BROADCAST_EDGE_LIMIT``) runs
     ``kernel.lpa_kernel`` — the identical vote/tie-break contract,
     vectorized as one np.unique count + lexsort argmax per round — as
@@ -447,22 +398,9 @@ def label_propagation(
     argmax — all shuffles keyed on node id; ``localCheckpoint``
     truncates the iterated lineage. All-integer votes, so the tiers
     are bit-identical. Returns (NodeId, community)."""
-    from bigdata_foundation_spark.graph import paths as _p
-
-    if _kernel_tier(roads, strategy, projection):
-        from pyspark.sql import types as T
-
-        from bigdata_foundation_spark.graph import kernel as _k
-
-        proj = projection or _p.build_projection(roads)
-        schema = T.StructType(
-            [
-                T.StructField("NodeId", T.StringType(), False),
-                T.StructField("community", T.StringType(), False),
-            ]
-        )
-        return _p._run_on_executor_df(
-            spark, proj, lambda p: _k.lpa_kernel(p, iters), schema
+    if _p._tier(roads, strategy, projection, _p._TWO_TIERS) == "broadcast":
+        return _p._run_kernel(
+            roads, projection, lambda p: _k.lpa_kernel(p, iters), _COMMUNITY_DDL
         )
     und = roads.select(F.col("src").alias("a"), F.col("dst").alias("b"))
     und = und.union(und.select(F.col("b").alias("a"), F.col("a").alias("b"))).localCheckpoint()
@@ -500,7 +438,7 @@ def strongly_connected_components(
     :func:`connected_components`'s min-label contract. Returns
     (NodeId, scc_id).
 
-    Strategy dispatch (the two-tier shape): ``broadcast`` (auto below
+    Tiers (``paths._tier``): ``broadcast`` (auto below
     ``paths.BROADCAST_EDGE_LIMIT``) runs iterative Tarjan
     (``kernel.scc_kernel``) as one executor task over the broadcast
     CSR — SCC is a depth-first property, so the sequential kernel IS
@@ -515,23 +453,9 @@ def strongly_connected_components(
     diameter-bound, the same honest floor as BSP SSSP
     (KERNEL_BENCH.md §BSP); the coloring rounds remove every root SCC
     per round, typically O(log) rounds on real graphs."""
-    from bigdata_foundation_spark.graph import paths as _p
-
-    if not _kernel_tier(roads, strategy, projection):
+    if _p._tier(roads, strategy, projection, _p._TWO_TIERS) == "bsp":
         return _scc_superstep(roads, max_rounds=max_rounds)
-    from pyspark.sql import types as T
-
-    from bigdata_foundation_spark.graph import kernel as _k
-
-    spark = roads.sparkSession
-    proj = projection or _p.build_projection(roads)
-    schema = T.StructType(
-        [
-            T.StructField("NodeId", T.StringType(), False),
-            T.StructField("scc_id", T.StringType(), False),
-        ]
-    )
-    return _p._run_on_executor_df(spark, proj, _k.scc_kernel, schema)
+    return _p._run_kernel(roads, projection, _k.scc_kernel, _SCC_DDL)
 
 
 def _scc_superstep(roads: DataFrame, max_rounds: int = 1000) -> DataFrame:
@@ -553,18 +477,7 @@ def _scc_superstep(roads: DataFrame, max_rounds: int = 1000) -> DataFrame:
         if remaining.isEmpty():
             edges0.unpersist()
             if out is None:
-                from pyspark.sql import types as T
-
-                return local_df(
-                    spark,
-                    [],
-                    T.StructType(
-                        [
-                            T.StructField("NodeId", T.StringType(), False),
-                            T.StructField("scc_id", T.StringType(), False),
-                        ]
-                    ),
-                )
+                return local_df(spark, [], _SCC_DDL)
             return out.select("NodeId", "scc_id")
         e = (
             edges0.join(remaining.withColumnRenamed("id", "src"), "src", "left_semi")
@@ -651,7 +564,7 @@ def core_decomposition(
     is the robust "how embedded is this node" signal degree alone
     fakes.
 
-    Strategy dispatch (two tiers): ``broadcast`` (auto below
+    Tiers (``paths._tier``): ``broadcast`` (auto below
     ``paths.BROADCAST_EDGE_LIMIT``) runs Batagelj–Zaveršnik bucket
     peeling (``kernel.kcore_kernel``) as one executor task; ``bsp``
     (auto above) runs the distributed h-index iteration
@@ -660,22 +573,11 @@ def core_decomposition(
     neighbors' current estimates — monotone non-increasing, fixpoint =
     exact core numbers; per round one keyed join + one windowed
     h-index aggregate. Tiers are integer-exact identical."""
-    from bigdata_foundation_spark.graph import paths as _p
-
-    if not _kernel_tier(roads, strategy, projection):
+    if _p._tier(roads, strategy, projection, _p._TWO_TIERS) == "bsp":
         return _kcore_superstep(spark, roads, max_iters=max_iters)
-    from pyspark.sql import types as T
-
-    from bigdata_foundation_spark.graph import kernel as _k
-
-    proj = projection or _p.build_projection(roads)
-    schema = T.StructType(
-        [
-            T.StructField("NodeId", T.StringType(), False),
-            T.StructField("core", T.LongType(), False),
-        ]
+    return _p._run_kernel(
+        roads, projection, _k.kcore_kernel, "NodeId string NOT NULL, core bigint NOT NULL"
     )
-    return _p._run_on_executor_df(spark, proj, _k.kcore_kernel, schema)
 
 
 def _kcore_superstep(
@@ -777,25 +679,13 @@ def bridge_edges(roads: DataFrame, projection=None) -> DataFrame:
     needs Tarjan–Vishkin Euler-tour machinery — a documented
     non-goal; the projection fits for any graph the reference's
     workload shape produces (SURVEY.md §4.2)."""
-    from pyspark.sql import types as T
-
-    from bigdata_foundation_spark.graph import kernel as _k
-    from bigdata_foundation_spark.graph import paths as _p
-
-    spark = roads.sparkSession
-    proj = projection or _p.build_projection(roads)
     pairs = _parallel_pairs(roads)
-    schema = T.StructType(
-        [
-            T.StructField("src", T.StringType(), False),
-            T.StructField("dst", T.StringType(), False),
-        ]
+    return _p._run_kernel(
+        roads,
+        projection,
+        lambda p: _k.biconnectivity_kernel(p, pairs)[0],
+        "src string NOT NULL, dst string NOT NULL",
     )
-
-    def _bridges(p):
-        return _k.biconnectivity_kernel(p, pairs)[0]
-
-    return _p._run_on_executor_df(spark, proj, _bridges, schema)
 
 
 def articulation_points(roads: DataFrame, projection=None) -> DataFrame:
@@ -805,19 +695,12 @@ def articulation_points(roads: DataFrame, projection=None) -> DataFrame:
     Parallel roads are irrelevant here — removing a NODE severs every
     incident edge at once. Same broadcast-kernel tier and
     Tarjan–Vishkin non-goal note as :func:`bridge_edges`."""
-    from pyspark.sql import types as T
-
-    from bigdata_foundation_spark.graph import kernel as _k
-    from bigdata_foundation_spark.graph import paths as _p
-
-    spark = roads.sparkSession
-    proj = projection or _p.build_projection(roads)
-    schema = T.StructType([T.StructField("NodeId", T.StringType(), False)])
-
-    def _artic(p):
-        return [(x,) for x in _k.biconnectivity_kernel(p)[1]]
-
-    return _p._run_on_executor_df(spark, proj, _artic, schema)
+    return _p._run_kernel(
+        roads,
+        projection,
+        lambda p: [(x,) for x in _k.biconnectivity_kernel(p)[1]],
+        "NodeId string NOT NULL",
+    )
 
 
 def personalized_pagerank(
@@ -839,7 +722,7 @@ def personalized_pagerank(
     to 6 dp — the same replayable determinism contract as
     :func:`pagerank`.
 
-    Tier dispatch mirrors :func:`pagerank`: broadcast numpy kernel
+    Tiers (``paths._tier``) mirror :func:`pagerank`: broadcast numpy kernel
     (``kernel.ppr_kernel``) below ``paths.BROADCAST_EDGE_LIMIT``, the
     superstep loop above — identical math, per iteration ONE keyed
     join + ONE groupBy(dst) sum, the seed set riding a broadcast
@@ -847,23 +730,10 @@ def personalized_pagerank(
     iterated lineage."""
     if not sources:
         raise ValueError("personalized_pagerank: sources must be non-empty")
-    from bigdata_foundation_spark.graph import paths as _p
-
-    if _kernel_tier(roads, strategy, projection):
-        from pyspark.sql import types as T
-
-        from bigdata_foundation_spark.graph import kernel as _k
-
-        proj = projection or _p.build_projection(roads)
-        schema = T.StructType(
-            [
-                T.StructField("NodeId", T.StringType(), False),
-                T.StructField("rank", T.DoubleType(), False),
-            ]
-        )
+    if _p._tier(roads, strategy, projection, _p._TWO_TIERS) == "broadcast":
         srcs = list(sources)
-        raw = _p._run_on_executor_df(
-            spark, proj, lambda p: _k.ppr_kernel(p, srcs, damping, iters), schema
+        raw = _p._run_kernel(
+            roads, projection, lambda p: _k.ppr_kernel(p, srcs, damping, iters), _RANK_DDL
         )
         return raw.select("NodeId", F.round(F.col("rank"), 6).alias("rank"))
     nodes = roads.select(F.col("src").alias("id")).union(
@@ -928,26 +798,13 @@ def eigenvector_centrality(
     6 dp, the family's replayable determinism contract; if the
     in-mass dies the zero vector returns (no divide-by-zero).
 
-    Tier dispatch mirrors :func:`pagerank`: broadcast numpy kernel
-    below ``paths.BROADCAST_EDGE_LIMIT``; above it, per iteration ONE
+    Tiers (``paths._tier``) mirror :func:`pagerank`: broadcast numpy
+    kernel below ``paths.BROADCAST_EDGE_LIMIT``; above it, per iteration ONE
     keyed join (edges ⋈ x on src) + ONE groupBy(dst) sum + a
     one-scalar norm agg, ``localCheckpoint`` every few iterations."""
-    from bigdata_foundation_spark.graph import paths as _p
-
-    if _kernel_tier(roads, strategy, projection):
-        from pyspark.sql import types as T
-
-        from bigdata_foundation_spark.graph import kernel as _k
-
-        proj = projection or _p.build_projection(roads)
-        schema = T.StructType(
-            [
-                T.StructField("NodeId", T.StringType(), False),
-                T.StructField("rank", T.DoubleType(), False),
-            ]
-        )
-        raw = _p._run_on_executor_df(
-            spark, proj, lambda p: _k.eigenvector_kernel(p, iters), schema
+    if _p._tier(roads, strategy, projection, _p._TWO_TIERS) == "broadcast":
+        raw = _p._run_kernel(
+            roads, projection, lambda p: _k.eigenvector_kernel(p, iters), _RANK_DDL
         )
         return raw.select("NodeId", F.round(F.col("rank"), 6).alias("rank"))
     nodes = roads.select(F.col("src").alias("id")).union(
@@ -997,7 +854,7 @@ def hits(
     whose mass dies returns zeros (no divide-by-zero), and once one
     side dies the other follows on the next half-step in BOTH tiers.
 
-    Tier dispatch mirrors :func:`pagerank`: broadcast numpy kernel
+    Tiers (``paths._tier``) mirror :func:`pagerank`: broadcast numpy kernel
     (``kernel.hits_kernel`` — two gather+bincount scatter-adds per
     iteration over the CSR edge arrays) below
     ``paths.BROADCAST_EDGE_LIMIT``; above it, the superstep loop —
@@ -1006,23 +863,12 @@ def hits(
     aggregation and a one-scalar L2-norm agg, ``localCheckpoint``
     every few iterations to truncate the iterated-join lineage
     (graph/bsp.py discipline)."""
-    from bigdata_foundation_spark.graph import paths as _p
-
-    if _kernel_tier(roads, strategy, projection):
-        from pyspark.sql import types as T
-
-        from bigdata_foundation_spark.graph import kernel as _k
-
-        proj = projection or _p.build_projection(roads)
-        schema = T.StructType(
-            [
-                T.StructField("NodeId", T.StringType(), False),
-                T.StructField("authority", T.DoubleType(), False),
-                T.StructField("hub", T.DoubleType(), False),
-            ]
-        )
-        raw = _p._run_on_executor_df(
-            spark, proj, lambda p: _k.hits_kernel(p, iters), schema
+    if _p._tier(roads, strategy, projection, _p._TWO_TIERS) == "broadcast":
+        raw = _p._run_kernel(
+            roads,
+            projection,
+            lambda p: _k.hits_kernel(p, iters),
+            "NodeId string NOT NULL, authority double NOT NULL, hub double NOT NULL",
         )
         return raw.select(
             "NodeId",
@@ -1185,7 +1031,7 @@ def minimum_spanning_forest(
     distinct-weights argument) — so both tiers and the independent
     Kruskal replay oracle provably agree edge-for-edge.
 
-    Strategy dispatch — the same two-tier shape as ``paths.py``:
+    Tiers (``paths._tier``):
 
     * ``broadcast`` (auto below ``paths.BROADCAST_EDGE_LIMIT``): one
       executor task runs vectorized Borůvka (``kernel.msf_kernel``)
@@ -1202,24 +1048,9 @@ def minimum_spanning_forest(
       shuffle keyed, no driver-side graph state; raises on
       non-convergence rather than returning a partial forest.
     """
-    from bigdata_foundation_spark.graph import paths as _p
-
-    if not _kernel_tier(roads, strategy, projection):
+    if _p._tier(roads, strategy, projection, _p._TWO_TIERS) == "bsp":
         return _msf_superstep(roads, max_rounds=max_rounds)
-    from pyspark.sql import types as T
-
-    from bigdata_foundation_spark.graph import kernel as _k
-
-    spark = roads.sparkSession
-    proj = projection or _p.build_projection(roads)
-    schema = T.StructType(
-        [
-            T.StructField("src", T.StringType(), False),
-            T.StructField("dst", T.StringType(), False),
-            T.StructField("cost", T.DoubleType(), False),
-        ]
-    )
-    return _p._run_on_executor_df(spark, proj, _k.msf_kernel, schema)
+    return _p._run_kernel(roads, projection, _k.msf_kernel, _MSF_DDL)
 
 
 def _msf_superstep(roads: DataFrame, max_rounds: int = 64) -> DataFrame:
@@ -1258,19 +1089,7 @@ def _msf_superstep(roads: DataFrame, max_rounds: int = 64) -> DataFrame:
         )
         if e.isEmpty():
             if chosen is None:
-                from pyspark.sql import types as T
-
-                return local_df(
-                    spark,
-                    [],
-                    T.StructType(
-                        [
-                            T.StructField("src", T.StringType(), False),
-                            T.StructField("dst", T.StringType(), False),
-                            T.StructField("cost", T.DoubleType(), False),
-                        ]
-                    ),
-                )
+                return local_df(spark, [], _MSF_DDL)
             return chosen.select(
                 F.col("a").alias("src"), F.col("b").alias("dst"), "cost"
             )
@@ -1548,32 +1367,15 @@ def louvain(
     (deterministic sweep order + tie-breaks; see the kernel docstring
     for the pinned contract). Past ``paths.BROADCAST_EDGE_LIMIT``
     use :func:`label_propagation` (the distributed community path) and
-    :func:`modularity` to score it; an explicit ``strategy='bsp'``
-    request raises rather than silently running something else."""
-    if strategy == "bsp":
-        raise ValueError(
-            "louvain is kernel-tier only (order-dependent sweeps have no "
-            "faithful superstep twin); use label_propagation + modularity "
-            "for distributed community detection past the broadcast limit"
-        )
-    from pyspark.sql import types as T
-
-    from bigdata_foundation_spark.graph import kernel as _k
-    from bigdata_foundation_spark.graph import paths as _p
-
-    spark = roads.sparkSession
-    proj = projection or _p.build_projection(roads)
-    schema = T.StructType(
-        [
-            T.StructField("NodeId", T.StringType(), False),
-            T.StructField("community", T.StringType(), False),
-        ]
-    )
-    return _p._run_on_executor_df(
-        spark,
-        proj,
+    :func:`modularity` to score it; any ``strategy`` but 'auto' or
+    'broadcast' (``paths._tier``) raises rather than silently running
+    something else."""
+    _p._tier(roads, strategy, projection, _p._KERNEL_ONLY)
+    return _p._run_kernel(
+        roads,
+        projection,
         lambda p: _k.louvain_kernel(p, max_sweeps=max_sweeps, max_levels=max_levels),
-        schema,
+        _COMMUNITY_DDL,
     )
 
 
@@ -1680,30 +1482,13 @@ def hyperball(
     JVM-side. Register traffic is |E|·m rows per round — m is the
     accuracy/IO dial (Boldi & Vigna ran the whole of Facebook at
     m=64 on one machine; at 100 TB pick m per the same budget)."""
-    from pyspark.sql import types as T
-
-    from bigdata_foundation_spark.graph import paths as _p
-
     init = _hyperball_init(roads, m)
-    if _kernel_tier(roads, strategy, projection):
-        from bigdata_foundation_spark.graph import kernel as _k
-
-        spark = roads.sparkSession
-        proj = projection or _p.build_projection(roads)
-        rows = [(r["NodeId"], int(r["bucket"]), int(r["rho"])) for r in init.collect()]
-        schema = T.StructType(
-            [
-                T.StructField("t", T.IntegerType(), False),
-                T.StructField("nf_est", T.DoubleType(), False),
-            ]
-        )
-        return _p._run_on_executor_df(
-            spark,
-            proj,
-            lambda p, _rows=rows: _k.hyperball_kernel(p, _rows, t_max=t_max, m=m),
-            schema,
-        )
-    return _hyperball_superstep(roads, init, t_max=t_max, m=m)
+    if _p._tier(roads, strategy, projection, _p._TWO_TIERS) == "bsp":
+        return _hyperball_superstep(roads, init, t_max=t_max, m=m)
+    rows = [(r["NodeId"], int(r["bucket"]), int(r["rho"])) for r in init.collect()]
+    return _p._run_kernel(
+        roads, projection, lambda p: _k.hyperball_kernel(p, rows, t_max=t_max, m=m), _HYPERBALL_DDL
+    )
 
 
 def _hyperball_superstep(
@@ -1755,18 +1540,7 @@ def _hyperball_superstep(
             .localCheckpoint(eager=True)
         )
         out.append((t, estimate(regs)))
-    from pyspark.sql import types as T
-
-    return local_df(
-        spark,
-        out,
-        T.StructType(
-            [
-                T.StructField("t", T.IntegerType(), False),
-                T.StructField("nf_est", T.DoubleType(), False),
-            ]
-        ),
-    )
+    return local_df(spark, out, _HYPERBALL_DDL)
 
 
 def _hll_alpha_py(m: int) -> float:
@@ -1802,30 +1576,13 @@ def truss_decomposition(
     is two keyed shuffles over the shrinking live set; raises on
     ``max_rounds`` exhaustion rather than returning a partial
     ladder."""
-    from bigdata_foundation_spark.graph import paths as _p
-
-    if not _kernel_tier(roads, strategy, projection):
+    if _p._tier(roads, strategy, projection, _p._TWO_TIERS) == "bsp":
         return _ktruss_superstep(roads, max_rounds=max_rounds)
-    from pyspark.sql import types as T
-
-    from bigdata_foundation_spark.graph import kernel as _k
-
-    spark = roads.sparkSession
-    proj = projection or _p.build_projection(roads)
-    schema = T.StructType(
-        [
-            T.StructField("src", T.StringType(), False),
-            T.StructField("dst", T.StringType(), False),
-            T.StructField("truss", T.IntegerType(), False),
-        ]
-    )
-    return _p._run_on_executor_df(spark, proj, _k.ktruss_kernel, schema)
+    return _p._run_kernel(roads, projection, _k.ktruss_kernel, _TRUSS_DDL)
 
 
 def _ktruss_superstep(roads: DataFrame, max_rounds: int = 1000) -> DataFrame:
     """Past-broadcast truss tier (see :func:`truss_decomposition`)."""
-    from pyspark.sql import types as T
-
     spark = roads.sparkSession
     alive = (
         roads.select(
@@ -1834,13 +1591,6 @@ def _ktruss_superstep(roads: DataFrame, max_rounds: int = 1000) -> DataFrame:
         .filter(F.col("a") != F.col("b"))
         .distinct()
         .localCheckpoint(eager=True)
-    )
-    schema = T.StructType(
-        [
-            T.StructField("src", T.StringType(), False),
-            T.StructField("dst", T.StringType(), False),
-            T.StructField("truss", T.IntegerType(), False),
-        ]
     )
     out: DataFrame | None = None
     k = 3
@@ -1888,5 +1638,5 @@ def _ktruss_superstep(roads: DataFrame, max_rounds: int = 1000) -> DataFrame:
             ).localCheckpoint(eager=True)
         k += 1
     if out is None:
-        return local_df(spark, [], schema)
+        return local_df(spark, [], _TRUSS_DDL)
     return out

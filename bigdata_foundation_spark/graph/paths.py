@@ -1,22 +1,32 @@
-"""Public path-algorithm API (reference operators G1–G5).
+"""Public path-algorithm API (reference operators G1–G5) and the graph
+layer's one tier decision.
 
-Strategy dispatch mirrors how a 100 TB deployment would actually run
-these workloads:
+Every algorithm runs against one projection of the road table, as in
+the reference, where a query runs inside one JVM against the in-memory
+projection (SURVEY.md §3.2 step 3, §4.2). Where that projection lives
+is the tier:
 
-* ``broadcast`` — the graph projection (min ~16 B/edge) fits in one
+* ``broadcast`` — the projection (min ~16 B/edge) fits in one
   process's memory, so it is collected once to the driver. Point
-  queries (Dijkstra, bidirectional Dijkstra, A*, Yen) then run the
-  exact heap kernel (`kernel.py`) right there, in the calling process,
-  with no Spark job: the reference's GDS model, where a query runs
-  inside one JVM on the member that received it against the in-memory
-  projection (SURVEY.md §3.2 step 3, §4.2). Queries whose output is
-  |V|-sized (SSSP) or that are genuinely multi-source (APSP, the
-  centralities) broadcast the projection to every executor instead and
-  fan their sources out as tasks.
-* ``bsp`` — the graph is too big to broadcast: distributed
-  whole-frontier relaxation (`bsp.py`).
-* ``auto`` — picks by edge count (`BROADCAST_EDGE_LIMIT`, default 50 M
-  edges ≈ a few GB broadcast; the Shenzhen graph is 100 k).
+  queries (Dijkstra, bidirectional Dijkstra, A*, Yen) run the exact
+  heap kernel (`kernel.py`) right there, in the calling process, with
+  no Spark job. Queries whose output is |V|-sized (SSSP, the `etl.py`
+  analytics) or that are multi-source (APSP, the centralities) run in
+  executor tasks against the broadcast projection.
+* ``file`` — SSSP and APSP only: the CSR is spilled to files that each
+  executor task mmap-loads, so the resident cost is one page-cache
+  copy per host instead of one pickle per worker process.
+* ``bsp`` — the graph is too big for either: distributed supersteps
+  (`bsp.py`, or the superstep loops in `etl.py`).
+
+:func:`_tier` is the one decision for every strategy-taking function
+here and in `etl.py`; :func:`_run_kernel` is the one way a kernel runs
+in executor tasks. The resolver's contract: ``strategy`` must be
+``auto`` or a tier the function implements, else ``ValueError`` before
+any dispatch; an explicit tier wins (``bsp`` with a projection warns
+that the projection is unused); ``auto`` with a projection is
+``broadcast``; ``auto`` without one picks by edge count
+(`BROADCAST_EDGE_LIMIT`, then `FILE_KERNEL_EDGE_LIMIT`).
 
 Output shapes replicate the reference's YIELD streams:
 G1/G4 stream one row per path node with *cumulative* cost in path
@@ -27,6 +37,7 @@ top-k post-pipeline (neo4j-code.txt:56–77).
 
 from __future__ import annotations
 
+import warnings
 import weakref
 from typing import Iterator
 
@@ -98,7 +109,7 @@ _APSP_SCHEMA = T.StructType(
 # point queries against the same roads table shouldn't re-pay it.
 # CONTRACT: the memo assumes a plan's cardinality is stable for the
 # session (true for immutable snapshots; a source that grows in place
-# mid-session should pass `edge_count` or an explicit strategy).
+# mid-session should pass an explicit strategy).
 # Bounded so a plan-churning session can't grow it without limit.
 _COUNT_MEMO: dict[str, int] = {}
 _COUNT_MEMO_MAX = 256
@@ -123,28 +134,6 @@ def _resolve_edge_count(roads: DataFrame) -> int:
                 _COUNT_MEMO.clear()
             _COUNT_MEMO[key] = edge_count
     return edge_count
-
-
-def _resolve_strategy(roads: DataFrame, strategy: str, edge_count: int | None = None) -> str:
-    """Pick broadcast vs bsp. ``edge_count`` is an optional caller hint
-    (e.g. from an already-known table size) that skips the count job
-    entirely; otherwise the count is memoized on the logical plan."""
-    if strategy in ("broadcast", "bsp"):
-        return strategy
-    if strategy != "auto":
-        raise ValueError(f"unknown strategy {strategy!r}")
-    if edge_count is None:
-        edge_count = _resolve_edge_count(roads)
-    return "broadcast" if edge_count <= BROADCAST_EDGE_LIMIT else "bsp"
-
-
-def _check_point_strategy(strategy: str) -> None:
-    """Point queries (Dijkstra, A*, Yen) have no file tier. Validated
-    before any dispatch, so a passed ``projection`` cannot hide a typo."""
-    if strategy not in ("auto", "broadcast", "bsp"):
-        raise ValueError(
-            f"unknown strategy {strategy!r}: point queries support 'auto', 'broadcast' or 'bsp'"
-        )
 
 
 def build_projection(roads: DataFrame, nodes: DataFrame | None = None) -> _k.Projection:
@@ -268,19 +257,117 @@ def _require_file_tier(spark: SparkSession, spill_dir: str | None) -> None:
         )
 
 
-def _run_on_executor_df(spark: SparkSession, proj: _k.Projection, fn, schema) -> DataFrame:
-    """Run ``fn(proj) -> list[Row-tuples]`` inside a single executor
-    task against the broadcast projection; the rows become a DataFrame
-    WITHOUT ever materializing on the driver — for per-node result
-    sets (SSSP streams |V| rows; at a 10M-node broadcast graph that is
-    GBs the driver must not hold)."""
-    sc = spark.sparkContext
+# The tier sets a strategy-taking function can implement (see _tier).
+# Only the pure-numpy distance kernels (SSSP, APSP) run mmap-backed, so
+# only they have a file tier; Louvain has no superstep twin.
+_ALL_TIERS = ("broadcast", "file", "bsp")
+_TWO_TIERS = ("broadcast", "bsp")
+_KERNEL_ONLY = ("broadcast",)
+
+
+def _tier(
+    roads: DataFrame,
+    strategy: str,
+    projection: _k.Projection | None,
+    tiers: tuple[str, ...],
+    spill_dir: str | None = None,
+) -> str:
+    """The graph layer's one tier decision: 'broadcast', 'file' or
+    'bsp', out of the ``tiers`` the calling function implements.
+
+    * ``strategy`` must be 'auto' or one of ``tiers``; anything else
+      raises ``ValueError`` before any dispatch, with or without a
+      projection, so a typo cannot silently run some other tier.
+    * An explicit tier wins. 'bsp' with a projection warns that the
+      projection goes unused and runs the superstep tier (a benchmark
+      must never believe it measured BSP while the kernel ran); 'file'
+      needs a spill location the executors can read
+      (:func:`_require_file_tier`).
+    * 'auto' with a projection is 'broadcast': the caller already paid
+      the CSR build, so there is no count job.
+    * 'auto' without one picks by the memoized edge count: 'broadcast'
+      up to BROADCAST_EDGE_LIMIT, then 'file' up to
+      FILE_KERNEL_EDGE_LIMIT when the function has that tier and the
+      executors can read the spill (:func:`_file_tier_available`),
+      else 'bsp'. A kernel-only function never counts."""
+    if strategy != "auto" and strategy not in tiers:
+        raise ValueError(
+            f"unknown strategy {strategy!r}: expected 'auto' or one of "
+            + ", ".join(map(repr, tiers))
+        )
+    if strategy == "file":
+        _require_file_tier(roads.sparkSession, spill_dir)
+    elif strategy == "bsp" and projection is not None:
+        warnings.warn(
+            "strategy='bsp' runs the distributed superstep tier; the "
+            "passed projection is unused there",
+            stacklevel=3,
+        )
+    if strategy != "auto":
+        return strategy
+    if projection is not None or tiers == _KERNEL_ONLY:
+        return "broadcast"
+    n_edges = _resolve_edge_count(roads)
+    if n_edges <= BROADCAST_EDGE_LIMIT:
+        return "broadcast"
+    if (
+        "file" in tiers
+        and n_edges <= FILE_KERNEL_EDGE_LIMIT
+        and _file_tier_available(roads.sparkSession, spill_dir)
+    ):
+        # the file tier still builds the projection DRIVER-side
+        # (~16 B/edge resident while spilling), hence its own cap
+        return "file"
+    return "bsp"
+
+
+def _task_projection(
+    spark: SparkSession, proj: _k.Projection, tier: str, spill_dir: str | None = None
+):
+    """Executor-side loader of ``proj`` on a kernel tier: the session's
+    broadcast of it, or (tier 'file') its file spill, mmap-loaded in
+    the task. The loader closes over the broadcast handle or the spill
+    path only, never the projection, so it ships to tasks cheaply."""
+    if tier == "file":
+        spill = _get_spill_dir(proj, spill_dir)
+        return lambda: _k.load_spilled_projection(spill)
     proj_b = _get_broadcast(spark, proj)
+    return lambda: proj_b.value
 
-    def _task(_it):
-        return iter(fn(proj_b.value))
 
-    return spark.createDataFrame(sc.parallelize([0], 1).mapPartitions(_task), schema)
+def _run_kernel(
+    roads: DataFrame,
+    projection: _k.Projection | None,
+    fn,
+    schema,
+    tier: str = "broadcast",
+    spill_dir: str | None = None,
+    sources: list[str] | None = None,
+) -> DataFrame:
+    """Run a kernel against the projection (``projection``, or built
+    from ``roads`` when None) inside executor tasks; its rows become a
+    DataFrame WITHOUT ever materializing on the driver — SSSP streams
+    |V| rows, and at a 10M-node broadcast graph that is GBs the driver
+    must not hold.
+
+    With ``sources=None`` one task runs ``fn(proj) -> rows``. Otherwise
+    the sources fan out over :func:`_source_slices` tasks and each
+    source contributes ``fn(proj, source) -> rows`` (the sampled
+    centralities)."""
+    spark = roads.sparkSession
+    sc = spark.sparkContext
+    load = _task_projection(spark, projection or build_projection(roads), tier, spill_dir)
+    if sources is None:
+        rdd = sc.parallelize([0], 1).mapPartitions(lambda _it: iter(fn(load())))
+    else:
+
+        def _task(it: Iterator[str]):
+            p = load()
+            for s in it:
+                yield from fn(p, s)
+
+        rdd = sc.parallelize(sources, _source_slices(sc, len(sources))).mapPartitions(_task)
+    return spark.createDataFrame(rdd, schema)
 
 
 def _cumulative_stream(nodes_seq: list[str], hop_costs: list[float]) -> list[tuple[str, float]]:
@@ -316,44 +403,27 @@ def sssp(
     (SURVEY.md §2.2 G2) — the BSP strategy already relaxes the whole
     frontier per superstep, and the exact kernel needs no buckets.
 
-    Strategy tiers mirror :func:`apsp_topk` (r12): 'broadcast' below
+    Tiers (:func:`_tier`) mirror :func:`apsp_topk`: 'broadcast' below
     BROADCAST_EDGE_LIMIT, 'file' (mmap file-spilled CSR — the
     distance kernel is pure numpy, so it runs mmap-backed; 27.6×
     the superstep tier on the r9 expander, KERNEL_BENCH §r12) up to
     FILE_KERNEL_EDGE_LIMIT, 'bsp' supersteps past that (terminal).
+    Both kernel tiers run in one executor task (:func:`_run_kernel`).
     Point-to-point :func:`dijkstra`/:func:`astar` do NOT get a file
     tier: their parent-tracking heap kernel needs the per-process
     list views (~90 B/edge), which defeats mmap sharing at exactly
     the scale the tier exists for."""
-    if strategy not in ("auto", "broadcast", "file", "bsp"):
-        raise ValueError(f"unknown strategy {strategy!r}")
-    use_file = strategy == "file"
-    if use_file:
-        _require_file_tier(spark, spill_dir)
-    if projection is None and strategy in ("auto", "bsp"):
-        if _resolve_strategy(roads, strategy) == "bsp":
-            if (
-                strategy == "bsp"
-                or _resolve_edge_count(roads) > FILE_KERNEL_EDGE_LIMIT
-                or not _file_tier_available(spark, spill_dir)
-            ):
-                res = _bsp.bsp_sssp(spark, roads, source)
-                return res.select(F.col("node").alias("NodeId"), F.col("dist").alias("distance"))
-            use_file = True
-    proj = projection or build_projection(roads)
-    if use_file:
-        spill = _get_spill_dir(proj, spill_dir)
-
-        def _task(_it):
-            p = _k.load_spilled_projection(spill)
-            return iter(sorted(_k.sssp(p, source).items()))
-
-        return spark.createDataFrame(
-            spark.sparkContext.parallelize([0], 1).mapPartitions(_task),
-            _SSSP_SCHEMA,
-        )
-    return _run_on_executor_df(
-        spark, proj, lambda p: sorted(_k.sssp(p, source).items()), _SSSP_SCHEMA
+    tier = _tier(roads, strategy, projection, _ALL_TIERS, spill_dir)
+    if tier == "bsp":
+        res = _bsp.bsp_sssp(spark, roads, source)
+        return res.select(F.col("node").alias("NodeId"), F.col("dist").alias("distance"))
+    return _run_kernel(
+        roads,
+        projection,
+        lambda p: sorted(_k.sssp(p, source).items()),
+        _SSSP_SCHEMA,
+        tier,
+        spill_dir,
     )
 
 
@@ -381,17 +451,15 @@ def dijkstra(
     on asymmetric digraphs; prefer :func:`astar` when planar
     coordinates exist — its goal-direction beats both). The two-ended
     heap search is a broadcast-kernel algorithm, so the flag FORCES
-    the broadcast strategy — it is consulted before the BSP dispatch
-    rather than silently ignored past the edge limit.
+    the broadcast tier in place of 'auto' or 'bsp' — it is consulted
+    before the tier decision rather than silently ignored past the
+    edge limit.
 
     On the broadcast tier the kernel runs in the calling process
     against the driver-held projection: no Spark job."""
-    _check_point_strategy(strategy)
-    if (
-        projection is None
-        and not bidirectional
-        and _resolve_strategy(roads, strategy) == "bsp"
-    ):
+    if bidirectional and strategy in ("auto", "bsp"):
+        strategy = "broadcast"
+    if _tier(roads, strategy, projection, _TWO_TIERS) == "bsp":
         res = _bsp.bsp_sssp(spark, roads, source, target=target)
         return _bsp_path_stream(spark, res, target)
     proj = projection or build_projection(roads)
@@ -419,8 +487,7 @@ def astar(
     meters-into-haversine heuristic and its suboptimal 54140.0 result
     (MAIN:480–487; SURVEY.md §2.2 G4). The broadcast tier runs in the
     calling process, like :func:`dijkstra`."""
-    _check_point_strategy(strategy)
-    if projection is None and _resolve_strategy(roads, strategy) == "bsp":
+    if _tier(roads, strategy, projection, _TWO_TIERS) == "bsp":
         res = _bsp.bsp_sssp(spark, roads, source, target=target, nodes=nodes, use_heuristic=True)
         return _bsp_path_stream(spark, res, target)
     proj = projection or build_projection(roads, nodes)
@@ -487,12 +554,13 @@ def yens_k(
     with no Spark job. Fanning them out as executor tasks cost more in
     scheduling than it saved, up to a 250k-node grid (KERNEL_BENCH.md).
 
-    ``strategy`` semantics: below ``BROADCAST_EDGE_LIMIT`` Yen runs on
-    the driver-held projection. ``k < 1`` raises ``ValueError`` on
-    every tier. Past the limit, ``auto`` (or explicit ``'bsp'``)
-    dispatches to ``bsp.bsp_yens_k``: each iteration's ~|path| masked
-    probes share ONE probe-keyed BSP relaxation (wave-bounded state,
-    no driver-side per-node structures), goal-directed by a single
+    ``strategy`` semantics (:func:`_tier`): below
+    ``BROADCAST_EDGE_LIMIT`` Yen runs on the driver-held projection.
+    ``k < 1`` raises ``ValueError`` on every tier. Past the limit,
+    ``auto`` (or explicit ``'bsp'``) dispatches to ``bsp.bsp_yens_k``:
+    each iteration's ~|path| masked probes share ONE probe-keyed BSP
+    relaxation (wave-bounded state, no driver-side per-node
+    structures), goal-directed by a single
     reverse BSP SSSP from the target. Results are identical up to
     equal-cost tie-breaks (the BSP kernel orders ties by (dist, path
     node-id strings), the broadcast kernel by node index — both pick
@@ -500,10 +568,9 @@ def yens_k(
     see them select/order those alternatives differently); latency
     is ~(1 + k·ceil(|path|/wave)) BSP runs, so broadcast is always
     preferred when the projection fits."""
-    _check_point_strategy(strategy)
     if k < 1:
         raise ValueError(f"yens_k needs k >= 1, got {k!r}")
-    if projection is None and _resolve_strategy(roads, strategy) == "bsp":
+    if _tier(roads, strategy, projection, _TWO_TIERS) == "bsp":
         paths = _bsp.bsp_yens_k(spark, roads, source, target, k=k)
         rows = [
             (i, nodes_i, costs_i, total_i)
@@ -550,7 +617,9 @@ def apsp_topk(
     executor memory by wave-batched BSP relaxation
     (``bsp.bsp_multi_sssp``: state keyed by (source, node)) — the
     superstep tier is TERMINAL there (both crossover sides measured,
-    KERNEL_BENCH §r9/r12). 'auto' picks by edge count. ``spill_dir``
+    KERNEL_BENCH §r9/r12). 'auto' picks by edge count (:func:`_tier`;
+    without a shared ``spill_dir`` on a non-local master it skips
+    'file', which executors could not read, for 'bsp'). ``spill_dir``
     overrides where the file tier writes the CSR (REQUIRED to be
     shared storage on a multi-host cluster; defaults to a local temp
     dir, correct for local mode).
@@ -570,47 +639,12 @@ def apsp_topk(
     this turns |V| SSSP runs into a few thousand. Sources that cannot
     reach the hub get an infinite bound (never pruned) — correctness
     does not depend on connectivity."""
-    if strategy not in ("auto", "broadcast", "file", "bsp"):
-        # validate HERE — the 3-way dispatch below no longer routes
-        # every value through _resolve_strategy (r12 review finding:
-        # a typo'd strategy silently ran the broadcast tier, the one
-        # tier guaranteed to OOM at the scale 'file'/'bsp' exist for)
-        raise ValueError(f"unknown strategy {strategy!r}")
-    use_file = strategy == "file"
-    if use_file:
-        _require_file_tier(spark, spill_dir)
-    if projection is None and strategy in ("auto", "bsp"):
-        if _resolve_strategy(roads, strategy) == "bsp":
-            if strategy == "bsp":
-                return _apsp_topk_bsp(spark, roads, k, wave_size=bsp_wave_size)
-            # auto past broadcast: the file tier keeps the per-source
-            # kernel alive up to ~host memory; only beyond that does
-            # the (terminal) superstep tier take over. On a non-local
-            # master without a shared spill_dir the file tier cannot
-            # work (executors can't read a driver-local spill), so
-            # auto falls back to BSP there (r12 advice) — note the
-            # file tier also builds the projection DRIVER-side
-            # (~16 B/edge resident while spilling), which is why it
-            # is capped at FILE_KERNEL_EDGE_LIMIT.
-            n_edges = _resolve_edge_count(roads)
-            if n_edges <= FILE_KERNEL_EDGE_LIMIT and _file_tier_available(spark, spill_dir):
-                use_file = True
-            else:
-                return _apsp_topk_bsp(spark, roads, k, wave_size=bsp_wave_size)
+    tier = _tier(roads, strategy, projection, _ALL_TIERS, spill_dir)
+    if tier == "bsp":
+        return _apsp_topk_bsp(spark, roads, k, wave_size=bsp_wave_size)
     proj = projection or build_projection(roads)
     sc = spark.sparkContext
-    if use_file:
-        spill = _get_spill_dir(proj, spill_dir)
-
-        def _task_proj() -> _k.Projection:
-            return _k.load_spilled_projection(spill)
-
-    else:
-        proj_b = _get_broadcast(spark, proj)
-
-        def _task_proj() -> _k.Projection:
-            return proj_b.value
-
+    _task_proj = _task_projection(spark, proj, tier, spill_dir)
     sources = sorted(
         proj.ids[i] for i in range(len(proj.ids)) if proj.indptr[i + 1] > proj.indptr[i]
     )
@@ -944,23 +978,17 @@ def harmonic_centrality(
     ``n_sources=None`` for the exact all-source report (r7)."""
     proj = projection or build_projection(roads)
     _reject_zero_weight_edges(proj, "harmonic_centrality")
+
+    def _harmonic(p: _k.Projection, s: str) -> list[tuple[str, float, int]]:
+        dist = _k.sssp(p, s)
+        # start=0.0 keeps the empty case a float (an isolated or
+        # sink-only source reaches nothing)
+        h = sum((1.0 / d for d in dist.values() if d > 0.0), 0.0)
+        return [(s, h, sum(1 for d in dist.values() if d > 0.0))]
+
     srcs = _sampled_sources(roads, n_sources)
-    sc = spark.sparkContext
-    proj_b = _get_broadcast(spark, proj)
-
-    def _task(it: Iterator[str]) -> Iterator[tuple[str, float, int]]:
-        p = proj_b.value
-        for s in it:
-            dist = _k.sssp(p, s)
-            # start=0.0 keeps the empty case a float (an isolated or
-            # sink-only source reaches nothing)
-            h = sum((1.0 / d for d in dist.values() if d > 0.0), 0.0)
-            n = sum(1 for d in dist.values() if d > 0.0)
-            yield (s, h, n)
-
-    rows = sc.parallelize(srcs, _source_slices(sc, len(srcs))).mapPartitions(_task)
     return (
-        spark.createDataFrame(rows, _HARMONIC_SCHEMA)
+        _run_kernel(roads, proj, _harmonic, _HARMONIC_SCHEMA, sources=srcs)
         .select(
             "NodeId",
             F.round("harmonic", 6).alias("harmonic"),
@@ -1004,21 +1032,14 @@ def eccentricity(
     graphs — on positive-weight graphs like the reference's the two
     definitions coincide). Returns (NodeId, eccentricity, n_reachable)
     sorted by NodeId."""
-    proj = projection or build_projection(roads)
+
+    def _ecc(p: _k.Projection, s: str) -> list[tuple[str, float, int]]:
+        pos = [d for node, d in _k.sssp(p, s).items() if node != s]
+        return [(s, max(pos, default=0.0), len(pos))]
+
     srcs = _sampled_sources(roads, n_sources)
-    sc = spark.sparkContext
-    proj_b = _get_broadcast(spark, proj)
-
-    def _task(it: Iterator[str]) -> Iterator[tuple[str, float, int]]:
-        p = proj_b.value
-        for s in it:
-            dist = _k.sssp(p, s)
-            pos = [d for node, d in dist.items() if node != s]
-            yield (s, max(pos, default=0.0), len(pos))
-
-    rows = sc.parallelize(srcs, _source_slices(sc, len(srcs))).mapPartitions(_task)
     return (
-        spark.createDataFrame(rows, _ECCENTRICITY_SCHEMA)
+        _run_kernel(roads, projection, _ecc, _ECCENTRICITY_SCHEMA, sources=srcs)
         .select(
             "NodeId",
             F.round("eccentricity", 6).alias("eccentricity"),
@@ -1069,26 +1090,21 @@ def closeness_centrality(
         .distinct()
     )
     n_nodes = ids_df.count()
-    srcs = _sampled_sources(roads, n_sources)
-    sc = spark.sparkContext
-    proj_b = _get_broadcast(spark, proj)
     wf = bool(wf_correction)
     denom = max(n_nodes - 1, 1)
 
-    def _task(it: Iterator[str]) -> Iterator[tuple[str, float, int]]:
-        p = proj_b.value
-        for s in it:
-            dist = _k.sssp(p, s)
-            tot = sum((d for d in dist.values() if d > 0.0), 0.0)
-            r = sum(1 for d in dist.values() if d > 0.0)
-            c = (r / tot) if tot > 0.0 else 0.0
-            if wf:
-                c *= r / denom
-            yield (s, c, r)
+    def _closeness(p: _k.Projection, s: str) -> list[tuple[str, float, int]]:
+        dist = _k.sssp(p, s)
+        tot = sum((d for d in dist.values() if d > 0.0), 0.0)
+        r = sum(1 for d in dist.values() if d > 0.0)
+        c = (r / tot) if tot > 0.0 else 0.0
+        if wf:
+            c *= r / denom
+        return [(s, c, r)]
 
-    rows = sc.parallelize(srcs, _source_slices(sc, len(srcs))).mapPartitions(_task)
+    srcs = _sampled_sources(roads, n_sources)
     return (
-        spark.createDataFrame(rows, _CLOSENESS_SCHEMA)
+        _run_kernel(roads, proj, _closeness, _CLOSENESS_SCHEMA, sources=srcs)
         .select(
             "NodeId",
             F.round("closeness", 6).alias("closeness"),
@@ -1199,16 +1215,7 @@ def betweenness_centrality(
     proj = projection or build_projection(roads)
     _reject_zero_weight_edges(proj, "betweenness_centrality")
     srcs = _sampled_sources(roads, n_sources)
-    sc = spark.sparkContext
-    proj_b = _get_broadcast(spark, proj)
-
-    def _task(it: Iterator[str]) -> Iterator[tuple[str, float]]:
-        p = proj_b.value
-        for s in it:
-            yield from _brandes_from(p, s)
-
-    rows = sc.parallelize(srcs, _source_slices(sc, len(srcs))).mapPartitions(_task)
-    contrib = spark.createDataFrame(rows, _BETWEENNESS_SCHEMA)
+    contrib = _run_kernel(roads, proj, _brandes_from, _BETWEENNESS_SCHEMA, sources=srcs)
     return (
         contrib.groupBy("NodeId")
         .agg(F.round(F.sum("betweenness"), 6).alias("betweenness"))

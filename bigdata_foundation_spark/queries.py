@@ -3701,7 +3701,7 @@ def _graph(spark: SparkSession):
     key = id(spark)
     if key not in _GRAPH_MEMO:
         _GRAPH_MEMO.clear()  # never hold caches of a dead session
-        _GRAPH_MEMO[key] = load_graph(spark, SHENZHEN_CSV, cache=True)
+        _GRAPH_MEMO[key] = load_graph(spark, SHENZHEN_CSV)
     return _GRAPH_MEMO[key]
 
 

@@ -3,10 +3,13 @@
 The reference's 3-node cluster did NOT speed up its algorithms —
 GDS computes on a single member; the cluster only replicates storage
 (SURVEY.md §4.2; cluster Dijkstra 74.8 vs standalone 72.6 at full
-scale). This engine distributes the *queries*: APSP fans source waves
-and Yen fans spur probes across every core, so algorithm time should
-fall as cores grow — the scaling the reference could not get. This
-harness measures exactly that claim on the 70k-row graph.
+scale). This engine distributes the multi-source *queries*: APSP fans
+source waves across every core, so its time should fall as cores grow
+— the scaling the reference could not get. Yen's K is the control: on
+the broadcast tier its spur probes run back to back in the driver
+process against the driver-held projection, with no Spark job, so it
+should stay flat. This harness measures exactly that on the 70k-row
+graph.
 
 Each configuration needs its own JVM (master is fixed at session
 start), so every measurement runs in a fresh subprocess. Appends a
@@ -78,10 +81,9 @@ def main() -> None:
         "scaling the reference architecture could not reach. (Dijkstra/",
         "SSSP on this 69k-edge graph are single-task and excluded: their",
         "per-query cost is already sub-second; distribution shows up in",
-        "the fan-out algorithms. Yen sits flat at ~1.4 s: after the",
-        "reverse-distance landmark heuristic each spur probe is",
-        "~ms-scale, so its wall-clock is per-iteration barrier latency,",
-        "not compute — APSP is the compute-bound fan-out and shows the",
+        "the fan-out algorithms. Yen is the flat control: its spur",
+        "probes run back to back in the driver process, with no Spark",
+        "job — APSP is the compute-bound fan-out and shows the",
         "scaling.)",
         "",
         "| cores | yen k=3 s | apsp top10 s |",
