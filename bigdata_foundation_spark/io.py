@@ -359,14 +359,8 @@ def parse_fixed_width(
 # unchanged, and a reader never lists data/ (the listing-storm
 # failure mode at 100 TB; the manifest IS the listing).
 #
-# Commit protocol: data files land first (invisible until
-# referenced), then the manifest is created with O_CREAT|O_EXCL —
-# the atomic publish point. Two racing writers computing the same
-# next version: one EXCL-create wins, the loser retries against the
-# new head (optimistic concurrency, Delta-style). A crash before the
-# manifest create leaves only unreferenced files that vacuum sweeps.
-# Idempotent re-commit: pass commit_id; a retry whose commit_id
-# matches the current head is a no-op returning the head version.
+# Commit protocol: :func:`_commit` is the one place a version is
+# published — every write, merge and delete goes through it.
 
 _MANIFEST_DIR = "_manifests"
 
@@ -562,6 +556,11 @@ def check_log_store(store, scratch_dir: str) -> None:
         raise ValueError("log store: delete_blob must remove the blob")
 
 
+class SnapshotConflictError(RuntimeError):
+    """A merge or delete lost its commit to a concurrent writer: its
+    rewrite was computed against a head that is no longer the head."""
+
+
 def snapshot_versions(table_dir: str) -> list[int]:
     """Committed versions, ascending. Empty list for a fresh dir."""
     _, mdir = _snapshot_paths(table_dir)
@@ -583,10 +582,11 @@ def snapshot_versions(table_dir: str) -> list[int]:
 _COMMIT_ID_INDEX: dict = {}  # mdir -> [scanned_to_version, {commit_id: version}]
 
 
-def _find_commit_id(table_dir: str, versions: list, commit_id: str):
+def _find_commit_id(table_dir: str, versions: list, commit_id: str | None):
     """Version carrying ``commit_id`` among ``versions``, else None —
-    one manifest read per version per PROCESS, not per call."""
-    if not versions:
+    one manifest read per version per PROCESS, not per call. A version
+    vacuumed between the listing and its read is skipped."""
+    if commit_id is None or not versions:
         return None
     _, mdir = _snapshot_paths(table_dir)
     entry = _COMMIT_ID_INDEX.get(mdir)
@@ -595,7 +595,10 @@ def _find_commit_id(table_dir: str, versions: list, commit_id: str):
         _COMMIT_ID_INDEX[mdir] = entry
     for v in versions:
         if v > entry[0]:
-            cid = _read_manifest(table_dir, v).get("commit_id")
+            try:
+                cid = _read_manifest(table_dir, v).get("commit_id")
+            except FileNotFoundError:
+                cid = None
             if cid is not None:
                 entry[1][cid] = v
             entry[0] = v
@@ -606,6 +609,15 @@ def _find_commit_id(table_dir: str, versions: list, commit_id: str):
 def _read_manifest(table_dir: str, version: int) -> dict:
     _, mdir = _snapshot_paths(table_dir)
     return _LOG_STORE.read(mdir, version)
+
+
+def _head(table_dir: str) -> tuple[list, dict]:
+    """(committed versions, the head version's manifest); raises
+    FileNotFoundError for a table with no commits."""
+    versions = snapshot_versions(table_dir)
+    if not versions:
+        raise FileNotFoundError(f"no snapshot versions in {table_dir}")
+    return versions, _read_manifest(table_dir, versions[-1])
 
 
 def _evolve_schema(head: dict, df_schema) -> tuple[dict, bool]:
@@ -766,7 +778,6 @@ def _build_manifest_file_payload(
     drop_files: set,
     new_files: list,
     new_stats: dict,
-    table_dir: str | None = None,
     new_group_cache: dict | None = None,
     compact: bool = True,
     drop_ranges: list | None = None,
@@ -872,7 +883,8 @@ def _build_manifest_file_payload(
 
 
 def _read_snapshot_files(spark: SparkSession, ddir: str, files, schema_json: dict):
-    """Read a snapshot file subset THROUGH the manifest schema. After
+    """Read a snapshot file subset — possibly empty, which reads as an
+    empty frame of the schema — THROUGH the manifest schema. After
     an additive evolution the file set is mixed-schema: a raw
     ``spark.read.parquet`` takes one file's schema (silently dropping
     the new columns), and ``mergeSchema`` pays a footer scan per file.
@@ -905,117 +917,125 @@ def write_snapshot(
     carries the same id, nothing is written and that version is
     returned — so a streaming checkpoint replay of batches 0..k over
     an already-committed table is k+1 no-ops, not k+1 duplicate
-    appends (newest manifests are checked first: the common retry is
-    of a recent commit). At manifest counts where a linear scan
-    matters (10^4+ un-vacuumed versions), keep a commit-id index
-    file alongside the manifests — the contract stays the same."""
-    import os
-    import uuid
-
+    appends. The lookup goes through the per-process commit-id index
+    (``_COMMIT_ID_INDEX``): each manifest is read once per process,
+    so a new id costs a read of the versions committed since the last
+    lookup, not a scan of the whole log."""
     if mode not in ("append", "overwrite"):
         raise ValueError(f"mode must be append|overwrite, got {mode!r}")
-    ddir, mdir = _snapshot_paths(table_dir)
-    os.makedirs(ddir, exist_ok=True)
-    # mdir is the LOG STORE's namespace (maybe not a POSIX path at
-    # all) — its publish/put_blob create it; never touch it directly
-
     versions = snapshot_versions(table_dir)
-    if commit_id is not None:
-        hit = _find_commit_id(table_dir, versions, commit_id)
-        if hit is not None:
-            return hit
+    hit = _find_commit_id(table_dir, versions, commit_id)
+    if hit is not None:
+        return hit
+    head = None
     if mode == "append" and versions:
         # Schema enforcement (r12) + additive evolution (r14): an
         # append may ADD nullable columns (old files read as NULL
         # through the manifest schema — _read_snapshot_files); any
         # other drift (drop, rename, retype) would land files a later
-        # read unions incoherently and fails fast — those changes go
-        # through mode='overwrite', which starts a new file set under
-        # the new schema. (The publish loop re-validates against the
-        # re-read head; this early check just fails before the write.)
-        _evolve_schema(_read_manifest(table_dir, versions[-1])["schema"], df.schema)
+        # read unions incoherently and fails fast, before the write —
+        # those changes go through mode='overwrite', which starts a new
+        # file set under the new schema.
+        head = _read_manifest(table_dir, versions[-1])
+        _evolve_schema(head["schema"], df.schema)
+    return _commit(df, table_dir, mode, commit_id, versions[-1] if versions else 0, head)
 
-    # 1. data files land in a commit-private subdir (invisible —
-    # nothing references them until the manifest publishes)
-    next_v = (versions[-1] + 1) if versions else 1
-    cdir = os.path.join(ddir, f"c{next_v:08d}-{uuid.uuid4().hex[:12]}")
+
+def _commit(
+    df: DataFrame,
+    table_dir: str,
+    mode: str,
+    commit_id: str | None,
+    base: int,
+    head: dict | None = None,
+    drop=frozenset(),
+    drop_ranges: list | None = None,
+) -> int:
+    """Commit ``df``'s rows as the version after ``base`` (0: a new
+    table) and return the committed version — the snapshot log's one
+    commit protocol (Delta's optimistic log commit):
+
+    1. ``df`` lands once in a commit-private data dir that no manifest
+       references yet; the new files' footer stats are read once.
+    2. The manifest lists ``head``'s files minus ``drop`` plus the new
+       files (an overwrite or a first commit starts empty). An append
+       commits ``head``'s schema evolved by ``df``'s; a merge or delete
+       commits ``head``'s schema as its caller computed it; an
+       overwrite commits ``df``'s. ``_LOG_STORE.publish`` creates the
+       manifest only if its version is still free: that put-if-absent
+       is the commit point.
+    3. A lost race is first checked for idempotency: a winner carrying
+       ``commit_id`` is this same logical commit, retried and racing
+       itself, so its version is returned. Otherwise an append or
+       overwrite, which does not depend on the head's rows, rebuilds
+       its manifest against the new head (re-validating the schema)
+       and publishes again; a merge or delete, whose rows were computed
+       from ``head``, raises SnapshotConflictError — publishing it
+       would drop the winner's rows — and its caller recomputes.
+
+    However many publishes it takes, the data files and the groups of
+    new files are written once. A crash or a lost rewrite leaves only
+    unreferenced files, which :func:`snapshot_vacuum` sweeps."""
+    import os
+    import time
+    import uuid
+
+    ddir, mdir = _snapshot_paths(table_dir)
+    # mdir is the LOG STORE's namespace (maybe not a POSIX path at
+    # all) — its publish/put_blob create it; never touch it directly
+    os.makedirs(ddir, exist_ok=True)
+    cdir = os.path.join(ddir, f"c{base + 1:08d}-{uuid.uuid4().hex[:12]}")
     df.write.mode("error").parquet(cdir)
     new_files = sorted(
         os.path.join(os.path.basename(cdir), f)
         for f in os.listdir(cdir)
         if f.endswith(".parquet")
     )
-    # Per-file column min/max, harvested from the parquet FOOTERS the
-    # write just produced (driver-side metadata reads — no data scan).
-    # These power manifest-level data skipping in read_at_version: at
-    # 100 TB the difference between opening every file and opening
-    # only the files whose range intersects the predicate.
+    # Per-file column min/max from the parquet FOOTERS just written
+    # (driver-side metadata reads, no data scan): they drive the
+    # manifest-level data skipping of read_at_version(prune=...) and
+    # the candidate bounding of merge/delete.
     new_stats = {f: _footer_stats(os.path.join(ddir, f)) for f in new_files}
-
-    # 2. the log store's publish is the atomic commit point (EXCL-
-    # create in the POSIX default; conditional put on object stores —
-    # see PosixSnapshotLogStore); on a version race, re-read the head
-    # and retry against it
-    new_group_cache: dict = {}
+    rewrite = mode in ("merge", "delete")
+    new_groups: dict = {}
     while True:
-        versions = snapshot_versions(table_dir)
-        version = (versions[-1] + 1) if versions else 1
-        if mode == "append" and versions:
-            head = _read_manifest(table_dir, versions[-1])
-            # Re-validate against the RE-READ head (r12 advice): the
-            # pre-write schema check ran against the head observed
-            # before the data write; an append racing a concurrent
-            # overwrite with a different schema would otherwise
-            # commit a mixed-schema file set here — exactly the
-            # incoherent union the fail-fast exists to prevent.
-            # Additive evolution (r14) passes and commits the WIDENED
-            # schema; every older file null-fills the new columns on
-            # read.
-            commit_schema, _ = _evolve_schema(head["schema"], df.schema)
-            payload = _build_manifest_file_payload(
-                mdir, head, set(), new_files, new_stats,
-                new_group_cache=new_group_cache,
-            )
+        parent = None if mode == "overwrite" else head
+        if parent is None:
+            schema = df.schema.jsonValue()
+        elif rewrite:
+            schema = parent["schema"]
         else:
-            commit_schema = df.schema.jsonValue()
-            payload = _build_manifest_file_payload(
-                mdir, None, set(), new_files, new_stats,
-                new_group_cache=new_group_cache,
-            )
-        import time as _time
-
+            schema = _evolve_schema(parent["schema"], df.schema)[0]
         manifest = {
-            "version": version,
-            "parent": versions[-1] if versions else None,
+            "version": base + 1,
+            "parent": base or None,
             "mode": mode,
             "commit_id": commit_id,
             # wall-clock commit time (r13): powers snapshot_history and
-            # read_at_version(as_of=...) — informational, never part of
-            # the value-gated result surface (clocks skew; version
-            # numbers, not timestamps, are the lineage truth)
-            "committed_at": _time.time(),
-            "schema": commit_schema,
-            **payload,
+            # read_at_version(as_of=...) — informational only (clocks
+            # skew; version numbers are the lineage truth)
+            "committed_at": time.time(),
+            "schema": schema,
+            **_build_manifest_file_payload(
+                mdir, parent, drop, new_files, new_stats, new_groups,
+                drop_ranges=drop_ranges,
+            ),
         }
-        if not _LOG_STORE.publish(mdir, version, manifest):
-            # lost the race — before retrying against the new head,
-            # re-check whether the WINNER carried our commit_id (two
-            # retries of one logical commit racing each other — r12
-            # review finding: without this, both publish and the
-            # idempotency guarantee breaks in exactly the concurrent
-            # case the EXCL protocol exists for). Our data dir stays
-            # unreferenced; vacuum sweeps it.
-            if commit_id is not None:
-                for v in reversed(snapshot_versions(table_dir)):
-                    if v < version:
-                        break
-                    try:
-                        if _read_manifest(table_dir, v).get("commit_id") == commit_id:
-                            return v
-                    except FileNotFoundError:
-                        continue
-            continue
-        return version
+        if _LOG_STORE.publish(mdir, base + 1, manifest):
+            return base + 1
+        if commit_id is not None or not rewrite:
+            versions = snapshot_versions(table_dir)
+            hit = _find_commit_id(table_dir, versions, commit_id)
+            if hit is not None:
+                return hit
+        if rewrite:
+            raise SnapshotConflictError(
+                f"snapshot_{mode}: a concurrent commit beat version "
+                f"{base + 1} in {table_dir} — the rewrite was computed "
+                "against a stale head; re-run against the new head"
+            )
+        base = versions[-1]
+        head = _read_manifest(table_dir, base) if mode == "append" else None
 
 
 def _footer_stats(path: str) -> dict:
@@ -1130,14 +1150,48 @@ def read_at_version(
         # per-file footer-stats skipping — the same closed-range test
         # merge/delete use (one shared implementation, r14 review)
         files = _intersecting_files(files, stats, prune)
-        if not files:
-            # every file pruned: an empty frame with the committed schema
-            from pyspark.sql import types as _T
-
-            return local_df(spark, [], _T.StructType.fromJson(man["schema"]))
     # read THROUGH the manifest schema: pre-evolution files null-fill
-    # any columns added later (r14 additive schema evolution)
+    # any columns added later (additive schema evolution); with
+    # every file pruned this is an empty frame of that schema
     return _read_snapshot_files(spark, ddir, files, man["schema"])
+
+
+def _commit_diffs(table_dir: str, versions: list, lo: int, hi: int):
+    """Yield ``(version, mode, added, dropped)`` for each commit in
+    ``(lo, hi]``: the files it added to and dropped from the file set
+    before it. The first diff is taken against ``lo``'s file set, which
+    is empty when ``lo`` is not a committed version (a stream's
+    baseline). Group blobs two v2 manifests share are immutable, so
+    they hold the same files on both sides and are never opened —
+    a commit costs the groups it changed, not the table's."""
+    if hi not in versions:
+        raise ValueError(f"version {hi} not in {versions}")
+    if lo > hi:
+        raise ValueError(f"from_version {lo} > to_version {hi}")
+
+    def files_outside(man: dict, shared: set) -> list:
+        if "files" in man:
+            return man["files"]
+        groups = [g for g in man["groups"] if g["path"] not in shared]
+        return _manifest_file_sets(table_dir, {"groups": groups})[0]
+
+    prev = _read_manifest(table_dir, lo) if lo in versions else {"files": []}
+    for v in versions:
+        if not lo < v <= hi:
+            continue
+        man = _read_manifest(table_dir, v)
+        shared = {g["path"] for g in prev.get("groups", ())} & {
+            g["path"] for g in man.get("groups", ())
+        }
+        old, new = files_outside(prev, shared), files_outside(man, shared)
+        old_set, new_set = set(old), set(new)
+        yield (
+            v,
+            man.get("mode"),
+            [f for f in new if f not in old_set],
+            [f for f in old if f not in new_set],
+        )
+        prev = man
 
 
 def read_version_delta(
@@ -1153,39 +1207,27 @@ def read_version_delta(
     a ValueError naming the boundary instead of a wrong answer (use
     :func:`operators.relational.dataset_diff` for content-level diffs
     across rewrites)."""
-    import os
-
     versions = snapshot_versions(table_dir)
     if to_version is None:
         to_version = versions[-1] if versions else 0
-    for v in (from_version, to_version):
-        if v not in versions:
-            raise ValueError(f"version {v} not in {versions}")
-    if from_version > to_version:
-        raise ValueError(f"from_version {from_version} > to_version {to_version}")
-    for v in versions:
-        if from_version < v <= to_version:
-            mode = _read_manifest(table_dir, v).get("mode")
-            if mode != "append":
-                # overwrite replaces the file set; merge/delete (r13)
-                # rewrite files in place-by-reference — either way the
-                # file-set difference stops meaning "appended rows"
-                raise ValueError(
-                    f"read_version_delta: version {v} is a {mode} — "
-                    "the file-set delta is not an append set; diff "
-                    "contents with dataset_diff instead"
-                )
-    base = set(
-        _manifest_file_sets(table_dir, _read_manifest(table_dir, from_version))[0]
-    )
-    to_man = _read_manifest(table_dir, to_version)
-    new = [f for f in _manifest_file_sets(table_dir, to_man)[0] if f not in base]
+    if from_version not in versions:
+        raise ValueError(f"version {from_version} not in {versions}")
+    new: list = []
+    for v, mode, added, _ in _commit_diffs(table_dir, versions, from_version, to_version):
+        if mode != "append":
+            # overwrite replaces the file set; merge/delete
+            # rewrite files in place-by-reference — either way the
+            # file-set difference stops meaning "appended rows"
+            raise ValueError(
+                f"read_version_delta: version {v} is a {mode} — "
+                "the file-set delta is not an append set; diff "
+                "contents with dataset_diff instead"
+            )
+        new += added
     ddir, _ = _snapshot_paths(table_dir)
-    if not new:
-        from pyspark.sql import types as _T
-
-        return local_df(spark, [], _T.StructType.fromJson(to_man["schema"]))
-    return _read_snapshot_files(spark, ddir, new, to_man["schema"])
+    return _read_snapshot_files(
+        spark, ddir, new, _read_manifest(table_dir, to_version)["schema"]
+    )
 
 
 def read_version_changes(
@@ -1238,11 +1280,9 @@ def read_version_changes(
     versions = snapshot_versions(table_dir)
     if to_version is None:
         to_version = versions[-1] if versions else 0
-    for v in (from_version, to_version):
-        if v not in versions:
-            raise ValueError(f"version {v} not in {versions}")
-    if from_version > to_version:
-        raise ValueError(f"from_version {from_version} > to_version {to_version}")
+    if from_version not in versions:
+        raise ValueError(f"version {from_version} not in {versions}")
+    diffs = list(_commit_diffs(table_dir, versions, from_version, to_version))
     ddir, _ = _snapshot_paths(table_dir)
     to_schema = _read_manifest(table_dir, to_version)["schema"]
     out_cols = [f["name"] for f in to_schema["fields"]]
@@ -1253,18 +1293,7 @@ def read_version_changes(
         ).withColumn("_commit_version", F.lit(v))
 
     pieces: list[DataFrame] = []
-    prev_files = set(
-        _manifest_file_sets(table_dir, _read_manifest(table_dir, from_version))[0]
-    )
-    for v in versions:
-        if not (from_version < v <= to_version):
-            continue
-        man = _read_manifest(table_dir, v)
-        mode = man.get("mode")
-        files = _manifest_file_sets(table_dir, man)[0]
-        added = [f for f in files if f not in prev_files]
-        dropped = [f for f in prev_files if f not in set(files)]
-        prev_files = set(files)
+    for v, mode, added, dropped in diffs:
         if mode == "append":
             if added:
                 pieces.append(
@@ -1282,16 +1311,8 @@ def read_version_changes(
                 "unbounded; restart the consumer from version "
                 f"{v} (time-travel reads still serve every version)"
             )
-        post = (
-            _read_snapshot_files(spark, ddir, added, to_schema)
-            if added
-            else local_df(spark, [], T.StructType.fromJson(to_schema))
-        )
-        pre = (
-            _read_snapshot_files(spark, ddir, dropped, to_schema)
-            if dropped
-            else local_df(spark, [], T.StructType.fromJson(to_schema))
-        )
+        post = _read_snapshot_files(spark, ddir, added, to_schema)
+        pre = _read_snapshot_files(spark, ddir, dropped, to_schema)
         # SINGLE-PASS tagged-union diff (r16 — was subtract×2 + three
         # key joins, each re-scanning the commit's files; the r15 gate
         # commit planned 19 Exchanges across the pieces). One union
@@ -1366,10 +1387,10 @@ def read_version_changes(
                 .withColumn("_commit_version", F.lit(v))
             )
     if not pieces:
-        schema = T.StructType.fromJson(to_schema).add(
-            "_change_type", T.StringType()
-        ).add("_commit_version", T.IntegerType())
-        return local_df(spark, [], schema)
+        # an empty feed: an empty insert piece, typed like any other
+        pieces.append(
+            _typed(_read_snapshot_files(spark, ddir, [], to_schema), "insert", to_version)
+        )
     out = pieces[0]
     for p in pieces[1:]:
         out = out.unionByName(p)
@@ -2165,68 +2186,24 @@ def _rel_file_of(uri: str) -> str:
     return "/".join(uri.split("/")[-2:])
 
 
-def _commit_file_replacement(
-    df: DataFrame,
-    table_dir: str,
-    expect_head: int,
-    drop_files: set,
-    mode: str,
-    commit_id: str | None,
-    schema_json: dict | None = None,
-    drop_ranges: list | None = None,
-) -> int:
-    """Commit ``df``'s files as a new version whose file set is
-    (head's files − ``drop_files``) + the new files. The rewrite was
-    computed AGAINST ``expect_head``: if another writer commits first,
-    the computed row set is stale, so this fails with a clear error
-    instead of publishing a lost-update — the caller re-runs the
-    merge/delete against the new head (first-writer-wins optimistic
-    concurrency; blind retry would silently drop the other commit's
-    rows)."""
-    import os
-    import time as _time
-    import uuid
-
-    ddir, mdir = _snapshot_paths(table_dir)
-    man = _read_manifest(table_dir, expect_head)
-    cdir = os.path.join(ddir, f"c{expect_head + 1:08d}-{uuid.uuid4().hex[:12]}")
-    df.write.mode("error").parquet(cdir)
-    new_files = sorted(
-        os.path.join(os.path.basename(cdir), f)
-        for f in os.listdir(cdir)
-        if f.endswith(".parquet")
-    )
-    new_stats = {f: _footer_stats(os.path.join(ddir, f)) for f in new_files}
-    payload = _build_manifest_file_payload(
-        mdir, man, drop_files, new_files, new_stats, drop_ranges=drop_ranges
-    )
-    manifest = {
-        "version": expect_head + 1,
-        "parent": expect_head,
-        "mode": mode,
-        "commit_id": commit_id,
-        "committed_at": _time.time(),
-        # a merge carrying an additive evolution commits the WIDENED
-        # schema; delete/zorder keep the head's
-        "schema": schema_json if schema_json is not None else man["schema"],
-        **payload,
-    }
-    if not _LOG_STORE.publish(mdir, expect_head + 1, manifest):
-        if commit_id is not None:
-            for v in reversed(snapshot_versions(table_dir)):
-                if v <= expect_head:
-                    break
-                try:
-                    if _read_manifest(table_dir, v).get("commit_id") == commit_id:
-                        return v
-                except FileNotFoundError:
-                    continue
-        raise RuntimeError(
-            f"snapshot_{mode}: a concurrent commit beat version "
-            f"{expect_head + 1} in {table_dir} — the rewrite was computed "
-            "against a stale head; re-run against the new head"
-        )
-    return expect_head + 1
+def _retry_rewrite(table_dir: str, commit_id: str | None, max_retries: int, attempt) -> int:
+    """Run ``attempt(head_version, head_manifest)`` — a merge or delete
+    computed against the head and committed through :func:`_commit` —
+    and re-run it against the new head after each SnapshotConflictError,
+    at most ``max_retries`` times. A ``commit_id`` some version already
+    carries returns that version without running it."""
+    retries = 0
+    while True:
+        versions, head = _head(table_dir)
+        hit = _find_commit_id(table_dir, versions, commit_id)
+        if hit is not None:
+            return hit
+        try:
+            return attempt(versions[-1], head)
+        except SnapshotConflictError:
+            if retries >= max_retries:
+                raise
+            retries += 1
 
 
 def snapshot_merge(
@@ -2256,8 +2233,9 @@ def snapshot_merge(
       pre-merge files — vacuum reclaims them when it ages out;
     - **optimistic concurrency**: the commit publishes against the
       head the rewrite was computed from; if a concurrent writer
-      lands first this raises (re-run against the new head) rather
-      than silently dropping the other commit's rows —
+      lands first this raises SnapshotConflictError (re-run against
+      the new head) rather than silently dropping the other commit's
+      rows —
       ``max_retries=N`` automates that re-run: the WHOLE merge
       (candidates, touched set, rewrite) recomputes against the new
       head up to N times, the Delta conflict-retry shape. ``commit_id``
@@ -2270,37 +2248,17 @@ def snapshot_merge(
 
     After a merge, version deltas are no longer append sets —
     read_version_delta refuses across it, same as overwrite."""
-    import os
-
     from pyspark.sql import functions as F
 
-    versions = snapshot_versions(table_dir)
-    if not versions:
-        raise FileNotFoundError(f"no snapshot versions in {table_dir}")
-    if commit_id is not None:
-        hit = _find_commit_id(table_dir, versions, commit_id)
-        if hit is not None:
-            return hit
-    head_v = versions[-1]
-    man = _read_manifest(table_dir, head_v)
-
-    # names + types must match head columns; updates may additionally
-    # ADD nullable columns (r14 additive evolution — the committed
-    # manifest then carries the widened schema and untouched old files
-    # null-fill it on read). Drops/renames/retypes raise here and go
-    # through mode='overwrite'.
-    commit_schema, _ = _evolve_schema(man["schema"], updates.schema)
     ddir, _ = _snapshot_paths(table_dir)
 
-    # The per-merge fixed cost is Spark JOB LAUNCHES, not data (a CDC
-    # batch is tiny; the r13 sweep showed the streaming merge sink
-    # flat across a 1000× sf span — per-batch constant only). So:
-    # cache the updates once (every downstream job re-reads them), and
-    # fuse the duplicate-key check + key-bounds scan into ONE job over
-    # one keyed aggregate whose exchange the semi-join's distinct-keys
-    # side then REUSES (same grouping keys → same shuffle).
-    updates = updates.persist()
-    try:
+    def attempt(head_v: int, man: dict) -> int:
+        # names + types must match head columns; updates may additionally
+        # ADD nullable columns (additive evolution — the committed
+        # manifest then carries the widened schema and untouched old files
+        # null-fill it on read). Drops/renames/retypes raise here and go
+        # through mode='overwrite'.
+        commit_schema, _ = _evolve_schema(man["schema"], updates.schema)
         per_key = updates.groupBy(*key_cols).agg(F.count(F.lit(1)).alias("_n"))
         probe = per_key.select(
             F.max("_n").alias("_maxn"),
@@ -2350,38 +2308,25 @@ def snapshot_merge(
             new_df = base.join(keys, key_cols, "left_anti").unionByName(updates)
         else:
             new_df = updates
-        return _snapshot_merge_commit(
-            spark, new_df, table_dir, head_v, touched, commit_id,
-            updates, key_cols, max_retries, commit_schema, ranges,
+        # a rewrite commits its head's schema: hand _commit the head
+        # under the evolved one
+        return _commit(
+            new_df, table_dir, "merge", commit_id, head_v,
+            {**man, "schema": commit_schema}, drop=touched, drop_ranges=ranges,
         )
+
+    # The per-merge fixed cost is Spark JOB LAUNCHES, not data (a CDC
+    # batch is tiny; a sweep showed the streaming merge sink flat
+    # across a 1000× sf span — per-batch constant only). So:
+    # cache the updates once (every downstream job re-reads them), and
+    # fuse the duplicate-key check + key-bounds scan into ONE job over
+    # one keyed aggregate whose exchange the semi-join's distinct-keys
+    # side then REUSES (same grouping keys → same shuffle).
+    updates = updates.persist()
+    try:
+        return _retry_rewrite(table_dir, commit_id, max_retries, attempt)
     finally:
         updates.unpersist()
-
-
-def _snapshot_merge_commit(
-    spark, new_df, table_dir, head_v, touched, commit_id,
-    updates, key_cols, max_retries, commit_schema, ranges=None,
-):
-    try:
-        return _commit_file_replacement(
-            new_df, table_dir, head_v, touched, "merge", commit_id,
-            schema_json=commit_schema, drop_ranges=ranges,
-        )
-    except RuntimeError:
-        if max_retries <= 0:
-            raise
-        # a concurrent commit moved the head: the rewrite is stale —
-        # recompute everything against the NEW head (lost-update-safe
-        # by construction; the stale data dir stays unreferenced and
-        # vacuum sweeps it)
-        return snapshot_merge(
-            spark,
-            table_dir,
-            updates,
-            key_cols,
-            commit_id=commit_id,
-            max_retries=max_retries - 1,
-        )
 
 
 def snapshot_delete(
@@ -2409,28 +2354,13 @@ def snapshot_delete(
     - a delete matching NOTHING commits nothing and returns the head
       version unchanged;
     - old versions still see the deleted rows (time travel) until
-      vacuumed; read_version_delta refuses across a delete."""
-    import os
-
+      vacuumed; read_version_delta refuses across a delete;
+    - ``commit_id`` and ``max_retries`` keep snapshot_merge's contract:
+      a concurrent commit raises SnapshotConflictError, or re-runs the
+      whole delete against the new head up to ``max_retries`` times."""
     from pyspark.sql import functions as F
 
-    versions = snapshot_versions(table_dir)
-    if not versions:
-        raise FileNotFoundError(f"no snapshot versions in {table_dir}")
-    if commit_id is not None:
-        hit = _find_commit_id(table_dir, versions, commit_id)
-        if hit is not None:
-            return hit
-    head_v = versions[-1]
-    man = _read_manifest(table_dir, head_v)
     ddir, _ = _snapshot_paths(table_dir)
-    m_files, m_stats = _manifest_file_sets(table_dir, man, prune)
-    candidates = (
-        _intersecting_files(m_files, m_stats, prune) if prune else list(m_files)
-    )
-    if not candidates:
-        return head_v
-    cand_df = _read_snapshot_files(spark, ddir, candidates, man["schema"])
     # SQL DELETE semantics: a predicate that evaluates to NULL does
     # NOT match — such rows must be KEPT. ``~predicate`` alone is
     # NULL for them (and filter drops NULL), which would silently
@@ -2438,37 +2368,34 @@ def snapshot_delete(
     # coalesce to FALSE makes the match test three-valued-logic safe
     # in BOTH the touched-file probe and the kept-rows rewrite.
     matches = F.coalesce(predicate, F.lit(False))
-    touched = {
-        _rel_file_of(r["__file"])
-        for r in cand_df.withColumn("__file", F.input_file_name())
-        .filter(matches)
-        .select("__file")
-        .distinct()
-        .collect()
-    }
-    if not touched:
-        return head_v
-    kept_rows = _read_snapshot_files(
-        spark, ddir, sorted(touched), man["schema"]
-    ).filter(~matches)
-    try:
-        return _commit_file_replacement(
-            kept_rows, table_dir, head_v, touched, "delete", commit_id,
-            drop_ranges=prune,
+
+    def attempt(head_v: int, man: dict) -> int:
+        m_files, m_stats = _manifest_file_sets(table_dir, man, prune)
+        candidates = (
+            _intersecting_files(m_files, m_stats, prune) if prune else list(m_files)
         )
-    except RuntimeError:
-        if max_retries <= 0:
-            raise
-        # same conflict-retry shape as snapshot_merge: recompute the
-        # touched set and rewrite against the new head
-        return snapshot_delete(
-            spark,
-            table_dir,
-            predicate,
-            prune=prune,
-            commit_id=commit_id,
-            max_retries=max_retries - 1,
+        if not candidates:
+            return head_v
+        cand_df = _read_snapshot_files(spark, ddir, candidates, man["schema"])
+        touched = {
+            _rel_file_of(r["__file"])
+            for r in cand_df.withColumn("__file", F.input_file_name())
+            .filter(matches)
+            .select("__file")
+            .distinct()
+            .collect()
+        }
+        if not touched:
+            return head_v
+        kept_rows = _read_snapshot_files(
+            spark, ddir, sorted(touched), man["schema"]
+        ).filter(~matches)
+        return _commit(
+            kept_rows, table_dir, "delete", commit_id, head_v, man,
+            drop=touched, drop_ranges=prune,
         )
+
+    return _retry_rewrite(table_dir, commit_id, max_retries, attempt)
 
 
 def snapshot_compact(
@@ -2485,10 +2412,7 @@ def snapshot_compact(
     pre-compaction versions age out."""
     import os
 
-    versions = snapshot_versions(table_dir)
-    if not versions:
-        raise FileNotFoundError(f"no snapshot versions in {table_dir}")
-    man = _read_manifest(table_dir, versions[-1])
+    _, man = _head(table_dir)
     ddir, _ = _snapshot_paths(table_dir)
     m_files = _manifest_file_sets(table_dir, man)[0]
     paths = [os.path.join(ddir, f) for f in m_files]
@@ -2524,10 +2448,7 @@ def snapshot_zorder(
     vacuumed."""
     import os
 
-    versions = snapshot_versions(table_dir)
-    if not versions:
-        raise FileNotFoundError(f"no snapshot versions in {table_dir}")
-    man = _read_manifest(table_dir, versions[-1])
+    _, man = _head(table_dir)
     ddir, _ = _snapshot_paths(table_dir)
     df = _read_snapshot_files(
         spark, ddir, _manifest_file_sets(table_dir, man)[0], man["schema"]

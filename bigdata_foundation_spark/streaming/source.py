@@ -135,18 +135,6 @@ class _CdfDiffPartition(InputPartition):
         self.preimages = preimages
 
 
-def _manifest(table_dir: str, version: int) -> dict:
-    from bigdata_foundation_spark import io as bio
-
-    return bio._read_manifest(table_dir, version)
-
-
-def _files_of(table_dir: str, man: dict) -> list:
-    from bigdata_foundation_spark import io as bio
-
-    return bio._manifest_file_sets(table_dir, man)[0]
-
-
 def _capped_end(base: int, versions: list, n_files, cap: int) -> int:
     """Largest version the offset may advance to from ``base`` under a
     ~``cap``-new-files budget. Versions are atomic: at least one
@@ -245,17 +233,11 @@ class SnapshotStreamReader(DataSourceStreamReader):
         import os
 
         ddir, _ = bio._snapshot_paths(self._table_dir)
-        prev = [
-            set(_files_of(self._table_dir, _manifest(self._table_dir, base)))
-            if base in versions
-            else set()
-        ]
+        diffs = bio._commit_diffs(self._table_dir, versions, base, head)
         UNIT = 1_000_000  # integer budget resolution per cap
 
         def cost(v: int) -> int:
-            files = set(_files_of(self._table_dir, _manifest(self._table_dir, v)))
-            new = files - prev[0]
-            prev[0] = files
+            _, _, new, _ = next(diffs)
             frac = 0.0
             if self._max_files is not None:
                 frac = max(frac, len(new) / self._max_files)
@@ -299,24 +281,14 @@ class SnapshotStreamReader(DataSourceStreamReader):
                 "cannot compute the append delta — restart the stream "
                 "with a fresh checkpoint"
             )
-        prev_files = (
-            set(_files_of(self._table_dir, _manifest(self._table_dir, lo)))
-            if lo in versions
-            else set()
-        )
         import os
 
         ddir, _ = bio._snapshot_paths(self._table_dir)
         parts: list = []
         baseline = lo not in versions  # fresh start: no base manifest
-        for v in versions:
-            if not (lo < v <= hi):
-                continue
-            man = _manifest(self._table_dir, v)
-            files = _files_of(self._table_dir, man)
-            mode = man.get("mode")
-            added = [f for f in files if f not in prev_files]
-            dropped = [f for f in prev_files if f not in set(files)]
+        for v, mode, added, dropped in bio._commit_diffs(
+            self._table_dir, versions, lo, hi
+        ):
             if baseline:
                 # the first version a fresh stream sees IS the initial
                 # snapshot — emit its full file set whatever its mode
@@ -353,7 +325,6 @@ class SnapshotStreamReader(DataSourceStreamReader):
                     "later startingVersion, or set ignoreChanges=true to "
                     "skip rewrite commits (their rows are not re-emitted)."
                 )
-            prev_files = set(files)
         return parts
 
     def _plan_insert_files(self, parts, ddir, added, version):
@@ -554,7 +525,7 @@ class SnapshotDataSource(DataSource):
         if not versions:
             raise FileNotFoundError(f"no snapshot versions in {table_dir}")
         anchor = max(v for v in versions if v <= start) if start >= versions[0] else versions[0]
-        schema = StructType.fromJson(_manifest(table_dir, anchor)["schema"])
+        schema = StructType.fromJson(bio._read_manifest(table_dir, anchor)["schema"])
         if str(self.options.get("readchangefeed", "false")).lower() == "true":
             schema = schema.add(_CDF_TYPE_COL, StringType()).add(
                 _CDF_VERSION_COL, IntegerType()

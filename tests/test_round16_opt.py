@@ -44,9 +44,7 @@ def test_change_feed_mixed_dupkey_update_delete(spark, tmp_path):
     man = bio._read_manifest(tdir, v1)
     files = bio._manifest_file_sets(tdir, man)[0]
     post = spark.createDataFrame([(1, "c"), (2, "x")], "k int, s string").coalesce(1)
-    v2 = bio._commit_file_replacement(
-        post, tdir, v1, set(files), "delete", None
-    )
+    v2 = bio._commit(post, tdir, "delete", None, v1, man, drop=set(files))
 
     feed = bio.read_version_changes(spark, tdir, v1, v2, key_cols=["k"])
     got = sorted(
@@ -100,7 +98,7 @@ def test_change_feed_null_key_and_values(spark, tmp_path):
     post = spark.createDataFrame(
         [(None, "A"), (1, "y"), (2, "x")], "k int, s string"
     ).coalesce(1)
-    v2 = bio._commit_file_replacement(post, tdir, v1, set(files), "merge", None)
+    v2 = bio._commit(post, tdir, "merge", None, v1, man, drop=set(files))
     feed = bio.read_version_changes(spark, tdir, v1, v2, key_cols=["k"])
     got = sorted(
         ((r["k"] if r["k"] is not None else -99), r["_change_type"], r["s"])
