@@ -1,48 +1,54 @@
-"""Distributed BSP shortest-path kernel (whole-frontier relaxation).
+"""Distributed BSP shortest-path kernels: one keyed relaxation loop.
 
-The scale path for graphs that do NOT fit in one executor's memory:
-state is a DataFrame ``(node, dist, path)`` advanced by joining the
-improvement frontier against the edge table each superstep —
-effectively delta-stepping where the bucket is "the whole frontier"
-(the reference's ``delta`` knob, neo4j-code.txt:51, is a scheduling
-detail with no effect on results; SURVEY.md §2.2 G2).
+The scale path for graphs that do NOT fit in one executor's memory.
+Every kernel here runs the same superstep, :func:`_relax`, over a state
+DataFrame ``(key..., dist, payload...)`` keyed by ``node`` (one source),
+``(source, node)`` (a wave of sources, :func:`bsp_multi_sssp`) or
+``(pid, node)`` (a wave of Yen spur probes, :func:`_bsp_probe_wave`):
 
-Scale design decisions (SURVEY.md §4.3 hard-parts list):
+1. expand the frontier (last superstep's improvements) over the edge
+   table into candidates — the one step each caller supplies, carrying
+   its target bound, reverse-distance join and edge/node masks;
+2. keep the best candidate per key: ``min(dist)``, or the minimum
+   ``(dist, payload...)`` struct when a payload (path, parent) rides
+   along;
+3. keep the candidates that improve on the state;
+4. merge them: state left-anti improvements ∪ improvements;
+5. every 8 supersteps, flatten the state with ``localCheckpoint``;
+6. stop when nothing improves, or at ``max_supersteps``.
 
-* **Lineage discipline** — ``localCheckpoint(eager=True)`` on every
-  superstep's improvement frontier truncates the iterated-join plan;
-  without it the Catalyst plan doubles per iteration.
-* **Convergence without extra actions** — the frontier is checkpointed
-  then counted; the same materialized result feeds the next join, so
-  each superstep is exactly one job.
-* **Multigraph handling** — parallel edges are pre-aggregated to
-  ``min(cost)`` per (src, dst) *inside the kernel projection only*
-  (storage keeps the multigraph, per operator I6): distances are
-  unaffected and the join fan-out halves.
-* **Goal-directed pruning (A*/early stop)** — candidates with
-  ``dist + h(node) >= best-known target distance`` are dropped, the
-  BSP analog of A*'s OPEN-list pruning / Dijkstra's settled-target
-  early exit. h is a column expression (Euclidean on planar coords),
-  evaluated JVM-side.
-* **Adaptive broadcast supersteps (r8, shapes corrected r9)** — while
-  the frontier is small (its exact size is known: it is last step's
-  materialized improvements) and the candidate bound |frontier| ×
-  max-out-degree stays under the broadcast budget, every per-superstep
-  join pins the small side as a SUPPORTED broadcast build (the r8
-  right-outer hint was an unsupported BroadcastHashJoin shape that
-  silently planned a both-sides SortMergeJoin; r9 decomposes the
-  improvement test into inner-"defeated" + left-anti, both
-  build-right). The improvement test reads the settled BASE checkpoint
-  plus the pending frontiers directly, so the state lineage is only
-  evaluated at its periodic flatten. Single-source defaults the
-  threshold ON (high-diameter runs live in the small-frontier regime);
-  multi-source defaults it OFF — r9's A/B shows the all-shuffle run
-  keeps the state hash-partitioned on the key through localCheckpoint
-  and reuses that Exchange every wide superstep, which mixed broadcast
-  steps forfeit (243 vs 308 s on the 64-source 1M-edge wave,
-  bit-exact; KERNEL_BENCH §r9). Partition width tracks
-  ~128k rows/partition with a floor of 8 — small-frontier supersteps
-  are task-scheduling bound, not data bound.
+That is delta-stepping where the bucket is "the whole frontier" (the
+reference's ``delta`` knob, neo4j-code.txt:51, is a scheduling detail
+with no effect on results; SURVEY.md §2.2 G2).
+
+What holds for every caller (SURVEY.md §4.3 hard-parts list):
+
+* **Lineage discipline** — each superstep's improvements are
+  materialized with ``localCheckpoint(eager=True)``, which truncates
+  the iterated-join plan (without it the plan doubles per superstep);
+  the same materialized frame is counted and feeds the next expansion.
+* **Multigraph handling** — parallel edges are reduced to
+  ``min(cost)`` per (src, dst) inside the kernel projection only
+  (storage keeps the multigraph, per operator I6). Yen's probes reduce
+  after their masks apply instead: masking the cheapest parallel edge
+  must expose the next-cheapest one.
+* **Goal-directed pruning** — a candidate with ``dist + h(node) >=
+  best-known target distance`` can never improve the answer and is
+  dropped: A*'s OPEN-list pruning, Dijkstra's settled-target exit.
+* **Adaptive broadcast supersteps, single source only** — while the
+  frontier holds ≤ ``_BROADCAST_FRONTIER_ROWS`` rows (known exactly:
+  it is last superstep's counted improvements) and the candidate bound
+  |frontier| × max-out-degree stays ≤ ``_BROADCAST_CANDIDATE_ROWS``,
+  every join of the superstep broadcasts its small side, in shapes
+  BroadcastHashJoin supports (a build-right inner join and left-anti
+  joins). Wider supersteps take the shuffle shapes; the gate is
+  per superstep. Multi-source and probe waves always shuffle: their
+  candidate sets multiply by the wave width, and mixing broadcast
+  supersteps into a 64-source expander wave measured 308 s against
+  243 s shuffle-only, bit-exact (KERNEL_BENCH §r9, mechanism §r10).
+* **Partition width** — the state flattens to ~128k rows per
+  partition with a floor of 8: small-frontier supersteps are
+  task-scheduling bound, not data bound (KERNEL_BENCH §r8).
 
 Feed these kernels a ``src``-bucketed edge table
 (``etl.load_graph(..., bucketed=True)`` / ``io.write_bucketed``) and
@@ -63,11 +69,16 @@ frontier hop), so benches report it next to wall time.
 
 from __future__ import annotations
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from bigdata_foundation_spark._local import local_df
+
+# Single-source broadcast-superstep gates (KERNEL_BENCH §r8, §r9).
+_BROADCAST_FRONTIER_ROWS = 65_536
+_BROADCAST_CANDIDATE_ROWS = 65_536
 
 
 def _checkpoint_union_state(df: DataFrame) -> DataFrame:
@@ -103,6 +114,106 @@ def _checkpoint_union_state(df: DataFrame) -> DataFrame:
         return df.localCheckpoint(eager=True)
     finally:
         spark.conf.set(key, old)
+
+
+def _width(spark: SparkSession, rows: int) -> int:
+    """Partitions for ``rows`` rows: ~128k per partition, floor 8,
+    capped at the session's shuffle width. Measured 710 → 456
+    ms/superstep on the 520×520 grid from the task-count cut alone
+    (KERNEL_BENCH §r8)."""
+    shuffle = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+    return min(shuffle, max(8, rows // 131_072))
+
+
+def _relax(
+    spark: SparkSession,
+    seed: list,
+    schema: T.StructType,
+    key: list[str],
+    expand,
+    max_supersteps: int,
+    max_degree: int = 0,
+    on_improved=None,
+) -> tuple[DataFrame, int]:
+    """The keyed relaxation loop; returns ``(state, supersteps)``.
+
+    ``seed`` rows (of ``schema``: the ``key`` columns, ``dist``, then
+    the payload columns) are the first frontier. ``expand(f)`` maps
+    the frontier, aliased ``f`` (and broadcast-hinted on a broadcast
+    superstep), to candidate rows carrying at least the schema's
+    columns; extra columns are dropped by the per-key minimum.
+    ``on_improved(improved)`` sees each non-empty improvement frame,
+    e.g. to tighten the caller's target bound. ``max_degree > 0``
+    turns on the adaptive broadcast supersteps (module docstring);
+    0 keeps every superstep on the shuffle shapes."""
+    payload = [c for c in schema.fieldNames() if c not in key and c != "dist"]
+    carried = ["dist", *payload]
+    state = local_df(spark, seed, schema).localCheckpoint(eager=True)
+    frontier = base = state
+    pending: list[DataFrame] = []
+    n_frontier = settled = len(seed)
+    small = max_degree > 0 and n_frontier <= _BROADCAST_FRONTIER_ROWS
+    dirty = False
+    step = 0
+    for step in range(1, max_supersteps + 1):
+        f = frontier.alias("f")
+        cand = expand(F.broadcast(f) if small else f)
+        if payload:
+            best_cand = (
+                cand.groupBy(*key)
+                .agg(F.min(F.struct(*carried)).alias("m"))
+                .select(*key, *[F.col(f"m.{c}").alias(c) for c in carried])
+            )
+        else:
+            best_cand = cand.groupBy(*key).agg(F.min("dist").alias("dist"))
+        if small and n_frontier * max_degree <= _BROADCAST_CANDIDATE_ROWS:
+            # Two-join EXISTS decomposition, both joins build-right
+            # broadcasts of the small candidate side while the state
+            # only streams: `defeated` = candidate keys a known row
+            # already reaches at <= dist, `improved` = the rest. EXISTS
+            # is order-insensitive across state versions, so it reads
+            # the settled base checkpoint ∪ the frontiers pending
+            # since, never replaying the state lineage between flattens.
+            best_cand = best_cand.coalesce(1).localCheckpoint(eager=True)
+            known = base.select(*key, "dist")
+            for p in pending:
+                known = known.unionByName(p.select(*key, "dist"))
+            defeated = (
+                known.alias("s")
+                .join(F.broadcast(best_cand.alias("c")), key, "inner")
+                .filter(F.col("s.dist") <= F.col("c.dist"))
+                .select(*key)
+            )
+            improved = best_cand.join(F.broadcast(defeated), key, "left_anti")
+        else:
+            improved = (
+                best_cand.alias("c")
+                .join(state.alias("s"), key, "left")
+                .filter(F.col("s.dist").isNull() | (F.col("c.dist") < F.col("s.dist")))
+                .select(*key, *[F.col(f"c.{c}").alias(c) for c in carried])
+            )
+        improved = improved.localCheckpoint(eager=True)
+        n_frontier = improved.count()
+        if n_frontier:
+            small = max_degree > 0 and n_frontier <= _BROADCAST_FRONTIER_ROWS
+            settled += n_frontier
+            merged = F.broadcast(improved) if small else improved
+            state = state.join(merged, key, "left_anti").unionByName(improved)
+            dirty = True
+        if dirty and (n_frontier == 0 or step % 8 == 0 or step == max_supersteps):
+            # coalesce (narrow) before materializing: a broadcast
+            # anti-join passes partitions through, so each union would
+            # otherwise add partitions to the state forever.
+            state = _checkpoint_union_state(state.coalesce(_width(spark, settled)))
+            base, pending, dirty = state, [], False
+        elif n_frontier:
+            pending.append(improved)
+        if n_frontier == 0:
+            break
+        frontier = improved
+        if on_improved is not None:
+            on_improved(improved)
+    return state, step
 
 
 _STATE_SCHEMA = T.StructType(
@@ -154,13 +265,8 @@ def bsp_sssp(
     nodes: DataFrame | None = None,
     use_heuristic: bool = False,
     max_supersteps: int = 10_000,
-    checkpoint_state_every: int = 8,
     stats: dict | None = None,
     carry_paths: bool = True,
-    broadcast_frontier_rows: int = 65_536,
-    broadcast_candidate_rows: int = 65_536,
-    prune_edge_probe: int = 0,
-    edge_storage_level: str = "MEMORY_AND_DISK",
 ) -> DataFrame:
     """Single-source shortest distances (and paths) by BSP relaxation.
 
@@ -178,71 +284,20 @@ def bsp_sssp(
     superstep at ~2s; parent rows keep it near the small-graph floor).
     Distances are bit-identical either way; full paths are recovered
     on demand with :func:`reconstruct_paths` from the parent forest.
+    ``paths.sssp`` runs this way: it returns distances only.
 
-    ADAPTIVE BROADCAST SUPERSTEPS (r8, corrected r9 — the r8 "flipped
-    right-outer broadcast" was an unsupported BroadcastHashJoin shape
-    that silently fell back to a SortMergeJoin exchanging both sides;
-    advisor finding, fixed this round). While the frontier holds ≤
-    ``broadcast_frontier_rows`` rows (known exactly — it is last
-    step's materialized ``improved``) AND the candidate bound
-    |frontier| × max-out-degree stays ≤ ``broadcast_candidate_rows``
-    (the per-THIS-step gate: the improvement join's build side is the
-    candidate set, which a hub fan-out can multiply far past the
-    frontier size), the superstep runs only SUPPORTED broadcast
-    builds: frontier → edges (hash probe of the cached edge scan — no
-    edge-side sort or frontier Exchange), then the improvement test as
-    a two-join EXISTS decomposition — ``defeated`` = candidate nodes
-    already reached at ≤ dist by a settled-base ∪ pending-frontier
-    row (inner join, candidates broadcast), ``improved`` = candidates
-    left-anti ``defeated`` (both build-right shapes BroadcastHashJoin
-    actually supports) — and improvements → state anti-join (broadcast
-    build-right, supported). The settled base is the last periodic
-    state checkpoint and ``pending`` the tiny frontiers since, so the
-    per-superstep anti∪union state LINEAGE is evaluated only at its
-    every-``checkpoint_state_every`` flatten, never replayed inside a
-    superstep. The improvement frontier also coalesces to ONE
-    partition before its checkpoint — a wavefront of a few thousand
-    rows does not want 32 scheduled tasks. Distances are BIT-IDENTICAL
-    (same per-row arithmetic, same min-struct merge; EXISTS-defeat is
-    order-insensitive across state versions). Frontiers or candidate
-    bounds past their thresholds — the expander regime, where
-    broadcasting would collect megabytes to the driver — fall back to
-    the r7 shuffle shapes for exactly that superstep; the gates are
-    per-step, so one wide wave does not pin the whole run to shuffle
-    plans. Measured deltas: KERNEL_BENCH §BSP r9 row.
-
-    FRONTIER-PRUNED EDGE PROBE (``prune_edge_probe`` > 0, r9): while
-    the frontier holds at most that many rows (and no A* heuristic is
-    attached), candidate generation re-reads the ORIGINAL ``roads``
-    input with a literal ``src IN (frontier ids)`` filter instead of
-    probing the full cached projection — on a src-bucketed table the
-    scan prunes whole bucket files, on plain parquet the IN predicate
-    prunes row groups, so the probe cost tracks |frontier| rather than
-    |E|. This is the only probe shape that survives past
-    cache-resident edge counts (a 25B-edge table cannot be scanned
-    per superstep) — and it is ONLY for that regime: below it, the
-    per-superstep plan/scan/re-aggregate overhead loses to the cached
-    in-memory probe decisively (measured 521 → 1688 s on the 520×520
-    grid, KERNEL_BENCH §r9 — which is why the default is 0/off).
-    The beyond-cache side of the crossover is now MEASURED too
-    (r10, KERNEL_BENCH §r10, where the result of the since-removed
-    A/B script is recorded — the r9 verdict's "validate or retire"
-    ask): with the edge projection DISK_ONLY (what
-    MEMORY_AND_DISK degrades to past memory scale) on a 5M-edge table
-    whose wavefront touches a 3.6k-node lattice, the pruned probe wins
-    0.57× (95.5 → 54.5 s over 119 supersteps, bit-equal) — the full
-    probe's per-superstep cost grows with |E| (0.56 → 0.80 s/step from
-    1M → 5M edges) while the pruned probe stays flat (~0.46 s/step).
-    KERNEL_BENCH §r10. Results are identical either way (same
-    (src, dst, min-cost) rows reach the same join; pinned by
-    test_bsp_pruned_edge_probe_equivalence).
+    The edge projection is cached hash-partitioned on ``src`` at the
+    adaptive width, so every superstep's frontier ⋈ edges join reuses
+    the in-memory partitioning (zero edge-side Exchange, the property
+    a src-bucketed table gives, paid once here for any input). This is
+    the one caller with the adaptive broadcast supersteps: its
+    candidate fan-out is degree-bounded, and high-diameter runs spend
+    most supersteps on small frontiers (KERNEL_BENCH §r9: 698 → 521 s
+    on the 520×520 grid, bit-exact).
     """
-    # Kernel projection: min-cost per (src, dst). Column-pruned and
-    # cached — the analog of GDS's relationshipProjection
-    # (neo4j-code.txt:3–15).
-    edges = (
-        roads.groupBy("src", "dst").agg(F.min("cost").alias("cost"))
-    )
+    # Kernel projection: min-cost per (src, dst) — the analog of GDS's
+    # relationshipProjection (neo4j-code.txt:3–15).
+    edges = roads.groupBy("src", "dst").agg(F.min("cost").alias("cost"))
     if use_heuristic:
         if nodes is None or target is None:
             raise ValueError("A* pruning needs `nodes` coordinates and a target")
@@ -261,202 +316,48 @@ def bsp_sssp(
         ).select("src", "dst", "cost", "h")
     else:
         edges = edges.withColumn("h", F.lit(0.0))
-    # r7: cache the projection HASH-PARTITIONED ON src — every
-    # superstep's frontier ⋈ edges join then reuses the in-memory
-    # partitioning (zero Exchange on the edge side, only the small
-    # frontier shuffles), the same property the src-bucketed table
-    # gives (+17% measured, KERNEL_BENCH §BSP) but paid once here for
-    # ANY input. The groupBy above leaves (src, dst) partitioning,
-    # which a join on src alone cannot reuse.
-    # Adaptive width (r8, measured on the 520×520 grid: 710 → 456
-    # ms/superstep): small-frontier supersteps are TASK-SCHEDULING
-    # bound (~70 tasks/job at 32 partitions), so the edge projection
-    # and the state coalesce both target ~128k rows/partition with a
-    # floor of 8 — at genuinely large inputs the count climbs back to
-    # the session's shuffle parallelism.
-    _shuffle_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    _edge_parts = min(_shuffle_parts, max(8, roads.count() // 131_072))
-    # ``edge_storage_level`` (r10): DataFrame.cache() is
-    # MEMORY_AND_DISK, which at beyond-memory edge counts silently
-    # degrades to disk-resident blocks deserialized per superstep —
-    # the regime the frontier-pruned probe exists for. The knob makes
-    # that regime explicit (and measurable at test scale: the r10
-    # prune A/B persists DISK_ONLY to pay the per-superstep |E|
-    # deserialization a 25B-edge projection would).
-    from pyspark import StorageLevel
-
-    edges = edges.repartition(_edge_parts, "src").persist(
-        getattr(StorageLevel, edge_storage_level)
+    edges = edges.repartition(_width(spark, roads.count()), "src").persist(
+        StorageLevel.MEMORY_AND_DISK
     )
     edges.count()  # materialize the projection once
+    # One degree pass bounds every superstep's candidate set at
+    # |frontier| × max-out-degree before its join runs, so a hub
+    # fan-out never broadcasts a megabyte build side.
+    max_deg = edges.groupBy("src").count().agg(F.max("count")).head()[0] or 1
 
-    if carry_paths:
-        state = local_df(spark, [(source, 0.0, [source])], _STATE_SCHEMA)
-    else:
-        state = local_df(spark, [(source, 0.0, source)], _PARENT_STATE_SCHEMA)
-    state = state.localCheckpoint(eager=True)
-    frontier = state
-    small = broadcast_frontier_rows >= 1  # the 1-row seed frontier
-    n_frontier = 1
-    # Per-THIS-step candidate gating (r9): the improvement join's
-    # build side is the CANDIDATE set, whose size is bounded by
-    # |frontier| × max out-degree — computable before the join from a
-    # one-time degree pass, so a hub fan-out can never broadcast a
-    # megabyte build side. The frontier gate alone (last step's
-    # improved count) under-predicts exactly that fan-out.
-    max_deg = 1
-    if broadcast_frontier_rows >= 1:
-        _d = edges.groupBy("src").agg(F.count(F.lit(1)).alias("_d")).agg(F.max("_d")).head()
-        max_deg = int(_d[0]) if _d and _d[0] is not None else 1
-    # Settled-base + pending-frontier decomposition (r9): `base` is the
-    # last flat checkpoint of the state, `pending` the materialized
-    # improvement frontiers since. The broadcast improvement test reads
-    # base ∪ pending directly, so the per-superstep state LINEAGE
-    # (anti-join ∪ union per step) is only ever evaluated at its
-    # periodic checkpoint — not replayed every superstep.
-    base, pending = state, []
-    _settled = 1
+    carried = (
+        F.concat(F.col("f.path"), F.array(F.col("e.dst"))).alias("path")
+        if carry_paths
+        else F.col("f.node").alias("parent")
+    )
     best_target = float("inf")
 
-    _dirty = False
-    step = 0
-    for step in range(1, max_supersteps + 1):
-        carried = (
-            F.concat(F.col("f.path"), F.array(F.col("e.dst"))).alias("path")
-            if carry_paths
-            else F.col("f.node").alias("parent")
+    def expand(f: DataFrame) -> DataFrame:
+        cand = f.join(edges.alias("e"), F.col("f.node") == F.col("e.src")).select(
+            F.col("e.dst").alias("node"),
+            (F.col("f.dist") + F.col("e.cost")).alias("dist"),
+            carried,
+            F.col("e.h").alias("h"),
         )
-        ccol = "path" if carry_paths else "parent"
-        fr = F.broadcast(frontier.alias("f")) if small else frontier.alias("f")
-        if not use_heuristic and 0 < n_frontier <= prune_edge_probe:
-            # FRONTIER-PRUNED EDGE PROBE (r9 — r8 verdict task 4): read
-            # this superstep's out-edges from the ORIGINAL input with a
-            # literal ``src IN (frontier)`` filter instead of scanning
-            # the full cached projection. On a src-bucketed table Spark
-            # prunes whole BUCKET FILES from the scan (and on plain
-            # parquet the IN predicate still prunes row groups via
-            # min/max stats), so the probe cost tracks the FRONTIER,
-            # not |E| — at 25B edges a per-superstep full scan is not
-            # viable and this is the shape that survives. Costs one
-            # tiny driver collect of the already-materialized frontier
-            # ids plus a per-superstep min-cost re-aggregation over the
-            # pruned rows (frontier-sized). Results identical: the same
-            # (src, dst, min cost) rows reach the same candidate join.
-            ids = [r["node"] for r in frontier.select("node").collect()]
-            probe = (
-                roads.filter(F.col("src").isin(ids))
-                .groupBy("src", "dst")
-                .agg(F.min("cost").alias("cost"))
-                .withColumn("h", F.lit(0.0))
-            )
-            cand = (
-                F.broadcast(frontier.alias("f"))
-                .join(probe.alias("e"), F.col("f.node") == F.col("e.src"))
-                .select(
-                    F.col("e.dst").alias("node"),
-                    (F.col("f.dist") + F.col("e.cost")).alias("dist"),
-                    carried,
-                    F.col("e.h").alias("h"),
-                )
-            )
-        else:
-            cand = (
-                fr
-                .join(edges.alias("e"), F.col("f.node") == F.col("e.src"))
-                .select(
-                    F.col("e.dst").alias("node"),
-                    (F.col("f.dist") + F.col("e.cost")).alias("dist"),
-                    carried,
-                    F.col("e.h").alias("h"),
-                )
-            )
-        if target is not None and best_target < float("inf"):
-            # Goal-directed pruning: a candidate whose admissible lower
-            # bound already exceeds the best known target distance can
-            # never improve the answer.
+        if best_target < float("inf"):
             cand = cand.filter(F.col("dist") + F.col("h") < F.lit(best_target))
+        return cand
 
-        best_cand = (
-            cand.groupBy("node")
-            .agg(F.min(F.struct("dist", ccol)).alias("m"))
-            .select("node", F.col("m.dist").alias("dist"), F.col(f"m.{ccol}").alias(ccol))
-        )
-        if small and n_frontier * max_deg <= broadcast_candidate_rows:
-            # Supported broadcast shapes (r9, advisor finding): a
-            # BroadcastHashJoin cannot BUILD the right side of a
-            # right-outer join, so the r8 "flipped right-outer" hint was
-            # inert — Spark logged it unsupported and planned a
-            # SortMergeJoin exchanging BOTH sides. Decompose the
-            # improvement test into two joins that each broadcast the
-            # small candidate side while the big state only STREAMS:
-            #   defeated = candidate nodes some known (base ∪ pending)
-            #              row already reaches at dist <= cand.dist
-            #              (inner join, build-right: supported);
-            #   improved = candidates anti-joined against defeated
-            #              (left-anti, build-right: supported).
-            # EXISTS semantics make base ∪ pending safe without a
-            # per-node min merge: if ANY version defeats the candidate,
-            # the current (minimal) version does too; new nodes match
-            # nothing and survive the anti. best_cand is materialized
-            # once so its edge probe is not recomputed by its two
-            # consumers.
-            best_cand = best_cand.coalesce(1).localCheckpoint(eager=True)
-            known = base.select("node", "dist")
-            for p in pending:
-                known = known.unionByName(p.select("node", "dist"))
-            defeated = (
-                known.alias("s")
-                .join(F.broadcast(best_cand.alias("c")), "node", "inner")
-                .filter(F.col("s.dist") <= F.col("c.dist"))
-                .select("node")
-            )
-            improved = (
-                best_cand.join(F.broadcast(defeated), "node", "left_anti")
-                .localCheckpoint(eager=True)
-            )
-        else:
-            improved = (
-                best_cand.alias("c")
-                .join(state.alias("s"), "node", "left")
-                .filter(F.col("s.dist").isNull() | (F.col("c.dist") < F.col("s.dist")))
-                .select("node", F.col("c.dist").alias("dist"), F.col(f"c.{ccol}").alias(ccol))
-                .localCheckpoint(eager=True)
-            )
-        n_improved = improved.count()
-        n_frontier = n_improved
-        if n_improved == 0:
-            break
-        small = n_improved <= broadcast_frontier_rows
-        _settled += n_improved
+    def on_improved(improved: DataFrame) -> None:
+        nonlocal best_target
+        trow = improved.filter(F.col("node") == target).select("dist").head()
+        if trow is not None:
+            best_target = min(best_target, float(trow[0]))
 
-        imp = F.broadcast(improved.alias("i")) if small else improved.alias("i")
-        state = state.alias("s").join(imp, "node", "left_anti").unionByName(improved)
-        _dirty = True
-        if step % checkpoint_state_every == 0:
-            # coalesce (narrow) before materializing: the broadcast
-            # anti-join passes partitions THROUGH, so each union would
-            # otherwise add one partition to the state forever (+8 per
-            # checkpoint — ~1000 scheduled tasks/superstep by the end
-            # of a high-diameter run). Width tracks the settled-row
-            # upper bound (~128k rows/partition, floor 8).
-            _state_parts = min(_shuffle_parts, max(8, _settled // 131_072))
-            state = _checkpoint_union_state(state.coalesce(_state_parts))
-            _dirty = False
-            base, pending = state, []
-        else:
-            pending.append(improved)
-        frontier = improved
-
-        if target is not None:
-            trow = improved.filter(F.col("node") == target).select("dist").head()
-            if trow is not None:
-                best_target = min(best_target, float(trow[0]))
-
+    if carry_paths:
+        seed, schema = [(source, 0.0, [source])], _STATE_SCHEMA
+    else:
+        seed, schema = [(source, 0.0, source)], _PARENT_STATE_SCHEMA
+    state, step = _relax(
+        spark, seed, schema, ["node"], expand, max_supersteps, max_deg,
+        on_improved if target is not None else None,
+    )
     edges.unpersist()
-    if _dirty:
-        state = _checkpoint_union_state(
-            state.coalesce(min(_shuffle_parts, max(8, _settled // 131_072)))
-        )
     if stats is not None:
         stats["supersteps"] = step
     return state
@@ -481,18 +382,15 @@ def bsp_multi_sssp(
     roads: DataFrame,
     sources: list[str],
     max_supersteps: int = 10_000,
-    checkpoint_state_every: int = 8,
     edges_pre_aggregated: DataFrame | None = None,
     stats: dict | None = None,
-    broadcast_frontier_rows: int = 0,
-    broadcast_candidate_rows: int = 65_536,
 ) -> DataFrame:
     """Distance-only SSSP from MANY sources in one BSP run: state is
-    ``(source, node, dist)`` keyed by source, so every superstep
-    relaxes all sources' frontiers in the same join — the wave-batched
-    G3 kernel for graphs past the broadcast limit. Memory per wave is
-    |sources| × |reachable| rows, which the caller bounds by batching
-    sources into waves (SURVEY.md §4.3 hard-part 5).
+    ``(source, node, dist)`` keyed by (source, node), so every
+    superstep relaxes all sources' frontiers in the same join — the
+    wave-batched G3 kernel for graphs past the broadcast limit. Memory
+    per wave is |sources| × |reachable| rows, which the caller bounds
+    by batching sources into waves (SURVEY.md §4.3 hard-part 5).
 
     Paths are not carried (the APSP post-pipeline needs distances
     only), so the shuffled state row is 3 narrow columns.
@@ -500,40 +398,9 @@ def bsp_multi_sssp(
     ``edges_pre_aggregated`` lets the caller pass an already-cached
     min-cost (src, dst, cost) projection shared across waves.
 
-    Supersteps whose combined frontier holds ≤
-    ``broadcast_frontier_rows`` rows AND whose candidate bound
-    |frontier| × max-out-degree stays ≤ ``broadcast_candidate_rows``
-    run the adaptive BROADCAST shapes (see :func:`bsp_sssp` —
-    frontier→edges hash probe, two-join EXISTS improvement test,
-    broadcast anti-join; distances bit-identical). The DEFAULT here is
-    0 (shuffle only), the opposite of ``bsp_sssp`` — and r9's A/B
-    shows WHY, beyond r8's late-threshold hypothesis: even with exact
-    per-THIS-step candidate gating the adaptive arm loses on the
-    64-source 1M-edge expander wave (243 s shuffle-only vs 308 s,
-    bit-exact; KERNEL_BENCH §r9).
-
-    MECHANISM CORRECTION (r10): the r9 note attributed the loss to
-    "partitioning reuse through localCheckpoint" — plan inspection in
-    this Spark build REFUTES that specific attribution: a
-    ``localCheckpoint`` taken immediately after ``repartition(P,
-    key)`` plans as a bare ``Scan ExistingRDD`` and a later
-    equi-join re-adds ``Exchange ENSURE_REQUIREMENTS`` over it, i.e.
-    the checkpoint does NOT carry partitioning metadata forward, so
-    no logical-level Exchange elision distinguishes the arms. The
-    MEASURED result stands; the surviving cost asymmetry is
-    mechanical: a broadcast superstep runs TWO extra eager
-    materializations (``best_cand.coalesce(1).localCheckpoint`` and
-    the defeated/improved pipeline) plus their driver round-trips
-    per step, and its 1-partition ``improved`` rows enter the state
-    union unpartitioned — while a shuffle superstep is one eager job
-    whose SMJ work rides the session's full width. Expander waves
-    spend almost all their rows in wide supersteps, so the few cheap
-    broadcast steps cannot buy back their fixed overhead. Pass a
-    positive threshold only for high-diameter many-source waves whose
-    frontiers stay small for MOST of the run (where the single-source
-    win profile applies).
+    Every superstep takes the shuffle shapes (module docstring: the
+    broadcast supersteps lose on multi-source expander waves).
     """
-    _shuffle_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
     if edges_pre_aggregated is not None:
         edges = edges_pre_aggregated
     else:
@@ -542,7 +409,7 @@ def bsp_multi_sssp(
         # wavefront — the whole point is batching), so the per-superstep
         # join is compute-bound and wants every core; the narrow
         # projection was measured 34% SLOWER on the 64-source 1M-edge
-        # wave (254 vs 190 s) before this revert.
+        # wave (254 vs 190 s).
         edges = (
             roads.groupBy("src", "dst")
             .agg(F.min("cost").alias("cost"))
@@ -550,109 +417,24 @@ def bsp_multi_sssp(
             .cache()
         )
         edges.count()
-    e = edges.select(
-        F.col("src").alias("_u"), F.col("dst").alias("_v"), F.col("cost").alias("_w")
+
+    def expand(f: DataFrame) -> DataFrame:
+        return f.join(edges.alias("e"), F.col("f.node") == F.col("e.src")).select(
+            F.col("f.source").alias("source"),
+            F.col("e.dst").alias("node"),
+            (F.col("f.dist") + F.col("e.cost")).alias("dist"),
+        )
+
+    state, step = _relax(
+        spark,
+        [(s, s, 0.0) for s in sources],
+        _MULTI_STATE_SCHEMA,
+        ["source", "node"],
+        expand,
+        max_supersteps,
     )
-
-    state = local_df(
-        spark, [(s, s, 0.0) for s in sources], _MULTI_STATE_SCHEMA
-    ).localCheckpoint(eager=True)
-    frontier = state
-    small = len(sources) <= broadcast_frontier_rows
-    n_frontier = len(sources)
-    # One-time degree bound for the per-THIS-step candidate gate (r9):
-    # each frontier row fans out to at most max-out-degree candidates,
-    # so |frontier| × max_deg bounds the improvement join's broadcast
-    # build side BEFORE the join runs — the fix for the r8 negative
-    # result where the frontier-count gate fired one step late on
-    # |sources|-multiplied candidate sets.
-    max_deg = 1
-    if broadcast_frontier_rows >= 1:
-        _d = e.groupBy("_u").agg(F.count(F.lit(1)).alias("_d")).agg(F.max("_d")).head()
-        max_deg = int(_d[0]) if _d and _d[0] is not None else 1
-    base, pending = state, []
-    _settled = len(sources)
-
-    _dirty = False
-    step = 0
-    for step in range(1, max_supersteps + 1):
-        fr = F.broadcast(frontier.alias("f")) if small else frontier.alias("f")
-        cand = (
-            fr
-            .join(e.alias("e2"), F.col("f.node") == F.col("e2._u"))
-            .select(
-                F.col("f.source").alias("source"),
-                F.col("e2._v").alias("node"),
-                (F.col("f.dist") + F.col("e2._w")).alias("dist"),
-            )
-        )
-        best_cand = cand.groupBy("source", "node").agg(F.min("dist").alias("dist"))
-        on = (F.col("c.source") == F.col("s.source")) & (F.col("c.node") == F.col("s.node"))
-        sel = (
-            F.col("c.source").alias("source"),
-            F.col("c.node").alias("node"),
-            F.col("c.dist").alias("dist"),
-        )
-        if small and n_frontier * max_deg <= broadcast_candidate_rows:
-            # Supported two-join broadcast decomposition — see bsp_sssp
-            # (the r8 right-outer hint was an unsupported build side and
-            # fell back to a both-sides SortMergeJoin; advisor finding).
-            best_cand = best_cand.coalesce(1).localCheckpoint(eager=True)
-            known = base.select("source", "node", "dist")
-            for p in pending:
-                known = known.unionByName(p.select("source", "node", "dist"))
-            defeated = (
-                known.alias("s")
-                .join(F.broadcast(best_cand.alias("c")), ["source", "node"], "inner")
-                .filter(F.col("s.dist") <= F.col("c.dist"))
-                .select("source", "node")
-            )
-            improved = (
-                best_cand.join(F.broadcast(defeated), ["source", "node"], "left_anti")
-                .localCheckpoint(eager=True)
-            )
-        else:
-            improved = (
-                best_cand.alias("c")
-                .join(state.alias("s"), on, "left")
-                .filter(F.col("s.dist").isNull() | (F.col("c.dist") < F.col("s.dist")))
-                .select(*sel)
-                .localCheckpoint(eager=True)
-            )
-        n_improved = improved.count()
-        if n_improved == 0:
-            break
-        small = n_improved <= broadcast_frontier_rows
-        n_frontier = n_improved
-        _settled += n_improved
-        anti = (F.col("s.source") == F.col("i.source")) & (F.col("s.node") == F.col("i.node"))
-        imp = F.broadcast(improved.alias("i")) if small else improved.alias("i")
-        state = (
-            state.alias("s")
-            .join(imp, anti, "left_anti")
-            .unionByName(improved)
-        )
-        _dirty = True
-        if step % checkpoint_state_every == 0:
-            # coalesce before materializing — see bsp_sssp: broadcast
-            # anti-joins pass partitions through, so unions would grow
-            # the state's partition count forever; width tracks the
-            # settled-row upper bound.
-            state = _checkpoint_union_state(
-                state.coalesce(min(_shuffle_parts, max(8, _settled // 131_072)))
-            )
-            _dirty = False
-            base, pending = state, []
-        else:
-            pending.append(improved)
-        frontier = improved
-
     if edges_pre_aggregated is None:
         edges.unpersist()
-    if _dirty:
-        state = _checkpoint_union_state(
-            state.coalesce(min(_shuffle_parts, max(8, _settled // 131_072)))
-        )
     if stats is not None:
         stats["supersteps"] = step
     return state
@@ -686,6 +468,13 @@ _MASK_N_SCHEMA = T.StructType(
     ]
 )
 
+_BOUND_SCHEMA = T.StructType(
+    [
+        T.StructField("pid", T.IntegerType(), True),
+        T.StructField("_bt", T.DoubleType(), True),
+    ]
+)
+
 
 def _edges_with_identity(roads: DataFrame) -> DataFrame:
     """(src, dst, cost, eid): the multigraph with a stable 64-bit edge
@@ -713,9 +502,7 @@ def _bsp_probe_wave(
     probes: list[tuple[int, str, frozenset, frozenset]],
     target: str,
     max_supersteps: int,
-    checkpoint_state_every: int = 8,
     stats: dict | None = None,
-    hops_per_superstep: int = 1,
 ) -> dict[int, tuple[list[str], list[float], list[int], float]]:
     """Run one wave of masked point-to-point probes as a SINGLE
     probe-keyed BSP relaxation. ``probes`` is (pid, spur_node,
@@ -737,6 +524,10 @@ def _bsp_probe_wave(
     concurrently with the reverse BSP that computes ``h`` (r7: the two
     are independent, and overlapping them removes one of the
     sequential BSP latencies that floor Yen's wall time).
+
+    One Bellman-Ford hop per superstep: two hops per materialization
+    halved the superstep count but raised wall time (211 → 241 s at
+    1M edges, KERNEL_BENCH §BSP r7) — these waves are compute-bound.
     """
     mask_e = F.broadcast(
         local_df(
@@ -750,23 +541,11 @@ def _bsp_probe_wave(
             spark, [(pid, n) for pid, _s, _me, mn in probes for n in mn], _MASK_N_SCHEMA
         )
     )
-    state = local_df(
-        spark,
-        [(pid, spur, 0.0, [spur], [], []) for pid, spur, _me, _mn in probes],
-        _PROBE_STATE_SCHEMA,
-    ).localCheckpoint(eager=True)
-    frontier = state
     best: dict[int, float] = {}
-    _dirty = False
 
-    def _relax(fr):
-        """One Bellman-Ford hop from frontier ``fr``: masked edge
-        expansion + h restriction + bound prune, pre-reduced to the
-        best candidate per (pid, node) under the (dist, path...) struct
-        order."""
+    def expand(f: DataFrame) -> DataFrame:
         cand = (
-            fr.alias("f")
-            .join(e.alias("e"), F.col("f.node") == F.col("e.src"))
+            f.join(e.alias("e"), F.col("f.node") == F.col("e.src"))
             .join(
                 mask_e.alias("me"),
                 (F.col("f.pid") == F.col("me.pid")) & (F.col("e.eid") == F.col("me.eid")),
@@ -792,106 +571,27 @@ def _bsp_probe_wave(
             (F.col("h._h") if h is not None else F.lit(0.0)).alias("_h"),
         )
         if best:
-            bt = F.broadcast(
-                local_df(
-                    spark,
-                    list(best.items()),
-                    T.StructType(
-                        [
-                            T.StructField("pid", T.IntegerType(), True),
-                            T.StructField("_bt", T.DoubleType(), True),
-                        ]
-                    ),
-                )
+            bt = F.broadcast(local_df(spark, list(best.items()), _BOUND_SCHEMA))
+            cand = cand.join(bt, "pid", "left").filter(
+                F.col("_bt").isNull() | (F.col("dist") + F.col("_h") < F.col("_bt"))
             )
-            cand = (
-                cand.join(bt, "pid", "left")
-                .filter(F.col("_bt").isNull() | (F.col("dist") + F.col("_h") < F.col("_bt")))
-                .drop("_bt")
-            )
-        cand = cand.drop("_h")
-        return (
-            cand.groupBy("pid", "node")
-            .agg(F.min(F.struct("dist", "path", "cpath", "epath")).alias("m"))
-            .select(
-                "pid",
-                "node",
-                F.col("m.dist").alias("dist"),
-                F.col("m.path").alias("path"),
-                F.col("m.cpath").alias("cpath"),
-                F.col("m.epath").alias("epath"),
-            )
-        )
+        return cand
 
-    for step in range(1, max_supersteps + 1):
-        # hops_per_superstep Bellman-Ford hops inside ONE scheduled
-        # materialization. MEASURED r7 at 1M edges: 2 hops halves the
-        # superstep count (73 -> 39 across the Yen waves) but raises
-        # wall time (211 -> 241s) - these waves are COMPUTE-bound (a
-        # full edge join per hop), so doubling work per materialization
-        # buys nothing; the default stays 1. The knob exists for the
-        # opposite regime - high-diameter graphs with small frontiers,
-        # where the scheduling floor dominates (the 520x520 grid pays
-        # 1039 diameter-bound supersteps). Same fixpoint either way
-        # (Bellman-Ford is indifferent to how many relaxations happen
-        # between materializations); the hop-1 layer rejoins the union
-        # so a 1-hop improvement is never lost.
-        layers = []
-        fr = frontier
-        for _hop in range(max(1, int(hops_per_superstep))):
-            fr = _relax(fr)
-            layers.append(fr)
-        if len(layers) > 1:
-            multi = layers[0]
-            for extra in layers[1:]:
-                multi = multi.unionByName(extra)
-            best_cand = (
-                multi.groupBy("pid", "node")
-                .agg(F.min(F.struct("dist", "path", "cpath", "epath")).alias("m"))
-                .select(
-                    "pid",
-                    "node",
-                    F.col("m.dist").alias("dist"),
-                    F.col("m.path").alias("path"),
-                    F.col("m.cpath").alias("cpath"),
-                    F.col("m.epath").alias("epath"),
-                )
-            )
-        else:
-            best_cand = layers[0]
-        on = (F.col("c.pid") == F.col("s.pid")) & (F.col("c.node") == F.col("s.node"))
-        improved = (
-            best_cand.alias("c")
-            .join(state.alias("s"), on, "left")
-            .filter(F.col("s.dist").isNull() | (F.col("c.dist") < F.col("s.dist")))
-            .select(
-                F.col("c.pid").alias("pid"),
-                F.col("c.node").alias("node"),
-                F.col("c.dist").alias("dist"),
-                F.col("c.path").alias("path"),
-                F.col("c.cpath").alias("cpath"),
-                F.col("c.epath").alias("epath"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        if improved.isEmpty():
-            break
+    def on_improved(improved: DataFrame) -> None:
         for r in improved.filter(F.col("node") == target).select("pid", "dist").collect():
             pid, d = int(r[0]), float(r[1])
             if d < best.get(pid, float("inf")):
                 best[pid] = d
-        anti = (F.col("s.pid") == F.col("i.pid")) & (F.col("s.node") == F.col("i.node"))
-        state = (
-            state.alias("s").join(improved.alias("i"), anti, "left_anti").unionByName(improved)
-        )
-        _dirty = True
-        if step % checkpoint_state_every == 0:
-            state = _checkpoint_union_state(state)
-            _dirty = False
-        frontier = improved
 
-    if _dirty:
-        state = _checkpoint_union_state(state)
+    state, step = _relax(
+        spark,
+        [(pid, spur, 0.0, [spur], [], []) for pid, spur, _me, _mn in probes],
+        _PROBE_STATE_SCHEMA,
+        ["pid", "node"],
+        expand,
+        max_supersteps,
+        on_improved=on_improved,
+    )
     if stats is not None:
         stats["supersteps"] = stats.get("supersteps", 0) + step
         stats["waves"] = stats.get("waves", 0) + 1
@@ -985,7 +685,6 @@ def bsp_yens_k(
                     [(0, source, frozenset(), frozenset())],
                     target,
                     max_supersteps,
-                    8,
                     stats,
                 )
                 h = _fut_h.result()

@@ -415,7 +415,7 @@ def sssp(
     the scale the tier exists for."""
     tier = _tier(roads, strategy, projection, _ALL_TIERS, spill_dir)
     if tier == "bsp":
-        res = _bsp.bsp_sssp(spark, roads, source)
+        res = _bsp.bsp_sssp(spark, roads, source, carry_paths=False)
         return res.select(F.col("node").alias("NodeId"), F.col("dist").alias("distance"))
     return _run_kernel(
         roads,

@@ -578,32 +578,45 @@ def snapshot_versions(table_dir: str) -> list[int]:
 # are unchanged — entries whose version no longer exists (vacuumed)
 # are ignored, so a replay after vacuum re-commits exactly as before,
 # and a recreated table (log restarted below the cached head) resets
-# the cache.
+# the cache. A hit is confirmed against the manifest it names: a table
+# deleted and recreated in the same process can reach the cached head
+# again, and its version numbers then carry other commits.
 _COMMIT_ID_INDEX: dict = {}  # mdir -> [scanned_to_version, {commit_id: version}]
 
 
 def _find_commit_id(table_dir: str, versions: list, commit_id: str | None):
     """Version carrying ``commit_id`` among ``versions``, else None —
-    one manifest read per version per PROCESS, not per call. A version
-    vacuumed between the listing and its read is skipped."""
+    one manifest read per version per PROCESS, not per call, plus one
+    read to confirm a hit (a stale hit rescans the log once). A
+    version vacuumed between the listing and its read is skipped."""
     if commit_id is None or not versions:
         return None
     _, mdir = _snapshot_paths(table_dir)
-    entry = _COMMIT_ID_INDEX.get(mdir)
-    if entry is None or versions[-1] < entry[0]:
-        entry = [0, {}]
-        _COMMIT_ID_INDEX[mdir] = entry
-    for v in versions:
-        if v > entry[0]:
-            try:
-                cid = _read_manifest(table_dir, v).get("commit_id")
-            except FileNotFoundError:
-                cid = None
-            if cid is not None:
-                entry[1][cid] = v
-            entry[0] = v
-    v = entry[1].get(commit_id)
-    return v if v is not None and v in set(versions) else None
+    for _pass in range(2):
+        entry = _COMMIT_ID_INDEX.get(mdir)
+        if entry is None or versions[-1] < entry[0]:
+            entry = [0, {}]
+            _COMMIT_ID_INDEX[mdir] = entry
+        for v in versions:
+            if v > entry[0]:
+                cid = _manifest_commit_id(table_dir, v)
+                if cid is not None:
+                    entry[1][cid] = v
+                entry[0] = v
+        v = entry[1].get(commit_id)
+        if v is None or v not in set(versions):
+            return None
+        if _manifest_commit_id(table_dir, v) == commit_id:
+            return v
+        del _COMMIT_ID_INDEX[mdir]
+    return None
+
+
+def _manifest_commit_id(table_dir: str, version: int) -> str | None:
+    try:
+        return _read_manifest(table_dir, version).get("commit_id")
+    except FileNotFoundError:
+        return None
 
 
 def _read_manifest(table_dir: str, version: int) -> dict:
@@ -646,24 +659,65 @@ def _evolve_schema(head: dict, df_schema) -> tuple[dict, bool]:
             "only ADDING nullable columns evolves in place — drops/renames "
             "go through mode='overwrite'"
         )
-    retyped = [
-        n for n in head_fields if df_fields[n]["type"] != head_fields[n]["type"]
-    ]
+    types = {
+        n: _widen_nested_nullability(f["type"], df_fields[n]["type"])
+        for n, f in head_fields.items()
+    }
+    retyped = [n for n, t in types.items() if t is None]
     if retyped:
         raise ValueError(
             f"snapshot schema: column(s) {retyped} change type; type "
             "changes go through mode='overwrite'"
         )
+    # same columns and types up to nested nullability: the head schema
+    # stays authoritative, its nested types widened where the frame
+    # admits nulls the head does not
+    fields = [{**f, "type": types[f["name"]]} for f in head["fields"]]
     new = [f for f in df_json["fields"] if f["name"] not in head_fields]
-    if not new:
-        # same columns and types; only order/nullability/metadata
-        # differ — the table schema stays authoritative
-        return head, False
-    evolved = {
-        **head,
-        "fields": head["fields"] + [{**f, "nullable": True} for f in new],
-    }
-    return evolved, True
+    evolved = {**head, "fields": fields + [{**f, "nullable": True} for f in new]}
+    return evolved, bool(new)
+
+
+def _widen_nested_nullability(head_type, df_type):
+    """``head_type`` with each nested ``containsNull`` /
+    ``valueContainsNull`` / struct-field ``nullable`` widened to
+    ``df_type``'s, or None when the two differ in anything else. A
+    frame read back from parquet through an explicit schema is
+    all-nullable inside, so comparing these flags as part of the
+    type would reject a table's own rows."""
+    if not (isinstance(head_type, dict) and isinstance(df_type, dict)):
+        return head_type if head_type == df_type else None
+    kind = head_type.get("type")
+    if kind != df_type.get("type"):
+        return None
+    if kind == "array":
+        elem = _widen_nested_nullability(head_type["elementType"], df_type["elementType"])
+        return None if elem is None else {
+            **head_type,
+            "elementType": elem,
+            "containsNull": head_type["containsNull"] or df_type["containsNull"],
+        }
+    if kind == "map":
+        k = _widen_nested_nullability(head_type["keyType"], df_type["keyType"])
+        v = _widen_nested_nullability(head_type["valueType"], df_type["valueType"])
+        return None if k is None or v is None else {
+            **head_type,
+            "keyType": k,
+            "valueType": v,
+            "valueContainsNull": head_type["valueContainsNull"] or df_type["valueContainsNull"],
+        }
+    if kind == "struct":
+        hf, dfs = head_type["fields"], df_type["fields"]
+        if [f["name"] for f in hf] != [f["name"] for f in dfs]:
+            return None
+        fields = []
+        for h, d in zip(hf, dfs):
+            t = _widen_nested_nullability(h["type"], d["type"])
+            if t is None:
+                return None
+            fields.append({**h, "type": t, "nullable": h["nullable"] or d["nullable"]})
+        return {**head_type, "fields": fields}
+    return head_type if head_type == df_type else None
 
 
 # --- manifest format v2: sharded file groups (r13 verdict task 2) ---

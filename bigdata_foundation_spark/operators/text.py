@@ -932,7 +932,6 @@ def stupid_backoff_score(
     id_col: str = "doc_id",
     alpha: float = 0.4,
     k_smoothing: float = 0.5,
-    hashed_keys: bool = False,
 ) -> DataFrame:
     """Stupid Backoff TRIGRAM LM scoring (Brants et al. 2007 §4 — the
     scheme Google used for its distributed web-scale 5-gram LMs,
@@ -968,18 +967,10 @@ def stupid_backoff_score(
     as the backoff denominators), two broadcast scalars (N, V), then
     scoring = one scan-side trigram explode of the SCORED corpus +
     five LEFT keyed joins (tri, bi₁₂, bi₂₃, uni₂, uni₃) + one per-doc
-    avg. ``hashed_keys=True`` swaps every gram key for a scan-side
-    8-byte xxhash64 (count tables aggregate on the hash; probe rows
-    carry (id, five longs); collision contract 2^-64, as
-    dataset_diff). The r12 sf1 A/B (KERNEL_BENCH §r12) found NO
-    winner: warm, strings win ~8% on the small-vocab gate corpus
-    (tables broadcast — no shuffle to shrink) and hashes win ~4%
-    wide-vocab; the r11 "sf1 join tail" turned out to be cold-start
-    codegen (6.0 s cold vs 2.6 s warm, same arm), not shuffle bytes —
-    a trigram probe row's three short strings weigh about the same
-    as five longs. Default stays the collision-free string plan;
-    the flag remains for vocabularies whose gram strings are long
-    (where the byte argument actually bites).
+    avg. The gram keys stay strings: an xxhash64-keyed variant was
+    measured 1.09× slower with the count tables broadcast and only
+    0.96× past broadcast (KERNEL_BENCH §r12), and strings carry no
+    collision contract.
     Returns (id, n_tokens, nll_per_token) with nll the RAW double
     (the family's compare-time rounding contract)."""
     toks_arr = F.filter(
@@ -1004,13 +995,9 @@ def stupid_backoff_score(
         )
 
     tbase = train.select(toks_arr.alias("_ts")).filter(F.size("_ts") > 0)
-    # In hashed mode the count tables aggregate on the 8-byte gram
-    # hash directly — gram STRINGS never enter any shuffle, train or
-    # score side (the hash is computed in the explode stage's codegen).
-    _uni_key = (lambda c: F.xxhash64(c).alias("tok")) if hashed_keys else (lambda c: c.alias("tok"))
     uni = (
         tbase.select(F.explode("_ts").alias("_t"))
-        .select(_uni_key(F.col("_t")))
+        .select(F.col("_t").alias("tok"))
         .groupBy("tok")
         .agg(F.count("*").alias("cu"))
     )
@@ -1023,91 +1010,32 @@ def stupid_backoff_score(
             )
         ).alias("g")
     )
-    if hashed_keys:
-        bi = (
-            bi_raw.select(F.xxhash64("g.a", "g.b").alias("a"))
-            .groupBy("a")
-            .agg(F.count("*").alias("cb"))
-        )
-    else:
-        bi = bi_raw.groupBy(F.col("g.a").alias("a"), F.col("g.b").alias("b")).agg(
-            F.count("*").alias("cb")
-        )
+    bi = bi_raw.groupBy(F.col("g.a").alias("a"), F.col("g.b").alias("b")).agg(
+        F.count("*").alias("cb")
+    )
     tri_raw = tri_explode(tbase.filter(F.size("_ts") >= 3), [])
-    if hashed_keys:
-        tri = (
-            tri_raw.select(F.xxhash64("w1", "w2", "w3").alias("w1"))
-            .groupBy("w1")
-            .agg(F.count("*").alias("ct"))
-        )
-    else:
-        tri = tri_raw.groupBy("w1", "w2", "w3").agg(F.count("*").alias("ct"))
+    tri = tri_raw.groupBy("w1", "w2", "w3").agg(F.count("*").alias("ct"))
 
     base = documents.select(F.col(id_col), toks_arr.alias("_ts")).filter(
         F.size("_ts") >= 3
     )
     pos = tri_explode(base, [F.col(id_col)])
     k, a = float(k_smoothing), float(alpha)
-    if hashed_keys:
-        # r12 join-tail fix (measured A/B in KERNEL_BENCH §r12): the
-        # five probe joins carry 8-byte xxhash64 gram keys computed
-        # SCAN-SIDE in the explode stage, and the probe rows drop the
-        # token strings entirely — each shuffle moves (id, 5 longs)
-        # instead of (id, accumulated gram strings), and every join
-        # compares one long instead of 2–3 strings. Count arithmetic
-        # is untouched; the trade is the engine-standard 2^-64
-        # fingerprint-collision contract (same as dataset_diff).
-        # Arity separates key spaces (tri=3 args, bi=2, uni=1), and
-        # bi12/bi23 (both arity-2) join against the same bi table.
-        joined = (
-            pos.select(
-                F.col(id_col),
-                F.xxhash64("w1", "w2", "w3").alias("_h3"),
-                F.xxhash64("w1", "w2").alias("_h12"),
-                F.xxhash64("w2", "w3").alias("_h23"),
-                F.xxhash64("w2").alias("_h2"),
-                F.xxhash64("w3").alias("_h3u"),
-            )
-            .join(
-                tri.select(F.col("w1").alias("_h3"), "ct"), ["_h3"], "left"
-            )
-            .join(
-                bi.select(F.col("a").alias("_h12"), F.col("cb").alias("cb12")),
-                ["_h12"],
-                "left",
-            )
-            .join(
-                bi.select(F.col("a").alias("_h23"), F.col("cb").alias("cb23")),
-                ["_h23"],
-                "left",
-            )
-            .join(
-                uni.select(F.col("tok").alias("_h2"), F.col("cu").alias("cu2")),
-                ["_h2"],
-                "left",
-            )
-            .join(
-                uni.select(F.col("tok").alias("_h3u"), F.col("cu").alias("cu3")),
-                ["_h3u"],
-                "left",
-            )
+    joined = (
+        pos.join(tri, ["w1", "w2", "w3"], "left")
+        .join(
+            bi.select(F.col("a").alias("w1"), F.col("b").alias("w2"), F.col("cb").alias("cb12")),
+            ["w1", "w2"],
+            "left",
         )
-    else:
-        joined = (
-            pos.join(tri, ["w1", "w2", "w3"], "left")
-            .join(
-                bi.select(F.col("a").alias("w1"), F.col("b").alias("w2"), F.col("cb").alias("cb12")),
-                ["w1", "w2"],
-                "left",
-            )
-            .join(
-                bi.select(F.col("a").alias("w2"), F.col("b").alias("w3"), F.col("cb").alias("cb23")),
-                ["w2", "w3"],
-                "left",
-            )
-            .join(uni.select(F.col("tok").alias("w2"), F.col("cu").alias("cu2")), ["w2"], "left")
-            .join(uni.select(F.col("tok").alias("w3"), F.col("cu").alias("cu3")), ["w3"], "left")
+        .join(
+            bi.select(F.col("a").alias("w2"), F.col("b").alias("w3"), F.col("cb").alias("cb23")),
+            ["w2", "w3"],
+            "left",
         )
+        .join(uni.select(F.col("tok").alias("w2"), F.col("cu").alias("cu2")), ["w2"], "left")
+        .join(uni.select(F.col("tok").alias("w3"), F.col("cu").alias("cu3")), ["w3"], "left")
+    )
     scored = (
         joined.crossJoin(F.broadcast(scalars))
         .select(

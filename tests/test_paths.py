@@ -194,41 +194,72 @@ def test_bsp_dist_only_state_equals_path_carrying(spark):
     assert rec["0"] == ["0"]
 
 
-def test_bsp_pruned_edge_probe_equivalence(spark):
-    """Frontier-pruned edge probe (r9 — r8 verdict task 4): with
-    ``prune_edge_probe`` active the candidate generation reads a
-    ``src IN (frontier)`` filtered scan of the raw input instead of
-    the cached projection — distances AND reconstructed paths must be
-    bit-identical to the unpruned run (same (src, dst, min-cost) rows
-    reach the same join), including when only SOME supersteps qualify
-    (threshold smaller than the widest frontier) and on a multigraph
-    (the per-superstep min-cost re-aggregation)."""
+def test_bsp_grid_equals_broadcast_both_superstep_shapes(spark, monkeypatch):
+    """BSP ≡ broadcast for sssp, dijkstra (path and costs) and astar
+    (cost) on a 6×6 grid with parallel edges, one one-way edge and an
+    unreachable island. The broadcast gates are patched low so every
+    BSP run mixes broadcast and shuffle supersteps. Costs are random
+    with 6 decimals, so shortest paths are unique and tie-breaks do
+    not enter."""
     import random
 
     from bigdata_foundation_spark.graph import bsp as B
 
-    rng = random.Random(23)
-    n = 80
+    rng = random.Random(5)
+    side = 6
     edges = []
-    for u in range(n):
-        for _ in range(3):
-            v = rng.randrange(n)
-            if v != u:
-                edges.append((str(u), str(v), round(rng.uniform(1, 10), 6)))
-    # parallel edges: pruned path must re-aggregate min-cost per step
-    edges += [(a, b, c + 5.0) for a, b, c in edges[:40]]
+    for r in range(side):
+        for c in range(side):
+            u = f"g{r}_{c}"
+            for dr, dc in ((0, 1), (1, 0)):
+                if r + dr < side and c + dc < side:
+                    v = f"g{r + dr}_{c + dc}"
+                    edges.append((u, v, round(rng.uniform(1, 10), 6)))
+                    if (u, v) != ("g2_2", "g2_3"):  # the one-way edge
+                        edges.append((v, u, round(rng.uniform(1, 10), 6)))
+    edges += [(a, b, round(c + rng.uniform(-0.5, 3), 6)) for a, b, c in edges[::7]]
+    edges += [("i0", "i1", 1.0), ("i1", "i0", 1.0)]  # unreachable island
     roads = spark.createDataFrame(edges, "src string, dst string, cost double")
+    names = [f"g{r}_{c}" for r in range(side) for c in range(side)] + ["i0", "i1"]
+    # half-unit spacing keeps the Euclidean heuristic admissible: no
+    # edge costs less than 0.5
+    nodes = spark.createDataFrame(
+        [(n, (i % side) / 2, (i // side) / 2) for i, n in enumerate(names)],
+        "NodeId string, XCoord double, YCoord double",
+    )
+    proj2 = build_projection(roads, nodes)
 
-    base = B.bsp_sssp(spark, roads, "0", carry_paths=False)
-    bd = {r["node"]: r["dist"] for r in base.collect()}
-    for thr in (100_000, 12):  # all supersteps pruned / only narrow ones
-        pr = B.bsp_sssp(
-            spark, roads, "0", carry_paths=False, prune_edge_probe=thr
-        )
-        pd_ = {r["node"]: r["dist"] for r in pr.collect()}
-        assert pd_ == bd, thr  # bit-identical doubles
-        far = max(bd, key=bd.get)
-        assert B.reconstruct_paths(pr, [far]) == B.reconstruct_paths(base, [far])
+    shapes: list[bool] = []
+
+    class _CandidateGate(int):
+        """Records each broadcast-or-shuffle decision the loop makes
+        (``n × degree <= gate`` calls the reflected ``__ge__``)."""
+
+        def __ge__(self, other):
+            shapes.append(int(self) >= other)
+            return shapes[-1]
+
+    monkeypatch.setattr(B, "_BROADCAST_FRONTIER_ROWS", 4)
+    monkeypatch.setattr(B, "_BROADCAST_CANDIDATE_ROWS", _CandidateGate(8))
+
+    src, tgt = "g0_0", f"g{side - 1}_{side - 1}"
+    b = {r[0]: r[1] for r in sssp(spark, roads, src, strategy="broadcast").collect()}
+    s = {r[0]: r[1] for r in sssp(spark, roads, src, strategy="bsp").collect()}
+    assert set(b) == set(s) == set(names) - {"i0", "i1"}
+    for n in b:
+        assert s[n] == pytest.approx(b[n], abs=1e-9)
+    assert True in shapes and False in shapes
+
+    pb = dijkstra(spark, roads, src, tgt, projection=proj2).collect()
+    ps = dijkstra(spark, roads, src, tgt, strategy="bsp").collect()
+    assert [r["NodeId"] for r in ps] == [r["NodeId"] for r in pb]
+    for rb, rs in zip(pb, ps):
+        assert rs["cost"] == pytest.approx(rb["cost"], abs=1e-9)
+
+    ab = astar(spark, roads, nodes, src, tgt, projection=proj2).collect()
+    as_ = astar(spark, roads, nodes, src, tgt, strategy="bsp").collect()
+    assert as_[-1]["cost"] == pytest.approx(ab[-1]["cost"], abs=1e-9)
+    assert as_[-1]["cost"] == pytest.approx(pb[-1]["cost"], abs=1e-9)
 
 
 def test_bsp_equals_broadcast(spark, graph1, proj):

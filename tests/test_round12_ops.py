@@ -156,33 +156,6 @@ def test_snapshot_errors(spark, tmp_path):
         snapshot_vacuum(tdir, keep_last=0)
 
 
-# ------------------ stupid backoff hashed-keys arm --------------------
-
-def test_stupid_backoff_arms_equal(spark):
-    """The hashed-gram-key plan (r12 A/B arm, KERNEL_BENCH §r12) must
-    produce the same scores as the default string-keyed plan — only
-    the join keys differ, never the count arithmetic. (ULP-level avg
-    differences are allowed: the per-doc mean sums positions in join
-    output order, which differs between the two plans.)"""
-    from bigdata_foundation_spark.operators import text as TX
-
-    docs = spark.createDataFrame(
-        [(i, "the quick brown fox jumps over the lazy dog "
-             + ("again " * (i % 3)) + f"tail{i % 5}", "en" if i % 2 else "xx")
-         for i in range(40)],
-        ["doc_id", "text", "lang"],
-    )
-    train = docs.filter("lang = 'en'")
-    a = {r["doc_id"]: (r["n_tokens"], r["nll_per_token"])
-         for r in TX.stupid_backoff_score(docs, train, hashed_keys=False).collect()}
-    b = {r["doc_id"]: (r["n_tokens"], r["nll_per_token"])
-         for r in TX.stupid_backoff_score(docs, train, hashed_keys=True).collect()}
-    assert len(a) == 40 and a.keys() == b.keys()
-    for k in a:
-        assert a[k][0] == b[k][0], k
-        assert abs(a[k][1] - b[k][1]) <= 1e-12 * max(1.0, abs(a[k][1])), k
-
-
 # ------------------ file-spilled projection tier ----------------------
 
 def test_apsp_file_tier_matches_broadcast(spark, tmp_path):

@@ -10,10 +10,13 @@ diff (``io._commit_diffs``):
 * an empty read (every file pruned, an empty version range) has the
   schema of the unpruned read;
 * a delete on a table with non-nullable nested types commits the
-  head's schema;
+  head's schema, and a merge or append of the table's own rows (read
+  back all-nullable inside) commits it widened to admit nulls;
 * a per-commit diff on a v2 manifest never opens the group blobs both
   sides share;
-* the commit-id lookup skips a version vacuumed under it.
+* the commit-id lookup skips a version vacuumed under it, and a table
+  deleted and recreated in the same process does not answer a replayed
+  commit id with a version of the old table.
 """
 
 import os
@@ -166,6 +169,26 @@ def test_delete_keeps_non_nullable_nested_head_schema(spark, tmp_path):
     ]
 
 
+def _field_type(tdir, version, name):
+    fields = bio._read_manifest(tdir, version)["schema"]["fields"]
+    return next(f["type"] for f in fields if f["name"] == name)
+
+
+def test_merge_and_append_of_read_back_rows_widen_nested_nullability(spark, tmp_path):
+    tdir = str(tmp_path / "tbl")
+    df = spark.range(10).select(F.col("id").alias("k"), F.array("id").alias("a"))
+    v1 = bio.write_snapshot(df, tdir, mode="overwrite")
+    assert _field_type(tdir, v1, "a")["containsNull"] is False
+    back = bio.read_at_version(spark, tdir, v1).filter("k = 3")
+    v2 = bio.snapshot_merge(spark, tdir, back, ["k"])
+    v3 = bio.write_snapshot(bio.read_at_version(spark, tdir, v1).filter("k = 4"), tdir)
+    assert (v2, v3) == (v1 + 1, v1 + 2)
+    for v in (v2, v3):
+        assert _field_type(tdir, v, "a") == {**_field_type(tdir, v1, "a"), "containsNull": True}
+    rows = sorted((r["k"], list(r["a"])) for r in bio.read_at_version(spark, tdir).collect())
+    assert rows == sorted([(i, [i]) for i in range(10)] + [(4, [4])])
+
+
 # ---------------------- per-commit diffs on v2 manifests -----------------
 
 
@@ -210,3 +233,20 @@ def test_find_commit_id_skips_a_vacuumed_version(spark, tmp_path, monkeypatch):
     bio.get_snapshot_log_store().delete(mdir, 2)
     monkeypatch.setattr(bio, "_COMMIT_ID_INDEX", {})
     assert bio._find_commit_id(tdir, versions, "c3") == 3
+
+
+def test_commit_id_replayed_into_a_recreated_table_appends(spark, tmp_path):
+    import shutil
+
+    tdir = _base_table(spark, tmp_path)
+    bio.write_snapshot(_kv(spark, [(100, 1.0)]), tdir, commit_id="batch-7")
+    bio.write_snapshot(_kv(spark, [(101, 1.0)]), tdir, commit_id="batch-8")
+    assert bio.write_snapshot(_kv(spark, [(100, 1.0)]), tdir, commit_id="batch-7") == 2
+    shutil.rmtree(tdir)
+    _base_table(spark, tmp_path)
+    bio.write_snapshot(_kv(spark, [(200, 1.0)]), tdir)
+    bio.write_snapshot(_kv(spark, [(201, 1.0)]), tdir)
+    replay = _kv(spark, [(i, 2.0) for i in range(300, 305)])
+    assert bio.write_snapshot(replay, tdir, commit_id="batch-7") == 4
+    assert bio.read_at_version(spark, tdir).count() == 17
+    assert bio.write_snapshot(replay, tdir, commit_id="batch-7") == 4

@@ -1,16 +1,17 @@
-"""Measure the BSP strategy WHERE IT IS THE DISPATCHED PATH — the r5
-verdict's task 2: the beyond-broadcast story had correctness evidence
-(equivalence + bounded-driver tests) but zero wall-clock rows. This
-bench runs the BSP kernels on a >1M-edge synthetic, verifies the SSSP
-distances against the broadcast numpy kernel, and reports wall time
-PLUS superstep counts (the superstep count is the BSP latency floor:
-one scheduled join round per frontier hop).
+"""Wall time and superstep counts of the BSP kernels (graph/bsp.py)
+where they are the dispatched tier.
 
-Also measures the task-3 delta: the same SSSP over a src-bucketed edge
-table (zero Exchange on the edge side per superstep) vs a plain parquet
-read.
+Runs every BSP entry point on a synthetic random digraph (1M edges, or
+400k with --quick) and a 4-neighbour grid (the high-diameter shape):
+bsp_sssp on plain parquet and on a src-bucketed table (zero edge-side
+Exchange per superstep), point-to-point with target pruning, Yen's K,
+and one 64-source bsp_multi_sssp wave. Single-source distances are
+asserted equal to the broadcast numpy kernel. The superstep count is
+the BSP latency floor (one scheduled join round per frontier hop), so
+each line prints it next to wall time. --grid-big runs only the
+1,079,520-edge 520x520 grid, path-carrying and dist-only.
 
-    python tools/bsp_bench.py [--quick]
+    python tools/bsp_bench.py [--quick | --grid-big]
 
 Writes nothing; paste results into KERNEL_BENCH.md.
 """
@@ -86,11 +87,11 @@ def main() -> int:
     tmp = tempfile.mkdtemp(prefix="bsp_bench_")
     try:
         if grid_big:
-            # r6 verdict task 7: the 432 ms/superstep floor was measured
-            # on a 100x100 grid (39.6k edges); pin how the constant
-            # scales with edge volume on a >=1M-edge high-diameter grid
-            # under src-bucketed edges (zero edge-side Exchange per
-            # superstep — frontier-only shuffling).
+            # How the per-superstep constant (~430 ms on a 100x100
+            # grid) scales with edge volume on a >=1M-edge
+            # high-diameter grid under src-bucketed edges (zero
+            # edge-side Exchange per superstep — frontier-only
+            # shuffling).
             r = c = 520  # 2*520*519*2 = 1,079,520 directed edges
             gpdf = grid_pdf(r, c)
             spark.createDataFrame(gpdf).write.mode("overwrite").parquet(f"{tmp}/gbig")
@@ -119,8 +120,8 @@ def main() -> int:
                     f"VERIFIED vs kernel, max |delta| {gworst:.1e})"
                 )
 
-                # r7: dist-only state (carry_paths=False) — the fix for
-                # the path-array checkpoint ceiling measured above.
+                # dist-only state (carry_paths=False) — the fix for the
+                # path-array checkpoint ceiling measured above.
                 stats_l: dict = {}
                 t0 = time.perf_counter()
                 lstate = B.bsp_sssp(spark, broads, "n0", stats=stats_l, carry_paths=False)
@@ -169,7 +170,7 @@ def main() -> int:
             f"rows={len(got):,}  (VERIFIED vs broadcast kernel, max |delta| {worst:.1e})"
         )
 
-        # --- BSP SSSP, bucketed edge table (task-3 delta)
+        # --- BSP SSSP, bucketed edge table
         write_bucketed(roads, "bsp_bench_bucketed", ["src"], n_buckets=32)
         try:
             broads = spark.table("bsp_bench_bucketed")
@@ -200,13 +201,14 @@ def main() -> int:
         )
 
         # --- BSP Yen k=3
+        stats_y: dict = {}
         t0 = time.perf_counter()
-        paths = B.bsp_yens_k(spark, roads, src0, far, k=3)
+        paths = B.bsp_yens_k(spark, roads, src0, far, k=3, stats=stats_y)
         t_yen = time.perf_counter() - t0
         assert len(paths) >= 1 and abs(paths[0][2] - oracle[far]) < 1e-9
         print(
-            f"bsp_yens_k k=3       {t_yen:7.1f}s  paths={len(paths)}  "
-            f"hops={[len(p[0]) - 1 for p in paths]}"
+            f"bsp_yens_k k=3       {t_yen:7.1f}s  supersteps={stats_y['supersteps']:4d}  "
+            f"paths={len(paths)}  hops={[len(p[0]) - 1 for p in paths]}"
         )
 
         # --- one APSP wave (the G3 building block past broadcast)
