@@ -116,6 +116,16 @@ def _checkpoint_union_state(df: DataFrame) -> DataFrame:
         spark.conf.set(key, old)
 
 
+def _checkpoint_count(df: DataFrame) -> tuple[DataFrame, int]:
+    """``df`` as a local checkpoint, and its row count, from one pass:
+    the lazy checkpoint materialises while the count job scans it. An
+    eager checkpoint followed by ``count()`` reads the rows again, and
+    under AQE that count is two more jobs (a shuffle-map job for the
+    global count, then its result job) every superstep."""
+    df = df.localCheckpoint(eager=False)
+    return df, df._jdf.queryExecution().toRdd().count()
+
+
 def _width(spark: SparkSession, rows: int) -> int:
     """Partitions for ``rows`` rows: ~128k per partition, floor 8,
     capped at the session's shuffle width. Measured 710 → 456
@@ -192,8 +202,7 @@ def _relax(
                 .filter(F.col("s.dist").isNull() | (F.col("c.dist") < F.col("s.dist")))
                 .select(*key, *[F.col(f"c.{c}").alias(c) for c in carried])
             )
-        improved = improved.localCheckpoint(eager=True)
-        n_frontier = improved.count()
+        improved, n_frontier = _checkpoint_count(improved)
         if n_frontier:
             small = max_degree > 0 and n_frontier <= _BROADCAST_FRONTIER_ROWS
             settled += n_frontier

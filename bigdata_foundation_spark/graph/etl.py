@@ -42,6 +42,130 @@ _MSF_DDL = "src string NOT NULL, dst string NOT NULL, cost double NOT NULL"
 _HYPERBALL_DDL = "t int NOT NULL, nf_est double NOT NULL"
 _TRUSS_DDL = "src string NOT NULL, dst string NOT NULL, truss int NOT NULL"
 
+# The superstep tiers' shared vocabulary: edge views, the fixed-count
+# loop, the convergence loop and the power-iteration pieces.
+
+# Fixed-count loops flatten their lineage every this many rounds and
+# after the last: each flatten costs a job, and between two of them the
+# plan stays a few joins deep.
+_FLATTEN_EVERY = 4
+
+
+def _undirected(roads: DataFrame) -> DataFrame:
+    """The undirected simple graph under the road multigraph: one
+    (a, b) row per linked node pair, a < b, self-loops dropped."""
+    return (
+        roads.select(F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b"))
+        .filter(F.col("a") != F.col("b"))
+        .distinct()
+    )
+
+
+def _directed_simple(roads: DataFrame) -> DataFrame:
+    """The directed simple graph under the road multigraph: one
+    (src, dst) row per linked ordered pair, self-loops dropped."""
+    return roads.select("src", "dst").filter(F.col("src") != F.col("dst")).distinct()
+
+
+def _fixed_rounds(state, step, rounds: int):
+    """``state`` after ``rounds`` applications of ``step(state, t)``,
+    t = 1..rounds. ``state`` is a DataFrame, None (a power iteration's
+    zero vector) or a tuple of those; it is localCheckpointed every
+    ``_FLATTEN_EVERY`` rounds and after the last."""
+    for t in range(1, rounds + 1):
+        state = step(state, t)
+        if t % _FLATTEN_EVERY == 0 or t == rounds:
+            state = _flatten(state)
+    return state
+
+
+def _flatten(state):
+    if isinstance(state, tuple):
+        return tuple(map(_flatten, state))
+    return None if state is None else state.localCheckpoint()
+
+
+def _until_stable(state, step, key, max_rounds: int, name: str, value: str | None = None):
+    """The superstep tiers' convergence loop, in one of two shapes.
+
+    * Relabelling (``value`` given): ``step(state, r)`` returns the
+      next (``key``, ``value``) frame; the loop ends once no key has
+      changed its value.
+    * Reachability (``value`` None): ``state`` is the visited set and
+      ``step(frontier, r)`` proposes rows reached from the frontier;
+      the proposals whose ``key`` is unvisited form the next frontier,
+      and the loop ends once it is empty. A step that returns None
+      ends the loop at once (a bounded search at its radius).
+
+    Returns the last state. Raises ``RuntimeError`` once ``max_rounds``
+    rounds pass without an end: a partial labelling is not an answer."""
+    frontier = state
+    for r in range(1, max_rounds + 1):
+        proposed = step(frontier, r)
+        if proposed is None:
+            return state
+        if value is None:
+            frontier = (
+                proposed.distinct().join(state, key, "left_anti").localCheckpoint(eager=True)
+            )
+            if frontier.isEmpty():
+                return state
+            state = state.unionByName(frontier).localCheckpoint(eager=True)
+        else:
+            new = proposed.localCheckpoint(eager=True)
+            changed = (
+                new.alias("n")
+                .join(state.alias("o"), key)
+                .filter(F.col(f"n.{value}") != F.col(f"o.{value}"))
+                .limit(1)
+                .count()
+            )
+            state = frontier = new
+            if not changed:
+                return state
+    raise RuntimeError(f"{name} did not converge within {max_rounds} rounds")
+
+
+def _uniform(nodes: DataFrame, col: str) -> DataFrame:
+    """``nodes`` with ``col`` = 1/|nodes|, the power iterations' uniform
+    vector; an empty node set stays empty."""
+    return nodes.withColumn(col, F.lit(1.0 / max(nodes.count(), 1)))
+
+
+def _half(edges: DataFrame, nodes: DataFrame, mass, key: str, out: str):
+    """One power-iteration half-step over ``edges`` (src, dst): gather
+    the (id, v) ``mass`` at the ``key`` end, sum it onto the ``out``
+    end, L2-normalise over ``nodes``. HITS takes two per iteration,
+    eigenvector centrality one. None is the zero vector: a mass that
+    dies returns None, and None maps to None at no cost. Numpy twin:
+    ``kernel._half``."""
+    if mass is None:
+        return None
+    contrib = (
+        edges.join(mass.withColumnRenamed("id", key), key)
+        .select(F.col(out).alias("id"), F.col("v").alias("c"))
+        .groupBy("id")
+        .agg(F.sum("c").alias("c"))
+    )
+    norm = contrib.agg(
+        F.coalesce(F.sqrt(F.sum(F.col("c") * F.col("c"))), F.lit(0.0))
+    ).first()[0]
+    if norm == 0.0:
+        return None
+    return nodes.join(contrib, "id", "left").select(
+        "id", (F.coalesce(F.col("c"), F.lit(0.0)) / F.lit(norm)).alias("v")
+    )
+
+
+def _vector(nodes: DataFrame, vec) -> DataFrame:
+    """A :func:`_half` result as an (id, v) frame, zeros for None."""
+    return nodes.withColumn("v", F.lit(0.0)) if vec is None else vec
+
+
+def _rounded(raw: DataFrame, *cols: str) -> DataFrame:
+    """The score family's 6-dp determinism contract on ``cols``."""
+    return raw.select("NodeId", *[F.round(F.col(c), 6).alias(c) for c in cols])
+
 
 def read_edgelist(spark: SparkSession, path: str) -> DataFrame:
     """Operator I1+I3: header-CSV scan, blank-row drop, typed casts.
@@ -197,26 +321,20 @@ def k_hop_nodes(
     Layered BFS as k keyed joins: frontier_i = (edges ⋈ frontier_{i-1})
     minus everything already visited, so each node is emitted at its
     FIRST (minimum) depth and the per-round state is one (NodeId, hops)
-    DataFrame. ``localCheckpoint`` truncates the iterated-join lineage
-    (same discipline as graph/bsp.py); the early-exit count reads one
-    driver scalar per round. k is a small constant (an ego radius), so
-    the k joins are the whole cost — no unbounded iteration."""
-    frontier = local_df(spark, [(source, 0)], "NodeId string, hops int")
-    visited = frontier.localCheckpoint()
-    frontier = visited
+    DataFrame (the reachability shape of :func:`_until_stable`). k is a
+    small constant (an ego radius), so the k joins are the whole cost —
+    no unbounded iteration."""
+    seed = local_df(spark, [(source, 0)], "NodeId string, hops int").localCheckpoint()
     edges = roads.select(F.col("src").alias("NodeId"), F.col("dst"))
-    for i in range(1, k + 1):
-        nxt = (
-            edges.join(frontier, "NodeId")
-            .select(F.col("dst").alias("NodeId"), F.lit(i).alias("hops"))
-            .distinct()
-            .join(visited, "NodeId", "left_anti")
-            .localCheckpoint()
+
+    def hop(frontier: DataFrame, i: int):
+        if i > k:
+            return None
+        return edges.join(frontier, "NodeId").select(
+            F.col("dst").alias("NodeId"), F.lit(i).alias("hops")
         )
-        if nxt.isEmpty():
-            break
-        visited = visited.unionByName(nxt).localCheckpoint()
-        frontier = nxt
+
+    visited = _until_stable(seed, hop, "NodeId", max(k, 0) + 1, "k_hop_nodes")
     return visited.select("NodeId", F.col("hops").cast("bigint").alias("hops"))
 
 
@@ -271,13 +389,7 @@ def triangle_count(roads: DataFrame) -> DataFrame:
     triangle a<b<c is found exactly once. At scale both joins shuffle
     on a node key; the classic degree-ordered orientation bounds the
     wedge fan-out by arboricity. Returns one row (n_triangles)."""
-    und = (
-        roads.select(
-            F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
-        )
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-    )
+    und = _undirected(roads)
     # wedges a<b<c: (a,b) ⋈ (b,c) on the shared middle node; the
     # ordering invariant (every und row has a < b lexicographically)
     # means each triangle appears as exactly one wedge, closed iff
@@ -306,43 +418,61 @@ def pagerank(
     ``iters`` power iterations, dangling mass redistributed uniformly
     (the classic formulation).
 
-    Tiers (``paths._tier``): ``broadcast``
-    (auto below ``paths.BROADCAST_EDGE_LIMIT``) runs
-    ``kernel.pagerank_kernel`` — the identical power-iteration math,
-    one gather + one bincount scatter-add per iteration — as a single
-    executor task over the broadcast CSR; ``bsp`` (auto above) runs
-    the superstep loop below. Rank values agree within the 6-dp
-    rounding contract (float summation order is the only difference,
-    wobble ~1e-13 vs the 1e-6 quantum).
+    It is :func:`personalized_pagerank` with a uniform restart vector,
+    and runs through the same code on both tiers (``paths._tier``):
+    ``broadcast`` (auto below ``paths.BROADCAST_EDGE_LIMIT``) runs
+    ``kernel.ppr_kernel`` over every node — one gather + one bincount
+    scatter-add per iteration — as a single executor task over the
+    broadcast CSR; ``bsp`` (auto above) runs :func:`_ppr_superstep`.
+    Rank values agree within the 6-dp rounding contract (float
+    summation order is the only difference, wobble ~1e-13 vs the 1e-6
+    quantum).
 
     Superstep-tier scale shape: out-degrees are one count aggregate;
     each iteration is ONE keyed join (edges ⋈ ranks on src) + ONE
     groupBy(dst) sum — partial aggregation map-side — plus a
-    two-scalar driver agg for the dangling/total mass (bounded state;
-    no per-node driver structures). ``localCheckpoint`` every few
-    iterations truncates the iterated-join lineage (graph/bsp.py
-    discipline). Returns (NodeId, rank) with rank rounded to 6 dp —
-    the determinism contract: float summation order across partitions
-    wobbles ~1e-13 per iteration, far below the rounding quantum, so
-    results are reproducible and replayable in pure Python
-    (tools/gen_pipeline_goldens.py pagerank replay)."""
-    if _p._tier(roads, strategy, projection, _p._TWO_TIERS) == "broadcast":
+    one-scalar driver agg for the dangling mass (bounded state; no
+    per-node driver structures). Returns (NodeId, rank) with rank
+    rounded to 6 dp — the determinism contract: float summation order
+    across partitions wobbles ~1e-13 per iteration, far below the
+    rounding quantum, so results are reproducible and replayable in
+    pure Python (tools/gen_pipeline_goldens.py pagerank replay)."""
+    tier = _p._tier(roads, strategy, projection, _p._TWO_TIERS)
+    return _ppr(roads, None, damping, iters, tier, projection)
+
+
+def _ppr(roads: DataFrame, sources, damping: float, iters: int, tier: str, projection):
+    """(Personalized) PageRank on ``tier``; ``sources=None`` restarts
+    uniformly over every node (:func:`pagerank`)."""
+    if tier == "broadcast":
+        srcs = None if sources is None else list(sources)
         raw = _p._run_kernel(
-            roads, projection, lambda p: _k.pagerank_kernel(p, damping, iters), _RANK_DDL
+            roads, projection, lambda p: _k.ppr_kernel(p, srcs, damping, iters), _RANK_DDL
         )
-        return raw.select("NodeId", F.round(F.col("rank"), 6).alias("rank"))
-    nodes = roads.select(F.col("src").alias("id")).union(
-        roads.select(F.col("dst").alias("id"))
-    ).distinct().localCheckpoint()
-    n = nodes.count()
+        return _rounded(raw, "rank")
+    nodes = _p._node_ids(roads).localCheckpoint()
+    if sources is None:
+        return _ppr_superstep(roads, _uniform(nodes, "rs").localCheckpoint(), damping, iters)
+    k = len(set(sources))
+    restart = nodes.withColumn(
+        "rs", F.when(F.col("id").isin(list(sources)), F.lit(1.0 / k)).otherwise(F.lit(0.0))
+    ).localCheckpoint()
+    if restart.agg(F.sum("rs")).first()[0] == 0.0:
+        raise ValueError("personalized_pagerank: no source is present in the graph")
+    return _ppr_superstep(roads, restart, damping, iters)
+
+
+def _ppr_superstep(roads: DataFrame, restart: DataFrame, damping: float, iters: int) -> DataFrame:
+    """Past-broadcast power iteration with restart vector ``restart``
+    (id, rs): restart mass AND dangling mass return along ``rs``."""
     outdeg = (
         roads.groupBy(F.col("src").alias("id"))
         .agg(F.count("*").alias("deg"))
         .localCheckpoint()
     )
     edges = roads.select(F.col("src").alias("id"), F.col("dst")).localCheckpoint()
-    ranks = nodes.withColumn("r", F.lit(1.0 / n)).localCheckpoint()
-    for i in range(iters):
+
+    def step(ranks: DataFrame, _t: int) -> DataFrame:
         with_deg = ranks.join(outdeg, "id", "left")
         dangling = (
             with_deg.filter(F.col("deg").isNull())
@@ -355,19 +485,17 @@ def pagerank(
             .groupBy("id")
             .agg(F.sum("c").alias("c"))
         )
-        base = (1.0 - damping) / n + damping * dangling / n
-        ranks = (
-            nodes.join(contrib, "id", "left")
-            .select(
-                "id",
-                (F.lit(base) + F.lit(damping) * F.coalesce(F.col("c"), F.lit(0.0))).alias("r"),
-            )
+        teleport = 1.0 - damping + damping * dangling
+        return restart.join(contrib, "id", "left").select(
+            "id",
+            (
+                F.lit(teleport) * F.col("rs")
+                + F.lit(damping) * F.coalesce(F.col("c"), F.lit(0.0))
+            ).alias("r"),
         )
-        if i % 4 == 3 or i == iters - 1:
-            ranks = ranks.localCheckpoint()
-    return ranks.select(
-        F.col("id").alias("NodeId"), F.round(F.col("r"), 6).alias("rank")
-    )
+
+    ranks = _fixed_rounds(restart.select("id", F.col("rs").alias("r")), step, iters)
+    return ranks.select(F.col("id").alias("NodeId"), F.round(F.col("r"), 6).alias("rank"))
 
 
 def label_propagation(
@@ -465,13 +593,8 @@ def _scc_superstep(roads: DataFrame, max_rounds: int = 1000) -> DataFrame:
     raises on non-convergence rather than returning a partial
     labelling (the duplicate_clusters discipline)."""
     spark = roads.sparkSession
-    edges0 = roads.select("src", "dst").filter(F.col("src") != F.col("dst")).distinct().cache()
-    remaining = (
-        roads.select(F.col("src").alias("id"))
-        .union(roads.select(F.col("dst").alias("id")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    edges0 = _directed_simple(roads).cache()
+    remaining = _p._node_ids(roads).localCheckpoint(eager=True)
     out: DataFrame | None = None
     for _round in range(max_rounds):
         if remaining.isEmpty():
@@ -486,30 +609,16 @@ def _scc_superstep(roads: DataFrame, max_rounds: int = 1000) -> DataFrame:
         )
         # forward MAX-color propagation to fixpoint: color(v) = the
         # largest node id that reaches v within the remaining subgraph.
-        colors = remaining.withColumn("color", F.col("id")).localCheckpoint(eager=True)
-        for _fix in range(max_rounds):
-            prop = (
-                e.join(colors.withColumnRenamed("id", "src"), "src")
-                .select(F.col("dst").alias("id"), "color")
+        def forward(colors: DataFrame, _r: int) -> DataFrame:
+            prop = e.join(colors.withColumnRenamed("id", "src"), "src").select(
+                F.col("dst").alias("id"), "color"
             )
-            new = (
-                colors.unionByName(prop)
-                .groupBy("id")
-                .agg(F.max("color").alias("color"))
-                .localCheckpoint(eager=True)
-            )
-            changed = (
-                new.alias("n")
-                .join(colors.alias("o"), "id")
-                .filter(F.col("n.color") != F.col("o.color"))
-                .limit(1)
-                .count()
-            )
-            colors = new
-            if changed == 0:
-                break
-        else:
-            raise RuntimeError("_scc_superstep: forward coloring did not converge")
+            return colors.unionByName(prop).groupBy("id").agg(F.max("color").alias("color"))
+
+        colors = _until_stable(
+            remaining.withColumn("color", F.col("id")).localCheckpoint(eager=True),
+            forward, "id", max_rounds, "_scc_superstep: forward coloring", value="color",
+        )
         # backward reachability from each color's root inside its color
         # class; edges whose endpoints share a color stay in-class.
         csrc = colors.select(F.col("id").alias("src"), F.col("color").alias("_cs"))
@@ -521,24 +630,16 @@ def _scc_superstep(roads: DataFrame, max_rounds: int = 1000) -> DataFrame:
             .select("src", "dst", F.col("_cs").alias("color"))
             .localCheckpoint(eager=True)
         )
-        member = colors.filter(F.col("color") == F.col("id")).localCheckpoint(eager=True)
-        frontier = member
-        for _bfs in range(max_rounds):
-            nxt = (
-                ce.join(
-                    frontier.select(F.col("id").alias("dst"), "color"), ["dst", "color"]
-                )
-                .select(F.col("src").alias("id"), "color")
-                .distinct()
-                .join(member, "id", "left_anti")
-                .localCheckpoint(eager=True)
-            )
-            if nxt.isEmpty():
-                break
-            member = member.unionByName(nxt).localCheckpoint(eager=True)
-            frontier = nxt
-        else:
-            raise RuntimeError("_scc_superstep: backward reachability did not converge")
+
+        def backward(frontier: DataFrame, _r: int) -> DataFrame:
+            return ce.join(
+                frontier.select(F.col("id").alias("dst"), "color"), ["dst", "color"]
+            ).select(F.col("src").alias("id"), "color")
+
+        member = _until_stable(
+            colors.filter(F.col("color") == F.col("id")).localCheckpoint(eager=True),
+            backward, "id", max_rounds, "_scc_superstep: backward reachability",
+        )
         lab = member.groupBy("color").agg(F.min("id").alias("scc_id"))
         found = member.join(lab, "color").select(F.col("id").alias("NodeId"), "scc_id")
         out = found if out is None else out.unionByName(found)
@@ -587,13 +688,7 @@ def _kcore_superstep(
     synchronous h-index iteration. Raises on non-convergence rather
     than returning partial estimates (they would be upper bounds, not
     core numbers)."""
-    und = (
-        roads.select(
-            F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
-        )
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-    )
+    und = _undirected(roads)
     sym = und.union(
         und.select(F.col("b").alias("a"), F.col("a").alias("b"))
     ).localCheckpoint(eager=True)
@@ -603,41 +698,29 @@ def _kcore_superstep(
         .localCheckpoint(eager=True)
     )
     w = Window.partitionBy("id").orderBy(F.desc("nc"), F.asc("b"))
-    for _ in range(max_iters):
-        nb = (
-            sym.join(est.select(F.col("id").alias("b"), F.col("core").alias("nc")), "b")
-            .select(F.col("a").alias("id"), "b", "nc")
+
+    def h_index(est: DataFrame, _r: int) -> DataFrame:
+        nb = sym.join(est.select(F.col("id").alias("b"), F.col("core").alias("nc")), "b").select(
+            F.col("a").alias("id"), "b", "nc"
         )
         # h-index of the neighbor estimates: rank them descending;
         # h = max over positions of min(value_at_position, position).
-        new = (
+        return (
             nb.withColumn("_rn", F.row_number().over(w))
             .groupBy("id")
             .agg(F.max(F.least(F.col("nc"), F.col("_rn"))).cast("long").alias("core"))
-            .localCheckpoint(eager=True)
         )
-        changed = (
-            new.alias("n")
-            .join(est.alias("o"), "id")
-            .filter(F.col("n.core") != F.col("o.core"))
-            .limit(1)
-            .count()
-        )
-        est = new
-        if changed == 0:
-            # nodes whose only edges were self-loops vanish from the
-            # simplified graph but are still edge-table endpoints —
-            # they carry core 0 (the kernel tier's contract).
-            all_nodes = (
-                roads.select(F.col("src").alias("id"))
-                .union(roads.select(F.col("dst").alias("id")))
-                .distinct()
-            )
-            zero = all_nodes.join(est, "id", "left_anti").withColumn(
-                "core", F.lit(0).cast("long")
-            )
-            return est.unionByName(zero).select(F.col("id").alias("NodeId"), "core")
-    raise RuntimeError("_kcore_superstep: h-index iteration did not converge")
+
+    est = _until_stable(
+        est, h_index, "id", max_iters, "_kcore_superstep: h-index iteration", value="core"
+    )
+    # nodes whose only edges were self-loops vanish from the simplified
+    # graph but are still edge-table endpoints — they carry core 0 (the
+    # kernel tier's contract).
+    zero = _p._node_ids(roads).join(est, "id", "left_anti").withColumn(
+        "core", F.lit(0).cast("long")
+    )
+    return est.unionByName(zero).select(F.col("id").alias("NodeId"), "core")
 
 
 def _parallel_pairs(roads: DataFrame) -> set:
@@ -722,65 +805,15 @@ def personalized_pagerank(
     to 6 dp — the same replayable determinism contract as
     :func:`pagerank`.
 
-    Tiers (``paths._tier``) mirror :func:`pagerank`: broadcast numpy kernel
+    Tiers (``paths._tier``) are :func:`pagerank`'s, which is this
+    function with every node a source: broadcast numpy kernel
     (``kernel.ppr_kernel``) below ``paths.BROADCAST_EDGE_LIMIT``, the
-    superstep loop above — identical math, per iteration ONE keyed
-    join + ONE groupBy(dst) sum, the seed set riding a broadcast
-    isin; ``localCheckpoint`` every few iterations truncates the
-    iterated lineage."""
+    superstep loop above — per iteration ONE keyed join + ONE
+    groupBy(dst) sum, the seed set riding a broadcast isin."""
     if not sources:
         raise ValueError("personalized_pagerank: sources must be non-empty")
-    if _p._tier(roads, strategy, projection, _p._TWO_TIERS) == "broadcast":
-        srcs = list(sources)
-        raw = _p._run_kernel(
-            roads, projection, lambda p: _k.ppr_kernel(p, srcs, damping, iters), _RANK_DDL
-        )
-        return raw.select("NodeId", F.round(F.col("rank"), 6).alias("rank"))
-    nodes = roads.select(F.col("src").alias("id")).union(
-        roads.select(F.col("dst").alias("id"))
-    ).distinct().localCheckpoint()
-    k = len(set(sources))
-    restart = nodes.withColumn(
-        "rs", F.when(F.col("id").isin(list(sources)), F.lit(1.0 / k)).otherwise(F.lit(0.0))
-    ).localCheckpoint()
-    if restart.agg(F.sum("rs")).first()[0] == 0.0:
-        raise ValueError("personalized_pagerank: no source is present in the graph")
-    outdeg = (
-        roads.groupBy(F.col("src").alias("id"))
-        .agg(F.count("*").alias("deg"))
-        .localCheckpoint()
-    )
-    edges = roads.select(F.col("src").alias("id"), F.col("dst")).localCheckpoint()
-    ranks = restart.select("id", F.col("rs").alias("r"))
-    for i in range(iters):
-        with_deg = ranks.join(outdeg, "id", "left")
-        dangling = (
-            with_deg.filter(F.col("deg").isNull())
-            .agg(F.coalesce(F.sum("r"), F.lit(0.0)))
-            .first()[0]
-        )
-        contrib = (
-            edges.join(with_deg.filter(F.col("deg").isNotNull()), "id")
-            .select(F.col("dst").alias("id"), (F.col("r") / F.col("deg")).alias("c"))
-            .groupBy("id")
-            .agg(F.sum("c").alias("c"))
-        )
-        teleport = 1.0 - damping + damping * dangling
-        ranks = (
-            restart.join(contrib, "id", "left")
-            .select(
-                "id",
-                (
-                    F.lit(teleport) * F.col("rs")
-                    + F.lit(damping) * F.coalesce(F.col("c"), F.lit(0.0))
-                ).alias("r"),
-            )
-        )
-        if i % 4 == 3 or i == iters - 1:
-            ranks = ranks.localCheckpoint()
-    return ranks.select(
-        F.col("id").alias("NodeId"), F.round(F.col("r"), 6).alias("rank")
-    )
+    tier = _p._tier(roads, strategy, projection, _p._TWO_TIERS)
+    return _ppr(roads, sources, damping, iters, tier, projection)
 
 
 def eigenvector_centrality(
@@ -798,41 +831,27 @@ def eigenvector_centrality(
     6 dp, the family's replayable determinism contract; if the
     in-mass dies the zero vector returns (no divide-by-zero).
 
-    Tiers (``paths._tier``) mirror :func:`pagerank`: broadcast numpy
-    kernel below ``paths.BROADCAST_EDGE_LIMIT``; above it, per iteration ONE
-    keyed join (edges ⋈ x on src) + ONE groupBy(dst) sum + a
-    one-scalar norm agg, ``localCheckpoint`` every few iterations."""
+    It is one :func:`hits` half-step per iteration (:func:`_half` and
+    its numpy twin ``kernel._half``). Tiers (``paths._tier``) mirror
+    :func:`pagerank`: broadcast numpy kernel below
+    ``paths.BROADCAST_EDGE_LIMIT``; above it, per iteration ONE keyed
+    join (edges ⋈ x on src) + ONE groupBy(dst) sum + a one-scalar norm
+    agg, ``localCheckpoint`` every few iterations."""
     if _p._tier(roads, strategy, projection, _p._TWO_TIERS) == "broadcast":
         raw = _p._run_kernel(
             roads, projection, lambda p: _k.eigenvector_kernel(p, iters), _RANK_DDL
         )
-        return raw.select("NodeId", F.round(F.col("rank"), 6).alias("rank"))
-    nodes = roads.select(F.col("src").alias("id")).union(
-        roads.select(F.col("dst").alias("id"))
-    ).distinct().localCheckpoint()
-    n = nodes.count()
-    edges = roads.select(F.col("src").alias("id"), F.col("dst")).localCheckpoint()
-    x = nodes.withColumn("r", F.lit(1.0 / n)).localCheckpoint()
-    for i in range(iters):
-        contrib = (
-            edges.join(x, "id")
-            .select(F.col("dst").alias("id"), F.col("r").alias("c"))
-            .groupBy("id")
-            .agg(F.sum("c").alias("c"))
-        )
-        norm = contrib.agg(
-            F.coalesce(F.sqrt(F.sum(F.col("c") * F.col("c"))), F.lit(0.0))
-        ).first()[0]
-        if norm == 0.0:
-            x = nodes.withColumn("r", F.lit(0.0))
-            break
-        x = (
-            nodes.join(contrib, "id", "left")
-            .select("id", (F.coalesce(F.col("c"), F.lit(0.0)) / F.lit(norm)).alias("r"))
-        )
-        if i % 4 == 3 or i == iters - 1:
-            x = x.localCheckpoint()
-    return x.select(F.col("id").alias("NodeId"), F.round(F.col("r"), 6).alias("rank"))
+        return _rounded(raw, "rank")
+    nodes = _p._node_ids(roads).localCheckpoint()
+    edges = roads.select("src", "dst").localCheckpoint()
+    x = _fixed_rounds(
+        _uniform(nodes, "v").localCheckpoint(),
+        lambda x, _t: _half(edges, nodes, x, "src", "dst"),
+        iters,
+    )
+    return _vector(nodes, x).select(
+        F.col("id").alias("NodeId"), F.round(F.col("v"), 6).alias("rank")
+    )
 
 
 def hits(
@@ -855,14 +874,14 @@ def hits(
     side dies the other follows on the next half-step in BOTH tiers.
 
     Tiers (``paths._tier``) mirror :func:`pagerank`: broadcast numpy kernel
-    (``kernel.hits_kernel`` — two gather+bincount scatter-adds per
-    iteration over the CSR edge arrays) below
+    (``kernel.hits_kernel`` — two ``kernel._half`` gather+bincount
+    scatter-adds per iteration over the CSR edge arrays) below
     ``paths.BROADCAST_EDGE_LIMIT``; above it, the superstep loop —
-    per iteration TWO keyed joins (edges ⋈ h on src → sum at dst;
-    edges ⋈ a on dst → sum at src), each with map-side partial
-    aggregation and a one-scalar L2-norm agg, ``localCheckpoint``
-    every few iterations to truncate the iterated-join lineage
-    (graph/bsp.py discipline)."""
+    per iteration two :func:`_half` steps (edges ⋈ h on src → sum at
+    dst; edges ⋈ a on dst → sum at src), each one keyed join with
+    map-side partial aggregation and a one-scalar L2-norm agg,
+    ``localCheckpoint`` every few iterations to truncate the
+    iterated-join lineage (graph/bsp.py discipline)."""
     if _p._tier(roads, strategy, projection, _p._TWO_TIERS) == "broadcast":
         raw = _p._run_kernel(
             roads,
@@ -870,55 +889,20 @@ def hits(
             lambda p: _k.hits_kernel(p, iters),
             "NodeId string NOT NULL, authority double NOT NULL, hub double NOT NULL",
         )
-        return raw.select(
-            "NodeId",
-            F.round(F.col("authority"), 6).alias("authority"),
-            F.round(F.col("hub"), 6).alias("hub"),
-        )
-    nodes = (
-        roads.select(F.col("src").alias("id"))
-        .union(roads.select(F.col("dst").alias("id")))
-        .distinct()
-        .localCheckpoint()
-    )
+        return _rounded(raw, "authority", "hub")
+    nodes = _p._node_ids(roads).localCheckpoint()
     edges = roads.select("src", "dst").localCheckpoint()
-    a = nodes.withColumn("v", F.lit(1.0)).localCheckpoint()
-    h = nodes.withColumn("v", F.lit(1.0)).localCheckpoint()
+    ones = nodes.withColumn("v", F.lit(1.0)).localCheckpoint()
 
-    def _half(mass: DataFrame, key: str, out: str) -> DataFrame:
-        """One HITS half-step: gather ``mass`` through the edges keyed
-        on ``key``, scatter-sum onto ``out``, L2-normalize (zeros if
-        the mass died)."""
-        contrib = (
-            edges.join(mass.withColumnRenamed("id", key), key)
-            .select(F.col(out).alias("id"), F.col("v").alias("c"))
-            .groupBy("id")
-            .agg(F.sum("c").alias("c"))
-        )
-        norm = contrib.agg(
-            F.coalesce(F.sqrt(F.sum(F.col("c") * F.col("c"))), F.lit(0.0))
-        ).first()[0]
-        if norm == 0.0:
-            return nodes.withColumn("v", F.lit(0.0))
-        return nodes.join(contrib, "id", "left").select(
-            "id", (F.coalesce(F.col("c"), F.lit(0.0)) / F.lit(norm)).alias("v")
-        )
+    def step(ah: tuple, _t: int) -> tuple:
+        a = _half(edges, nodes, ah[1], "src", "dst")
+        return a, _half(edges, nodes, a, "dst", "src")
 
-    for i in range(iters):
-        a = _half(h, "src", "dst")
-        h = _half(a, "dst", "src")
-        if i % 4 == 3 or i == iters - 1:
-            a = a.localCheckpoint()
-            h = h.localCheckpoint()
-    return (
-        nodes.join(a.withColumnRenamed("v", "authority"), "id")
-        .join(h.withColumnRenamed("v", "hub"), "id")
-        .select(
-            F.col("id").alias("NodeId"),
-            F.round(F.col("authority"), 6).alias("authority"),
-            F.round(F.col("hub"), 6).alias("hub"),
-        )
+    a, h = _fixed_rounds((ones, ones), step, iters)
+    scores = _vector(nodes, a).withColumnRenamed("v", "authority").join(
+        _vector(nodes, h).withColumnRenamed("v", "hub"), "id"
     )
+    return _rounded(scores.withColumnRenamed("id", "NodeId"), "authority", "hub")
 
 
 def random_walks(
@@ -958,14 +942,9 @@ def random_walks(
         raise ValueError("walks_per_node must be >= 1")
     from pyspark.sql import Window
 
-    adj = (
-        roads.filter(F.col("src") != F.col("dst"))
-        .select("src", "dst")
-        .distinct()
-    )
     w = Window.partitionBy("src").orderBy("dst")
     adj_idx = (
-        adj.withColumn("idx", F.row_number().over(w) - 1)
+        _directed_simple(roads).withColumn("idx", F.row_number().over(w) - 1)
         .select(F.col("src").alias("_asrc"), F.col("dst").alias("_adst"), "idx")
         .localCheckpoint()
     )
@@ -975,14 +954,13 @@ def random_walks(
         .localCheckpoint()
     )
     if seeds is None:
-        seeds = roads.select(F.col("src").alias("id")).union(
-            roads.select(F.col("dst").alias("id"))
-        ).distinct()
+        seeds = _p._node_ids(roads)
     state = seeds.select(
         F.col("id").alias("seed"),
         F.explode(F.sequence(F.lit(0), F.lit(walks_per_node - 1))).alias("walk_id"),
     ).select("seed", "walk_id", F.col("seed").alias("cur"), F.array(F.col("seed")).alias("path"))
-    for t in range(1, walk_length + 1):
+
+    def step(state: DataFrame, t: int) -> DataFrame:
         key = F.concat_ws(
             "|", F.col("seed"), F.col("walk_id").cast("string"), F.lit(str(t)), F.col("cur")
         )
@@ -1001,9 +979,9 @@ def random_walks(
         )
         # sinks drop out of `stepped`; keep their finished partial walks
         finished = state.join(deg, state["cur"] == deg["_dsrc"], "left_anti")
-        state = stepped.unionByName(finished.select("seed", "walk_id", "cur", "path"))
-        if t % 4 == 0 or t == walk_length:
-            state = state.localCheckpoint()
+        return stepped.unionByName(finished.select("seed", "walk_id", "cur", "path"))
+
+    state = _fixed_rounds(state, step, walk_length)
     return state.select(
         "seed", "walk_id", F.posexplode("path").alias("step", "NodeId")
     ).withColumn("walk_id", F.col("walk_id").cast("bigint")).withColumn(
@@ -1070,13 +1048,7 @@ def _msf_superstep(roads: DataFrame, max_rounds: int = 64) -> DataFrame:
         .agg(F.min("cost").alias("cost"))
         .localCheckpoint(eager=True)
     )
-    comp = (
-        roads.select(F.col("src").alias("id"))
-        .union(roads.select(F.col("dst").alias("id")))
-        .distinct()
-        .withColumn("root", F.col("id"))
-        .localCheckpoint(eager=True)
-    )
+    comp = _p._node_ids(roads).withColumn("root", F.col("id")).localCheckpoint(eager=True)
     chosen: DataFrame | None = None
     for _round in range(max_rounds):
         e = (
@@ -1167,11 +1139,7 @@ def node_similarity(
     # keyed tables (|E| and |V| rows) collapses the recomputation: one
     # distinct, one degree agg, every other reference an
     # InMemoryTableScan.
-    nbrs = tracked_cache(
-        roads.select("src", "dst")
-        .filter(F.col("src") != F.col("dst"))
-        .distinct()
-    )
+    nbrs = tracked_cache(_directed_simple(roads))
     deg = tracked_cache(
         nbrs.groupBy("src").agg(F.count("*").alias("_d")).filter(
             F.col("_d") >= F.lit(int(degree_cutoff))
@@ -1225,13 +1193,7 @@ def clustering_coefficient(roads: DataFrame) -> DataFrame:
     each closed triangle to its three corners — three keyed unions,
     one groupBy. Ratios are exact IEEE quotients; the two means ride
     the 6-dp comparator quantum (summation wobble ~1e-13)."""
-    und = (
-        roads.select(
-            F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
-        )
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-    )
+    und = _undirected(roads)
     deg = (
         und.select(F.col("a").alias("v"))
         .unionByName(und.select(F.col("b").alias("v")))
@@ -1308,13 +1270,7 @@ def modularity(roads: DataFrame, communities: DataFrame) -> DataFrame:
         F.col(communities.columns[0]).alias("_n"),
         F.col(communities.columns[1]).alias("_c"),
     )
-    und = (
-        roads.select(
-            F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
-        )
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-    )
+    und = _undirected(roads)
     tagged = und.join(
         comm.select(F.col("_n").alias("a"), F.col("_c").alias("_ca")), "a"
     ).join(comm.select(F.col("_n").alias("b"), F.col("_c").alias("_cb")), "b")
@@ -1393,13 +1349,7 @@ def degree_assortativity(roads: DataFrame) -> DataFrame:
     keyed aggregates: degree groupBy, two joins tagging endpoint
     degrees, one ``corr`` aggregate — the correlation's float sums
     ride the 6-dp comparator quantum."""
-    und = (
-        roads.select(
-            F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
-        )
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-    )
+    und = _undirected(roads)
     deg = (
         und.select(F.col("a").alias("v"))
         .unionByName(und.select(F.col("b").alias("v")))
@@ -1435,11 +1385,7 @@ def _hyperball_init(roads: DataFrame, m: int) -> DataFrame:
     seed, computed with JVM xxhash64 (bucket = pmod(xxhash64(id), m);
     rho = leading-zero rank of xxhash64(id, 1): negative → 1, zero →
     65, else 65 − bit_length via length(bin(x)))."""
-    nodes = (
-        roads.select(F.col("src").alias("NodeId"))
-        .union(roads.select(F.col("dst").alias("NodeId")))
-        .distinct()
-    )
+    nodes = _p._node_ids(roads, "NodeId")
     h2 = F.xxhash64("NodeId", F.lit(1))
     rho = (
         F.when(h2 < 0, F.lit(1))
@@ -1497,8 +1443,8 @@ def _hyperball_superstep(
     """Past-broadcast HyperBall tier (see :func:`hyperball`):
     dense-long registers, one join + max-agg + estimate per round."""
     spark = roads.sparkSession
-    alpha = _hll_alpha_py(m)
-    edges = roads.select("src", "dst").filter(F.col("src") != F.col("dst")).distinct()
+    alpha = _k._hll_alpha(m)
+    edges = _directed_simple(roads)
     # dense long layout: every (node, idx) present, val 0 when unset
     idxs = spark.range(int(m)).select(F.col("id").cast("int").alias("idx"))
     regs = (
@@ -1524,10 +1470,13 @@ def _hyperball_superstep(
             (raw <= F.lit(2.5 * m)) & (F.col("_z") > 0),
             F.lit(float(m)) * F.log(F.lit(float(m)) / F.col("_z")),
         ).otherwise(raw)
-        row = per_node.select(est.alias("_e")).agg(F.sum("_e").alias("nf")).collect()[0]
-        return round(float(row["nf"]), 6)
+        nf = per_node.select(est.alias("_e")).agg(F.sum("_e")).collect()[0][0]
+        return None if nf is None else round(float(nf), 6)
 
-    out = [(0, estimate(regs))]
+    nf0 = estimate(regs)
+    if nf0 is None:  # no nodes: the kernel tier's empty answer
+        return local_df(spark, [], _HYPERBALL_DDL)
+    out = [(0, nf0)]
     for t in range(1, t_max + 1):
         msgs = (
             edges.join(regs.withColumnRenamed("node", "dst"), "dst")
@@ -1541,16 +1490,6 @@ def _hyperball_superstep(
         )
         out.append((t, estimate(regs)))
     return local_df(spark, out, _HYPERBALL_DDL)
-
-
-def _hll_alpha_py(m: int) -> float:
-    if m <= 16:
-        return 0.673
-    if m <= 32:
-        return 0.697
-    if m <= 64:
-        return 0.709
-    return 0.7213 / (1.0 + 1.079 / m)
 
 
 def truss_decomposition(
@@ -1584,14 +1523,7 @@ def truss_decomposition(
 def _ktruss_superstep(roads: DataFrame, max_rounds: int = 1000) -> DataFrame:
     """Past-broadcast truss tier (see :func:`truss_decomposition`)."""
     spark = roads.sparkSession
-    alive = (
-        roads.select(
-            F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
-        )
-        .filter(F.col("a") != F.col("b"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    alive = _undirected(roads).localCheckpoint(eager=True)
     out: DataFrame | None = None
     k = 3
     rounds = 0

@@ -864,7 +864,7 @@ def reverse_dist_to(proj: Projection, t: int) -> list[float]:
 
 
 # ---------------------------------------------------------------------------
-# Analytics kernels: WCC / PageRank / LPA on the broadcast projection
+# Analytics kernels on the broadcast projection
 # ---------------------------------------------------------------------------
 # The small-graph tier of the analytics family (graph/etl.py dispatches):
 # below BROADCAST_EDGE_LIMIT these run as ONE executor task over the
@@ -874,7 +874,7 @@ def reverse_dist_to(proj: Projection, t: int) -> list[float]:
 # here). Each kernel replicates its DataFrame twin's pinned contract
 # exactly (WCC min-STRING-label, PageRank power-iteration math with
 # uniform dangling redistribution, LPA integer votes with
-# smallest-STRING-label ties); paths.py keeps the superstep loops as the
+# smallest-STRING-label ties); etl.py keeps the superstep loops as the
 # past-broadcast strategy.
 
 
@@ -917,36 +917,6 @@ def wcc_kernel(proj: Projection):
     ids = pd.Series(np.asarray(proj.ids, dtype=object))
     labels = ids.groupby(parent).transform("min")
     return list(zip(proj.ids, labels.tolist()))
-
-
-def pagerank_kernel(
-    proj: Projection, damping: float = 0.85, iters: int = 20
-):
-    """PageRank power iteration over the directed multigraph — the
-    exact math of ``etl.pagerank``'s superstep loop (parallel edges
-    each carry mass; dangling mass redistributed uniformly;
-    fixed-iteration, no convergence test), vectorized: per iteration
-    one gather (r/deg over edge sources) + one ``np.bincount``
-    scatter-add onto destinations. Returns RAW (node id, rank) —
-    the caller applies the 6-dp F.round determinism contract
-    DataFrame-side, same as the superstep twin (summation-order wobble
-    ~1e-13 vs the 1e-6 quantum)."""
-    n = len(proj.ids)
-    if n == 0:
-        return []
-    deg = np.diff(proj.indptr).astype(np.float64)
-    srcs = proj.esrc()
-    dangling_mask = deg == 0.0
-    has_out = ~dangling_mask
-    safe_deg = np.where(has_out, deg, 1.0)
-    r = np.full(n, 1.0 / n)
-    for _ in range(iters):
-        dangling = float(r[dangling_mask].sum())
-        share = (r / safe_deg)[srcs]
-        contrib = np.bincount(proj.adj_v, weights=share, minlength=n)
-        base = (1.0 - damping) / n + damping * dangling / n
-        r = base + damping * contrib
-    return list(zip(proj.ids, r.tolist()))
 
 
 def lpa_kernel(proj: Projection, iters: int = 10):
@@ -1222,33 +1192,40 @@ def biconnectivity_kernel(proj: Projection, parallel_pairs: set | None = None):
 
 def ppr_kernel(
     proj: Projection,
-    sources: Sequence[str],
+    sources: Sequence[str] | None,
     damping: float = 0.85,
     iters: int = 20,
 ):
-    """Personalized PageRank / random walk with restart (Haveliwala
-    2002; GDS personalized pageRank): :func:`pagerank_kernel` with the
-    teleport vector restricted to ``sources`` — restart mass
-    (1 - damping) AND dangling mass both return to the source set
-    uniformly, never to the whole graph, so rank concentrates around
-    the seeds (the recommendation / local-relevance primitive).
-    r0 is uniform over the sources; unreachable nodes stay exactly
-    0.0. Same fixed-iteration, raw-float-out contract as
-    ``pagerank_kernel`` (caller rounds to 6 dp)."""
+    """(Personalized) PageRank / random walk with restart (Haveliwala
+    2002; GDS pageRank, with sourceNodes when ``sources`` is given):
+    power iteration over the directed multigraph (parallel edges each
+    carry mass), fixed ``iters`` iterations, no convergence test.
+    Restart mass (1 - damping) AND dangling mass both return along the
+    restart vector: uniform over ``sources``, so rank concentrates
+    around the seeds (the recommendation / local-relevance primitive),
+    or uniform over every node when ``sources`` is None (plain
+    PageRank). r0 is the restart vector; nodes unreachable from the
+    sources stay exactly 0.0. Vectorized: per iteration one gather
+    (r/deg over edge sources) + one ``np.bincount`` scatter-add onto
+    destinations. Returns RAW (node id, rank) — the caller applies the
+    6-dp F.round determinism contract DataFrame-side, same as the
+    superstep twin (summation-order wobble ~1e-13 vs the 1e-6
+    quantum)."""
     n = len(proj.ids)
     if n == 0:
         return []
-    idx = [proj.index[s] for s in sources if s in proj.index]
-    if not idx:
-        raise ValueError("ppr_kernel: no source is present in the graph")
-    k = len(idx)
+    if sources is None:
+        restart = np.full(n, 1.0 / n)
+    else:
+        idx = [proj.index[s] for s in sources if s in proj.index]
+        if not idx:
+            raise ValueError("ppr_kernel: no source is present in the graph")
+        restart = np.zeros(n)
+        restart[idx] = 1.0 / len(idx)
     deg = np.diff(proj.indptr).astype(np.float64)
     srcs = proj.esrc()
     dangling_mask = deg == 0.0
-    has_out = ~dangling_mask
-    safe_deg = np.where(has_out, deg, 1.0)
-    restart = np.zeros(n)
-    restart[idx] = 1.0 / k
+    safe_deg = np.where(dangling_mask, 1.0, deg)
     r = restart.copy()
     for _ in range(iters):
         dangling = float(r[dangling_mask].sum())
@@ -1258,28 +1235,36 @@ def ppr_kernel(
     return list(zip(proj.ids, r.tolist()))
 
 
+def _half(gather: np.ndarray, scatter: np.ndarray, mass: np.ndarray) -> np.ndarray:
+    """One power-iteration half-step over the edge arrays: gather
+    ``mass`` at each edge's ``gather`` end, scatter-add it onto the
+    ``scatter`` end, L2-normalise — zeros when the mass died (no
+    divide-by-zero), and zeros stay zeros. HITS takes two per
+    iteration, eigenvector centrality one. DataFrame twin:
+    ``etl._half``."""
+    c = np.bincount(scatter, weights=mass[gather], minlength=len(mass))
+    norm = float(np.sqrt((c * c).sum()))
+    return c / norm if norm > 0.0 else np.zeros(len(mass))
+
+
 def eigenvector_kernel(proj: Projection, iters: int = 20):
     """Eigenvector centrality by power iteration (Bonacich 1987; the
     GDS eigenvector contract): x ← normalize2(Aᵀ x) from a uniform
-    start, fixed ``iters`` iterations — centrality flows along edge
-    direction onto targets, parallel edges each carry mass (multigraph
-    convention, same as :func:`pagerank_kernel`). If the in-mass dies
-    (no edges, or a DAG where everything drains), the zero vector is
-    returned rather than dividing by zero. Raw floats out — caller
-    applies the 6-dp F.round contract (summation-order wobble through
-    the normalization ~1e-13 vs the 1e-6 quantum)."""
+    start, fixed ``iters`` iterations — one :func:`_half` each, so
+    centrality flows along edge direction onto targets, parallel edges
+    each carry mass (multigraph convention, same as
+    :func:`ppr_kernel`). If the in-mass dies (no edges, or a DAG where
+    everything drains), the zero vector is returned rather than
+    dividing by zero. Raw floats out — caller applies the 6-dp F.round
+    contract (summation-order wobble through the normalization ~1e-13
+    vs the 1e-6 quantum)."""
     n = len(proj.ids)
     if n == 0:
         return []
     srcs = proj.esrc()
     x = np.full(n, 1.0 / n)
     for _ in range(iters):
-        contrib = np.bincount(proj.adj_v, weights=x[srcs], minlength=n)
-        norm = float(np.sqrt((contrib * contrib).sum()))
-        if norm == 0.0:
-            x = np.zeros(n)
-            break
-        x = contrib / norm
+        x = _half(srcs, proj.adj_v, x)
     return list(zip(proj.ids, x.tolist()))
 
 
@@ -1673,10 +1658,10 @@ def hits_kernel(proj: Projection, iters: int = 20):
     node is a good AUTHORITY when good hubs point at it, a good HUB
     when it points at good authorities. Parallel edges each carry
     mass (the family's multigraph convention, same as
-    :func:`pagerank_kernel` / :func:`eigenvector_kernel`).
+    :func:`ppr_kernel` / :func:`eigenvector_kernel`).
 
-    Each half-step is one gather + one bincount scatter-add over the
-    edge arrays — O(E) per iteration, whole-array numpy, no per-node
+    Each :func:`_half` step is one gather + one bincount scatter-add
+    over the edge arrays — O(E) per iteration, whole-array numpy, no per-node
     Python. If a side's mass dies (no edges, or every edge leaves a
     side empty) that vector is returned as zeros rather than dividing
     by zero — and once one side is zero the other goes zero on the
@@ -1692,10 +1677,6 @@ def hits_kernel(proj: Projection, iters: int = 20):
     a = np.full(n, 1.0)
     h = np.full(n, 1.0)
     for _ in range(iters):
-        a_new = np.bincount(dsts, weights=h[srcs], minlength=n)
-        na = float(np.sqrt((a_new * a_new).sum()))
-        a = a_new / na if na > 0.0 else np.zeros(n)
-        h_new = np.bincount(srcs, weights=a[dsts], minlength=n)
-        nh = float(np.sqrt((h_new * h_new).sum()))
-        h = h_new / nh if nh > 0.0 else np.zeros(n)
+        a = _half(srcs, dsts, h)
+        h = _half(dsts, srcs, a)
     return list(zip(proj.ids, a.tolist(), h.tolist()))

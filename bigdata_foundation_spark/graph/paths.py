@@ -905,6 +905,16 @@ def _reject_zero_weight_edges(proj: _k.Projection, op: str) -> None:
         )
 
 
+def _node_ids(roads: DataFrame, name: str = "id") -> DataFrame:
+    """Every edge endpoint once, as column ``name``: the node set of a
+    graph known only by its edge table."""
+    return (
+        roads.select(F.col("src").alias(name))
+        .union(roads.select(F.col("dst").alias(name)))
+        .distinct()
+    )
+
+
 def _sampled_sources(roads: DataFrame, n_sources: int | None) -> list[str]:
     """Deterministic hash-spread source sample for the centrality
     family: the ``n_sources`` node ids with smallest
@@ -916,12 +926,7 @@ def _sampled_sources(roads: DataFrame, n_sources: int | None) -> list[str]:
     collect is bounded by the same driver footprint the broadcast
     projection already paid. The hash ordering is kept either way so
     task batches are deterministic."""
-    ids_df = (
-        roads.select(F.col("src").alias("id"))
-        .union(roads.select(F.col("dst").alias("id")))
-        .distinct()
-    )
-    q = ids_df.orderBy(F.xxhash64("id").asc(), F.col("id").asc())
+    q = _node_ids(roads).orderBy(F.xxhash64("id").asc(), F.col("id").asc())
     if n_sources is not None:
         q = q.limit(n_sources)
     return [r["id"] for r in q.collect()]
@@ -1084,12 +1089,7 @@ def closeness_centrality(
     n_reachable) sorted by NodeId."""
     proj = projection or build_projection(roads)
     _reject_zero_weight_edges(proj, "closeness_centrality")
-    ids_df = (
-        roads.select(F.col("src").alias("id"))
-        .union(roads.select(F.col("dst").alias("id")))
-        .distinct()
-    )
-    n_nodes = ids_df.count()
+    n_nodes = _node_ids(roads).count()
     wf = bool(wf_correction)
     denom = max(n_nodes - 1, 1)
 

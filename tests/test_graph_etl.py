@@ -206,8 +206,8 @@ def test_analytics_kernel_tier_equals_superstep_csv1(spark, graph1):
     9,696 edges): the kernel tier must hash-match the superstep tier
     row for row — this is what keeps the graph_components /
     graph_pagerank / graph_label_propagation gate hashes unchanged.
-    (The 70k-edge equivalence assert lives in tools/kernel_bench.py,
-    where the superstep tier's ~50s is already being measured.)"""
+    (The 70k-edge equivalence assert lives in tools/analytics_bench.py,
+    where the superstep tier's cost is already being measured.)"""
     from bigdata_foundation_spark.graph.etl import (
         _connected_components_superstep,
         connected_components,
@@ -241,17 +241,14 @@ def test_analytics_auto_dispatch_uses_kernel_below_limit(spark, graph1, monkeypa
     assert comp.count() == 3705
 
 
-def test_scc_and_kcore_tiers_equal(spark, graph1):
+def test_scc_and_kcore_tiers_equal(spark):
     """Round-6 additions: strongly connected components (Tarjan kernel
     tier vs Forward-Backward coloring superstep tier) and k-core
     decomposition (Batagelj-Zaversnik kernel vs distributed h-index
     iteration) must agree row-for-row. Toys cover self-loops, 2-cycles,
     pendant nodes and string-vs-numeric id order; a 400-node random
     digraph (low diameter — the superstep tier's fast regime) covers
-    non-trivial SCC structure; CSV1 covers the real road graph for
-    k-core (its mostly-bidirectional edges make the h-index loop
-    converge quickly; SCC's forward coloring there is diameter-bound,
-    so its real-graph check is the Kosaraju-replay gate oracle)."""
+    non-trivial SCC structure. Needs no reference CSV."""
     import random
 
     from bigdata_foundation_spark.graph.etl import (
@@ -284,9 +281,51 @@ def test_scc_and_kcore_tiers_equal(spark, graph1):
     assert sorted(map(tuple, core_decomposition(spark, rdf, strategy="broadcast").collect())) == \
         sorted(map(tuple, _kcore_superstep(spark, rdf).collect()))
 
+
+def test_kcore_tiers_equal_csv1(spark, graph1):
+    """k-core tier equivalence on the real CSV1 road graph (its mostly
+    bidirectional edges make the h-index loop converge quickly; SCC's
+    forward coloring there is diameter-bound, so its real-graph check
+    is the Kosaraju-replay gate oracle)."""
+    from bigdata_foundation_spark.graph.etl import _kcore_superstep, core_decomposition
+
     _nodes, roads = graph1
     assert sorted(map(tuple, core_decomposition(spark, roads, strategy="broadcast").collect())) == \
         sorted(map(tuple, _kcore_superstep(spark, roads).collect()))
+
+
+def _two_tier_analytics():
+    from bigdata_foundation_spark.graph import etl as E
+
+    return {
+        "connected_components": lambda spark, r, s: E.connected_components(r, strategy=s),
+        "pagerank": lambda spark, r, s: E.pagerank(spark, r, strategy=s),
+        "label_propagation": lambda spark, r, s: E.label_propagation(spark, r, strategy=s),
+        "strongly_connected_components":
+            lambda spark, r, s: E.strongly_connected_components(r, strategy=s),
+        "core_decomposition": lambda spark, r, s: E.core_decomposition(spark, r, strategy=s),
+        "personalized_pagerank":
+            lambda spark, r, s: E.personalized_pagerank(spark, r, ["a"], strategy=s),
+        "eigenvector_centrality":
+            lambda spark, r, s: E.eigenvector_centrality(spark, r, strategy=s),
+        "hits": lambda spark, r, s: E.hits(spark, r, strategy=s),
+        "minimum_spanning_forest": lambda spark, r, s: E.minimum_spanning_forest(r, strategy=s),
+        "hyperball": lambda spark, r, s: E.hyperball(r, t_max=3, strategy=s),
+        "truss_decomposition": lambda spark, r, s: E.truss_decomposition(r, strategy=s),
+    }
+
+
+@pytest.mark.parametrize("name", sorted(_two_tier_analytics()))
+def test_two_tier_analytics_on_empty_edge_table(spark, name):
+    """An empty edge table is a graph with no nodes: every two-tier
+    analytic returns the same (empty) rows on the superstep tier as on
+    the broadcast kernel tier, instead of dividing by a zero node
+    count or summing an empty estimate."""
+    run = _two_tier_analytics()[name]
+    empty = spark.createDataFrame([], "src string, dst string, cost double, road_id string")
+    bsp = sorted(map(tuple, run(spark, empty, "bsp").collect()))
+    broadcast = sorted(map(tuple, run(spark, empty, "broadcast").collect()))
+    assert bsp == broadcast
 
 
 def test_biconnectivity_toy_graphs(spark):

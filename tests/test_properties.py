@@ -336,13 +336,14 @@ def test_kcore_kernel_matches_naive_peeling(edges):
 @given(edges=_graph_edges)
 @settings(max_examples=40, deadline=None)
 def test_pagerank_kernel_mass_and_replay(edges):
-    """pagerank_kernel: total mass == 1 (uniform dangling
-    redistribution), every rank >= (1-d)/n, and the values match a
-    definition-level python power iteration to float tolerance."""
-    from bigdata_foundation_spark.graph.kernel import pagerank_kernel
+    """PageRank's kernel (ppr_kernel over every node): total mass == 1
+    (uniform dangling redistribution), every rank >= (1-d)/n, and the
+    values match a definition-level python power iteration to float
+    tolerance."""
+    from bigdata_foundation_spark.graph.kernel import ppr_kernel
 
     proj = _proj_of(edges)
-    got = dict(pagerank_kernel(proj, 0.85, 8))
+    got = dict(ppr_kernel(proj, None, 0.85, 8))
     n = len(proj.ids)
     assert abs(sum(got.values()) - 1.0) < 1e-9
     assert all(v >= (1 - 0.85) / n - 1e-12 for v in got.values())
