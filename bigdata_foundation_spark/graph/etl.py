@@ -351,9 +351,9 @@ def connected_components(
 
     Tiers (``paths._tier``):
 
-    * ``broadcast`` (auto below ``paths.BROADCAST_EDGE_LIMIT``): one
-      executor task runs the vectorized min-hook + pointer-jumping
-      kernel (``kernel.wcc_kernel``) over the broadcast CSR. A 70k-edge
+    * ``broadcast`` (auto below ``paths.BROADCAST_EDGE_LIMIT``): the
+      calling process runs the vectorized min-hook + pointer-jumping
+      kernel (``kernel.wcc_kernel``) over the driver-held CSR. A 70k-edge
       graph is milliseconds of numpy; the superstep loop spent ~30s of
       pure per-superstep scheduling floor on it (KERNEL_BENCH.md).
     * ``bsp`` (auto above the limit): the generic distributed min-label
@@ -422,8 +422,8 @@ def pagerank(
     and runs through the same code on both tiers (``paths._tier``):
     ``broadcast`` (auto below ``paths.BROADCAST_EDGE_LIMIT``) runs
     ``kernel.ppr_kernel`` over every node — one gather + one bincount
-    scatter-add per iteration — as a single executor task over the
-    broadcast CSR; ``bsp`` (auto above) runs :func:`_ppr_superstep`.
+    scatter-add per iteration — in the calling process over the
+    driver-held CSR; ``bsp`` (auto above) runs :func:`_ppr_superstep`.
     Rank values agree within the 6-dp rounding contract (float
     summation order is the only difference, wobble ~1e-13 vs the 1e-6
     quantum).
@@ -453,12 +453,15 @@ def _ppr(roads: DataFrame, sources, damping: float, iters: int, tier: str, proje
     nodes = _p._node_ids(roads).localCheckpoint()
     if sources is None:
         return _ppr_superstep(roads, _uniform(nodes, "rs").localCheckpoint(), damping, iters)
-    k = len(set(sources))
+    n, present = nodes.agg(
+        F.count("*"), F.collect_set(F.when(F.col("id").isin(list(set(sources))), F.col("id")))
+    ).first()
+    if n == 0:  # no nodes, no ranks: the kernel tier's answer, whatever the sources
+        return _ppr_superstep(roads, nodes.withColumn("rs", F.lit(0.0)), damping, iters)
+    seeds = _k.restart_seeds(sources, present)
     restart = nodes.withColumn(
-        "rs", F.when(F.col("id").isin(list(sources)), F.lit(1.0 / k)).otherwise(F.lit(0.0))
+        "rs", F.when(F.col("id").isin(seeds), F.lit(1.0 / len(seeds))).otherwise(F.lit(0.0))
     ).localCheckpoint()
-    if restart.agg(F.sum("rs")).first()[0] == 0.0:
-        raise ValueError("personalized_pagerank: no source is present in the graph")
     return _ppr_superstep(roads, restart, damping, iters)
 
 
@@ -519,8 +522,8 @@ def label_propagation(
     Tiers (``paths._tier``): ``broadcast``
     (auto below ``paths.BROADCAST_EDGE_LIMIT``) runs
     ``kernel.lpa_kernel`` — the identical vote/tie-break contract,
-    vectorized as one np.unique count + lexsort argmax per round — as
-    a single executor task over the broadcast CSR; ``bsp`` (auto
+    vectorized as one np.unique count + lexsort argmax per round — in
+    the calling process over the driver-held CSR; ``bsp`` (auto
     above) runs the superstep loop: per round one keyed join
     (edges ⋈ labels) + one count aggregate + one per-node window
     argmax — all shuffles keyed on node id; ``localCheckpoint``
@@ -568,9 +571,9 @@ def strongly_connected_components(
 
     Tiers (``paths._tier``): ``broadcast`` (auto below
     ``paths.BROADCAST_EDGE_LIMIT``) runs iterative Tarjan
-    (``kernel.scc_kernel``) as one executor task over the broadcast
-    CSR — SCC is a depth-first property, so the sequential kernel IS
-    the fast path wherever the projection fits. ``bsp`` (auto above)
+    (``kernel.scc_kernel``) in the calling process over the
+    driver-held CSR — SCC is a depth-first property, so the
+    sequential kernel IS the fast path wherever the projection fits. ``bsp`` (auto above)
     runs the Forward-Backward coloring superstep loop
     (:func:`_scc_superstep`, Fleischer et al. 2000 / Orzan 2004):
     rounds of (forward max-color propagation to fixpoint → backward
@@ -667,7 +670,7 @@ def core_decomposition(
 
     Tiers (``paths._tier``): ``broadcast`` (auto below
     ``paths.BROADCAST_EDGE_LIMIT``) runs Batagelj–Zaveršnik bucket
-    peeling (``kernel.kcore_kernel``) as one executor task; ``bsp``
+    peeling (``kernel.kcore_kernel``) in the calling process; ``bsp``
     (auto above) runs the distributed h-index iteration
     (:func:`_kcore_superstep`, Montresor et al. 2011): every node
     starts at its degree and repeatedly becomes the h-index of its
@@ -757,8 +760,8 @@ def bridge_edges(roads: DataFrame, projection=None) -> DataFrame:
     Pairs joined by >= 2 distinct physical roads are never bridges
     (``_parallel_pairs``); a two-way road is one physical edge.
 
-    Tier: broadcast kernel only (one executor task over the CSR, like
-    the sampled centralities). Biconnectivity past the broadcast limit
+    Tier: broadcast kernel only (run in the calling process over the
+    driver-held CSR). Biconnectivity past the broadcast limit
     needs Tarjan–Vishkin Euler-tour machinery — a documented
     non-goal; the projection fits for any graph the reference's
     workload shape produces (SURVEY.md §4.2)."""
@@ -798,7 +801,9 @@ def personalized_pagerank(
     """Personalized PageRank / random walk with restart (Haveliwala
     2002; GDS pageRank with sourceNodes): :func:`pagerank` with the
     teleport vector restricted to ``sources`` — restart mass AND
-    dangling mass return to the seed set uniformly, so rank
+    dangling mass return uniformly to the distinct sources that are
+    nodes of the graph (``kernel.restart_seeds``, the same on both
+    tiers; ``ValueError`` when none is), so rank
     concentrates around the seeds. The local-relevance /
     recommendation primitive. Returns (NodeId, rank) for every node
     (unreachable nodes are exactly 0.0 before rounding), rank rounded
@@ -1011,9 +1016,9 @@ def minimum_spanning_forest(
 
     Tiers (``paths._tier``):
 
-    * ``broadcast`` (auto below ``paths.BROADCAST_EDGE_LIMIT``): one
-      executor task runs vectorized Borůvka (``kernel.msf_kernel``)
-      over the broadcast CSR — lexsort + first-occurrence pick +
+    * ``broadcast`` (auto below ``paths.BROADCAST_EDGE_LIMIT``): the
+      calling process runs vectorized Borůvka (``kernel.msf_kernel``)
+      over the driver-held CSR — lexsort + first-occurrence pick +
       scatter-min hooking, O(log n) whole-array rounds.
     * ``bsp`` (auto above the limit): distributed Borůvka. Each round
       is (1) one join of the collapsed pair table against the
@@ -1318,8 +1323,8 @@ def louvain(
 
     KERNEL TIER ONLY, like the biconnectivity family: the
     modularity-greedy local-moving sweep is order-dependent by
-    definition, so it has no faithful superstep twin — one executor
-    task runs ``kernel.louvain_kernel`` over the broadcast CSR
+    definition, so it has no faithful superstep twin — the calling
+    process runs ``kernel.louvain_kernel`` over the driver-held CSR
     (deterministic sweep order + tie-breaks; see the kernel docstring
     for the pinned contract). Past ``paths.BROADCAST_EDGE_LIMIT``
     use :func:`label_propagation` (the distributed community path) and
@@ -1505,7 +1510,8 @@ def truss_decomposition(
     ladder. Returns (src, dst, truss) with src < dst.
 
     Tiers: below ``paths.BROADCAST_EDGE_LIMIT`` the incremental
-    min-support peel (``kernel.ktruss_kernel``, one executor task);
+    min-support peel (``kernel.ktruss_kernel``, in the calling
+    process);
     past it LEVEL-SYNCHRONOUS peeling — for ascending k, repeatedly
     drop every edge whose in-subgraph support < k−2 (support = one
     wedge join + ordered-pair semi-join over the live edge set, the

@@ -4,11 +4,12 @@ This module is the compute core behind the kernel tiers of
 ``paths.py``. It mirrors the reference's execution model: GDS
 materializes an in-memory projection and runs the algorithm
 single-machine even in cluster mode (neo4j-code.txt:3–15; SURVEY.md
-§4.2). Point queries (Dijkstra, A*, Yen) call it in the driver against
-the driver-held projection; multi-source work (SSSP/APSP waves, the
-centralities) calls it inside executor tasks over the broadcast
-projection, one task per source batch. The per-query kernel is the
-same binary-heap Dijkstra family either way.
+§4.2). Single-call work (Dijkstra, A*, Yen, SSSP, the analytics)
+calls it in the driver against the driver-held projection;
+multi-source work (APSP waves, the centralities) calls it inside
+executor tasks over the broadcast projection, one task per source
+batch. The per-query kernel is the same binary-heap Dijkstra family
+either way.
 
 Node ids are dictionary-encoded to dense ints and adjacency is stored
 CSR-style (flat indptr / neighbor / weight arrays) at projection
@@ -867,8 +868,8 @@ def reverse_dist_to(proj: Projection, t: int) -> list[float]:
 # Analytics kernels on the broadcast projection
 # ---------------------------------------------------------------------------
 # The small-graph tier of the analytics family (graph/etl.py dispatches):
-# below BROADCAST_EDGE_LIMIT these run as ONE executor task over the
-# broadcast CSR instead of a multi-superstep DataFrame loop whose
+# below BROADCAST_EDGE_LIMIT these run in the driver over the
+# driver-held CSR instead of a multi-superstep DataFrame loop whose
 # per-superstep scheduling floor dwarfs the actual work (measured at 70k
 # edges: WCC 29.6s / PageRank 12.8s as superstep loops — milliseconds
 # here). Each kernel replicates its DataFrame twin's pinned contract
@@ -1190,6 +1191,18 @@ def biconnectivity_kernel(proj: Projection, parallel_pairs: set | None = None):
     return bridges, articulation
 
 
+def restart_seeds(sources: Iterable[str], present) -> list[str]:
+    """Personalized PageRank's restart set, one contract for both
+    tiers: the distinct ``sources`` that are nodes of the graph
+    (``present`` answers ``in``), sorted. The restart vector is
+    uniform over them, so a repeated or absent source id changes
+    nothing. ``ValueError`` when none is present."""
+    seeds = sorted({s for s in sources if s in present})
+    if not seeds:
+        raise ValueError("personalized_pagerank: no source is present in the graph")
+    return seeds
+
+
 def ppr_kernel(
     proj: Projection,
     sources: Sequence[str] | None,
@@ -1201,7 +1214,8 @@ def ppr_kernel(
     power iteration over the directed multigraph (parallel edges each
     carry mass), fixed ``iters`` iterations, no convergence test.
     Restart mass (1 - damping) AND dangling mass both return along the
-    restart vector: uniform over ``sources``, so rank concentrates
+    restart vector: uniform over the distinct ``sources`` present
+    (:func:`restart_seeds`), so rank concentrates
     around the seeds (the recommendation / local-relevance primitive),
     or uniform over every node when ``sources`` is None (plain
     PageRank). r0 is the restart vector; nodes unreachable from the
@@ -1217,9 +1231,7 @@ def ppr_kernel(
     if sources is None:
         restart = np.full(n, 1.0 / n)
     else:
-        idx = [proj.index[s] for s in sources if s in proj.index]
-        if not idx:
-            raise ValueError("ppr_kernel: no source is present in the graph")
+        idx = [proj.index[s] for s in restart_seeds(sources, proj.index)]
         restart = np.zeros(n)
         restart[idx] = 1.0 / len(idx)
     deg = np.diff(proj.indptr).astype(np.float64)
@@ -1385,8 +1397,8 @@ def louvain_kernel(proj: Projection, max_sweeps: int = 100, max_levels: int = 32
       nothing.
 
     Sequential-sweep algorithm → kernel tier only, like
-    ``biconnectivity_kernel``: one executor task over the broadcast
-    CSR (Python dict sweeps, O(E) per sweep). Past the broadcast limit
+    ``biconnectivity_kernel``: one call over the driver-held CSR
+    (Python dict sweeps, O(E) per sweep). Past the broadcast limit
     the order-dependent sweep has no faithful superstep twin —
     ``etl.label_propagation`` is the documented distributed
     community-detection path (a dispatch `louvain` refuses).
@@ -1584,8 +1596,8 @@ def ktruss_kernel(proj: Projection):
     intersection, then repeatedly delete the minimum-support edge
     (ties → smallest (a, b)), decrementing the support of the two
     companion edges of every triangle it closed. Deterministic;
-    O(E^1.5) intersections total; one executor task over the
-    broadcast CSR (the sequential-peel tier, like
+    O(E^1.5) intersections total; one call over the driver-held
+    CSR (the sequential-peel tier, like
     ``biconnectivity_kernel`` — the superstep twin peels
     level-synchronously instead and is proven equal in tests).
 

@@ -7,12 +7,13 @@ projection (SURVEY.md §3.2 step 3, §4.2). Where that projection lives
 is the tier:
 
 * ``broadcast`` — the projection (min ~16 B/edge) fits in one
-  process's memory, so it is collected once to the driver. Point
-  queries (Dijkstra, bidirectional Dijkstra, A*, Yen) run the exact
-  heap kernel (`kernel.py`) right there, in the calling process, with
-  no Spark job. Queries whose output is |V|-sized (SSSP, the `etl.py`
-  analytics) or that are multi-source (APSP, the centralities) run in
-  executor tasks against the broadcast projection.
+  process's memory, so it is collected once to the driver. Every
+  single-call kernel runs right there, in the calling process, with no
+  Spark job: the point queries (Dijkstra, bidirectional Dijkstra, A*,
+  Yen) and the |V|- or |E|-row ones (SSSP, the `etl.py` analytics),
+  whose rows reach Spark as one Arrow table. Only the multi-source
+  fan-outs (APSP, the sampled centralities) run in executor tasks,
+  against a broadcast of the projection.
 * ``file`` — SSSP and APSP only: the CSR is spilled to files that each
   executor task mmap-loads, so the resident cost is one page-cache
   copy per host instead of one pickle per worker process.
@@ -20,8 +21,8 @@ is the tier:
   (`bsp.py`, or the superstep loops in `etl.py`).
 
 :func:`_tier` is the one decision for every strategy-taking function
-here and in `etl.py`; :func:`_run_kernel` is the one way a kernel runs
-in executor tasks. The resolver's contract: ``strategy`` must be
+here and in `etl.py`; :func:`_run_kernel` is the one way a kernel's
+rows become a DataFrame. The resolver's contract: ``strategy`` must be
 ``auto`` or a tier the function implements, else ``ValueError`` before
 any dispatch; an explicit tier wins (``bsp`` with a projection warns
 that the projection is unused); ``auto`` with a projection is
@@ -51,16 +52,19 @@ from bigdata_foundation_spark.graph import kernel as _k
 
 # Broadcast-projection ceiling. Cost model (measured, see
 # tests/test_paths.py::test_projection_million_edges_compact):
-# driver + broadcast pickle hold the numpy CSR at ~16 B/edge
-# (int32 neighbor + float64 weight + int32 edge-id) plus ~60 B/node
-# for the string id list/index — 25M edges ≈ 400 MB arrays + id
-# overhead, comfortably inside a 4 GB driver. The list-view kernel
-# working set (~90 B/edge, Projection.hot()) is paid once in the
-# driver's Python process, where the point queries run (≈ 2.3 GB at
-# the limit, on top of the numpy CSR), and again in each executor
-# Python worker that serves a broadcast SSSP/APSP/centrality task —
-# the realistic per-process ceiling. Past this, paths.py dispatches to
-# the BSP kernels instead.
+# the driver holds the numpy CSR at ~16 B/edge (int32 neighbor +
+# float64 weight + int32 edge-id) plus ~60 B/node for the string id
+# list/index — 25M edges ≈ 400 MB arrays + id overhead, comfortably
+# inside a 4 GB driver. The list-view kernel working set (~90 B/edge,
+# Projection.hot()) is paid once in the driver's Python process, where
+# every single-call kernel runs (≈ 2.3 GB at the limit, on top of the
+# numpy CSR). A |V|- or |E|-row result (SSSP, the analytics) then sits
+# in the driver JVM as a local relation, no larger than the id list and
+# CSR already held there. Only the APSP and centrality fan-outs ship a
+# broadcast pickle, and pay the working set again, in each executor
+# Python worker that serves one of their tasks — the realistic
+# per-process ceiling. Past this, paths.py dispatches to the BSP
+# kernels instead.
 BROADCAST_EDGE_LIMIT = 25_000_000
 
 # Ceiling of the r12 file-spilled kernel tier (apsp_topk strategy
@@ -345,18 +349,29 @@ def _run_kernel(
     sources: list[str] | None = None,
 ) -> DataFrame:
     """Run a kernel against the projection (``projection``, or built
-    from ``roads`` when None) inside executor tasks; its rows become a
-    DataFrame WITHOUT ever materializing on the driver — SSSP streams
-    |V| rows, and at a 10M-node broadcast graph that is GBs the driver
-    must not hold.
+    from ``roads`` when None) and return its rows as a DataFrame typed
+    by ``schema``.
 
-    With ``sources=None`` one task runs ``fn(proj) -> rows``. Otherwise
-    the sources fan out over :func:`_source_slices` tasks and each
-    source contributes ``fn(proj, source) -> rows`` (the sampled
-    centralities)."""
+    With ``sources=None`` the kernel is one call, ``fn(proj) -> rows``.
+    On the broadcast tier that call runs in the calling process, where
+    the projection already lives, and the rows reach Spark as one
+    Arrow table (:func:`local_df`): a ``LocalTableScan``, so neither
+    the call nor a later action starts a Spark job. A Python executor
+    task per call costs more than most of these kernels take, and
+    would pickle SSSP's |V| rows one by one (KERNEL_BENCH.md). On the
+    file tier the call runs in one executor task that mmap-loads the
+    spill.
+
+    Otherwise the sources fan out over :func:`_source_slices` executor
+    tasks, each loading the broadcast (or the spill) once, and each
+    source contributes ``fn(proj, source) -> rows`` (APSP and the
+    sampled centralities)."""
     spark = roads.sparkSession
+    proj = projection or build_projection(roads)
+    if sources is None and tier == "broadcast":
+        return local_df(spark, fn(proj), schema)
     sc = spark.sparkContext
-    load = _task_projection(spark, projection or build_projection(roads), tier, spill_dir)
+    load = _task_projection(spark, proj, tier, spill_dir)
     if sources is None:
         rdd = sc.parallelize([0], 1).mapPartitions(lambda _it: iter(fn(load())))
     else:
@@ -408,7 +423,9 @@ def sssp(
     distance kernel is pure numpy, so it runs mmap-backed; 27.6×
     the superstep tier on the r9 expander, KERNEL_BENCH §r12) up to
     FILE_KERNEL_EDGE_LIMIT, 'bsp' supersteps past that (terminal).
-    Both kernel tiers run in one executor task (:func:`_run_kernel`).
+    The broadcast tier runs the kernel in the calling process and
+    hands its rows to Spark as one Arrow table, with no Spark job; the
+    file tier runs it in one executor task (:func:`_run_kernel`).
     Point-to-point :func:`dijkstra`/:func:`astar` do NOT get a file
     tier: their parent-tracking heap kernel needs the per-process
     list views (~90 B/edge), which defeats mmap sharing at exactly

@@ -4064,7 +4064,7 @@ def graph_betweenness(spark: SparkSession, sf_dir: str) -> DataFrame:
     PIPELINE_GOLDEN_SQL["graph_scc"],
     "strongly connected components of the directed road multigraph, every "
     "node labelled with its SCC's min string id - broadcast tier runs "
-    "iterative Tarjan as one executor task over the CSR; past the edge "
+    "iterative Tarjan in the driver over the CSR; past the edge "
     "limit the Forward-Backward coloring superstep loop. Pinned-golden "
     "oracle: an independent pure-Python KOSARAJU two-pass replay",
 )
@@ -4115,7 +4115,7 @@ def graph_articulation(spark: SparkSession, sf_dir: str) -> DataFrame:
     PIPELINE_GOLDEN_SQL["graph_kcore"],
     "k-core decomposition of the undirected simple graph underlying the "
     "road multigraph (full per-node core map) - broadcast tier runs "
-    "Batagelj-Zaversnik bucket peeling in one executor task; past the "
+    "Batagelj-Zaversnik bucket peeling in the driver; past the "
     "edge limit the distributed h-index iteration (Montresor 2011). "
     "Pinned-golden oracle: an independent pure-Python min-degree-peeling "
     "replay with a work queue",
@@ -4231,15 +4231,20 @@ def graph_sssp_slice(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     _nodes, roads = _graph(spark)
     d = sssp(spark, roads, "2022", projection=_graph_projection(spark))
-    # R6 ordered collect (explicit order: distance, then NodeId) + R7
-    # 0-based half-open slice — the reference slices its 29930-node
-    # result near the tail; CSV1 reaches 2191 nodes so slice the
-    # matching tail window [2181..2191). The slice window is then
-    # posexploded back to rows: array columns can't be hash-compared
-    # by the driver's pandas canonicalizer.
+    # The reference slices its 29930-node result near the tail; CSV1
+    # reaches 2191 nodes so slice the matching tail window [2181..2191).
+    return _sssp_window(d, 2181, 10)
+
+
+def _sssp_window(d: DataFrame, start: int, length: int) -> DataFrame:
+    """R6 ordered collect of an SSSP stream (explicit order: distance,
+    then NodeId) + R7 0-based half-open slice ``[start, start +
+    length)``. The slice window is then posexploded back to scalar
+    (pos, NodeId, distance) rows: array columns can't be hash-compared
+    by the driver's pandas canonicalizer."""
     pair = F.struct(F.col("distance"), F.col("NodeId"))
     collected = d.agg(F.sort_array(F.collect_list(pair)).alias("_p"))
-    window = collected.select(R.array_slice(F.col("_p"), 2181, 10).alias("_w"))
+    window = collected.select(R.array_slice(F.col("_p"), start, length).alias("_w"))
     return window.select(F.posexplode("_w").alias("pos", "s")).select(
         F.col("pos").cast("int").alias("pos"),
         F.col("s.NodeId").alias("NodeId"),

@@ -19,12 +19,50 @@ def spark():
     yield s
 
 
-@pytest.fixture(scope="session")
-def csv1():
-    path = f"{REFERENCE_DIR}/Shenzhen_Edgelist_1.csv"
+def reference_csv(n: int) -> str:
+    """Path of the reference's ``Shenzhen_Edgelist_{n}.csv``; skips the
+    calling test, naming the missing path, when it is absent."""
+    path = f"{REFERENCE_DIR}/Shenzhen_Edgelist_{n}.csv"
     if not os.path.exists(path):
         pytest.skip(f"reference CSV missing: {path}")
     return path
+
+
+@pytest.fixture(scope="session")
+def csv1():
+    return reference_csv(1)
+
+
+def graphgen():
+    """perfbench's seeded Shenzhen-schema road-graph generator, loaded
+    from its file so the rest of perfbench stays off ``sys.path``."""
+    import importlib.util
+
+    if "graphgen" not in sys.modules:
+        root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+        spec = importlib.util.spec_from_file_location(
+            "graphgen", os.path.join(root, "perfbench", "graphgen.py")
+        )
+        mod = importlib.util.module_from_spec(spec)
+        sys.modules["graphgen"] = mod  # dataclasses resolve their module by name
+        spec.loader.exec_module(mod)
+    return sys.modules["graphgen"]
+
+
+@pytest.fixture(scope="session")
+def generated40(spark, tmp_path_factory):
+    """(generator output, nodes, roads) for ``graphgen.generate(1,
+    side=40)`` written as CSV and read back through ``load_graph``:
+    1,600 nodes of the reference schema, present in every checkout."""
+    from bigdata_foundation_spark.graph import load_graph
+
+    g = graphgen().generate(1, side=40)
+    path = str(tmp_path_factory.mktemp("graphgen") / "edges.csv")
+    g.write_csv(path)
+    nodes, roads = load_graph(spark, path)
+    yield g, nodes, roads
+    nodes.unpersist()
+    roads.unpersist()
 
 
 @pytest.fixture(scope="session")

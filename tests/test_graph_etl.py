@@ -5,7 +5,7 @@ import pytest
 
 from bigdata_foundation_spark.graph import build_edges, build_nodes, read_edgelist
 
-from .conftest import REFERENCE_DIR
+from .conftest import graphgen, reference_csv
 
 # (file suffix, csv rows, nodes, roads) — FIXTURES.md §2 table.
 GOLDENS = [
@@ -17,12 +17,30 @@ GOLDENS = [
 
 @pytest.mark.parametrize("n,rows,n_nodes,n_roads", GOLDENS)
 def test_etl_counts(spark, n, rows, n_nodes, n_roads):
-    el = read_edgelist(spark, f"{REFERENCE_DIR}/Shenzhen_Edgelist_{n}.csv")
+    el = read_edgelist(spark, reference_csv(n))
     assert el.count() == rows  # blank padding rows dropped (SURVEY §1.1)
     nodes = build_nodes(el)
     assert nodes.count() == n_nodes
     roads = build_edges(el, nodes)
     assert roads.count() == n_roads
+
+
+@pytest.mark.parametrize("seed", [1, 2, 7])
+def test_etl_counts_generated(spark, tmp_path, seed):
+    """:func:`test_etl_counts` on a generated CSV of the reference's
+    schema (40×40 grid with planted padding, dangling, duplicate and
+    parallel rows): the counts and the road multigraph equal the
+    generator's own expectation."""
+    g = graphgen().generate(seed, side=40)
+    path = str(tmp_path / "edges.csv")
+    g.write_csv(path)
+    el = read_edgelist(spark, path)
+    assert el.count() == len(g.rows) - g.planted["padding"]
+    nodes = build_nodes(el)
+    assert nodes.count() == g.n_nodes
+    roads = build_edges(el, nodes)
+    assert roads.count() == g.n_roads
+    assert sorted(map(tuple, roads.select("src", "dst", "road_id", "cost").collect())) == g.roads
 
 
 def test_schema_and_types(spark, graph1):
@@ -408,6 +426,26 @@ def test_personalized_pagerank_semantics_and_tiers(spark):
         personalized_pagerank(spark, roads, [])
     with _pytest.raises(ValueError):
         personalized_pagerank(spark, roads, ["zz"], strategy="bsp").collect()
+
+
+@pytest.mark.parametrize("sources", [["a"], ["a", "a"], ["a", "zz"]], ids=["a", "a_a", "a_zz"])
+def test_personalized_pagerank_restart_over_distinct_present_sources(spark, sources):
+    """Both PPR tiers restart uniformly over the distinct sources that
+    are nodes of the graph: a repeated seed and an absent one change
+    nothing, so each seed list gives ``["a"]``'s ranks on both tiers,
+    and the ranks sum to 1 within the 6-dp rounding."""
+    from bigdata_foundation_spark.graph.etl import personalized_pagerank
+
+    rows = [("a", "b", "r1", 1.0), ("b", "c", "r2", 1.0), ("c", "a", "r3", 1.0),
+            ("c", "d", "r4", 1.0), ("e", "a", "r5", 1.0)]
+    roads = spark.createDataFrame(rows, "src string, dst string, road_id string, cost double")
+
+    def ranks(seeds, strategy):
+        return sorted(map(tuple, personalized_pagerank(spark, roads, seeds, strategy=strategy).collect()))
+
+    kernel, superstep = ranks(sources, "broadcast"), ranks(sources, "bsp")
+    assert kernel == superstep == ranks(["a"], "broadcast")
+    assert sum(r for _n, r in kernel) == pytest.approx(1.0, abs=1e-5)
 
 
 def test_eigenvector_centrality_semantics_and_tiers(spark):

@@ -16,6 +16,8 @@ from pyspark.sql import functions as F
 from bigdata_foundation_spark.graph import apsp_topk, astar, dijkstra, sssp, yens_k
 from bigdata_foundation_spark.graph.paths import build_projection, path_summary
 
+from .conftest import reference_csv
+
 SOURCE = "2022"
 # FIXTURES.md §3.2, file _1: reachable nodes, farthest node, distance, path len
 REACHABLE_1, FARTHEST_1, FARTHEST_DIST_1, FARTHEST_HOPS_1 = 2191, "2802", 9221.720431, 66
@@ -276,7 +278,7 @@ def test_bsp_equals_broadcast(spark, graph1, proj):
         assert rb["cost"] == pytest.approx(rs["cost"], abs=1e-9)
 
 
-def test_dijkstra_agg_golden(spark):
+def test_dijkstra_agg_golden(spark, csv1):
     """The reference's aggregate variant pins to the CSV1 goldens."""
     from bigdata_foundation_spark.queries import registry
 
@@ -285,7 +287,7 @@ def test_dijkstra_agg_golden(spark):
     assert abs(row["totalcost"] - 9221.720431) < 1e-6
 
 
-def test_sssp_slice_query(spark):
+def test_sssp_slice_query(spark, csv1):
     """The CODE:54-shape slice query returns the tail window of the
     distance-ordered stream as scalar (pos, NodeId, distance) rows;
     the last element is the farthest golden."""
@@ -305,11 +307,77 @@ def test_sssp_slice_query(spark):
 def test_sssp_csv7_farthest_golden(spark):
     from bigdata_foundation_spark.graph import load_graph, sssp
 
-    nodes, roads = load_graph(spark, "/root/reference/Shenzhen_Edgelist_7.csv")
+    nodes, roads = load_graph(spark, reference_csv(7))
     d = sssp(spark, roads, "2022").collect()
     far = max(d, key=lambda r: r["distance"])
     assert far["NodeId"] == "1319"
     assert abs(far["distance"] - 98318.360585) < 1e-5
+
+
+# Twins of the three reference-CSV tests above, on the generated 40×40
+# road graph (conftest ``generated40``) with networkx as the oracle.
+
+
+@pytest.fixture(scope="module")
+def generated_oracle(generated40):
+    """(roads, nodes, networkx digraph of the cheapest parallel edge,
+    source, networkx distances from it) for ``generated40``; the
+    source is the smallest id of the largest strongly connected
+    component."""
+    import networkx as nx
+
+    g, nodes, roads = generated40
+    G = nx.DiGraph()
+    for a, b, _rid, c in g.roads:
+        if not G.has_edge(a, b) or c < G[a][b]["w"]:
+            G.add_edge(a, b, w=c)
+    source = min(max(nx.strongly_connected_components(G), key=len))
+    dist = nx.single_source_dijkstra_path_length(G, source, weight="w")
+    return roads, nodes, G, source, dist
+
+
+def _farthest(dist):
+    return max(dist.items(), key=lambda kv: (kv[1], kv[0]))
+
+
+def test_dijkstra_agg_generated(spark, generated_oracle):
+    """:func:`test_dijkstra_agg_golden`'s aggregate (path_summary over
+    the Dijkstra stream) to the farthest node of the generated graph:
+    node count and total cost equal networkx's shortest path."""
+    import networkx as nx
+
+    roads, nodes, G, source, dist = generated_oracle
+    target, far = _farthest(dist)
+    row = path_summary(dijkstra(spark, roads, source, target)).collect()[0]
+    assert row["PathNodeNumber"] == len(nx.dijkstra_path(G, source, target, weight="w"))
+    assert row["totalcost"] == pytest.approx(far, abs=1e-6)
+
+
+def test_sssp_slice_generated(spark, generated_oracle):
+    """:func:`test_sssp_slice_query`'s ordered-collect + slice pipeline
+    (``queries._sssp_window``) on the generated graph: the tail window
+    of 10 equals networkx's distance-ordered tail."""
+    from bigdata_foundation_spark.queries import _sssp_window
+
+    roads, _nodes, _G, source, dist = generated_oracle
+    n = len(dist)
+    rows = sorted(_sssp_window(sssp(spark, roads, source), n - 10, 10).collect(), key=lambda r: r["pos"])
+    want = sorted((d, v) for v, d in dist.items())[n - 10:]
+    assert [r["pos"] for r in rows] == list(range(10))
+    assert [r["NodeId"] for r in rows] == [v for _d, v in want]
+    assert [r["distance"] for r in rows] == pytest.approx([d for d, _v in want], abs=1e-6)
+
+
+def test_sssp_farthest_generated(spark, generated_oracle):
+    """:func:`test_sssp_csv7_farthest_golden` on the generated graph,
+    through the default strategy: every reachable node's distance and
+    the farthest node equal networkx's."""
+    roads, _nodes, _G, source, dist = generated_oracle
+    d = {r["NodeId"]: r["distance"] for r in sssp(spark, roads, source).collect()}
+    assert d.keys() == dist.keys()
+    assert max(d, key=lambda v: (d[v], v)) == _farthest(dist)[0]
+    for v, want in dist.items():
+        assert d[v] == pytest.approx(want, abs=1e-6)
 
 
 def test_projection_million_edges_compact():
@@ -729,6 +797,50 @@ def test_point_queries_start_no_spark_job(spark):
         assert len(yen) == 3 and totals == sorted(totals)
         assert totals[0] == pytest.approx(want, abs=1e-9)
         assert yen[0]["nodeIds"] == [r["NodeId"] for r in fwd]
+
+
+def test_broadcast_sssp_starts_no_spark_job(spark):
+    """Broadcast-tier SSSP runs its kernel in the calling process and
+    hands the rows to Spark as one Arrow table: called and collected it
+    starts zero Spark jobs, its rows are the kernel's sorted by NodeId,
+    an absent source gives an empty frame with the pinned schema, and
+    the rows do not depend on the session's Arrow setting."""
+    import uuid
+
+    from bigdata_foundation_spark.graph import kernel
+    from bigdata_foundation_spark.graph.paths import _SSSP_SCHEMA
+
+    side = 14
+    roads, nodes, _edges = _seeded_grid(spark, side)
+    proj = build_projection(roads, nodes)
+    source = "3_9"
+    want = sorted(kernel.sssp(proj, source).items())
+    assert len(want) > 1
+
+    sc = spark.sparkContext
+    group = f"sssp-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "sssp in the driver", False)
+    try:
+        df = sssp(spark, roads, source, projection=proj)
+        rows = df.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert df.schema == _SSSP_SCHEMA
+    assert [tuple(r) for r in rows] == want
+
+    absent = sssp(spark, roads, "no-such-node", projection=proj)
+    assert absent.schema == _SSSP_SCHEMA
+    assert absent.collect() == []
+
+    key = "spark.sql.execution.arrow.pyspark.enabled"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        assert [tuple(r) for r in sssp(spark, roads, source, projection=proj).collect()] == want
+    finally:
+        spark.conf.set(key, before)
 
 
 def test_yens_k_equals_brute_force_on_multigraph(spark):

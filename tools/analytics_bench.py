@@ -11,9 +11,13 @@ written to a temporary CSV and read back through ``load_graph``. Each
 line prints wall seconds and Spark jobs (one job group per call) for
 the kernel tier and the superstep tier. SCC's superstep tier is
 diameter-bound on the 160×160 grid (hundreds of supersteps per
-forward colouring), so its line runs on the 40×40 grid of the same
-generator. ``k_hop_nodes`` and ``random_walks`` have one tier; they
-are checked against a pure-Python BFS and the edge list.
+forward colouring), and minimum spanning forest's and truss
+decomposition's are round-bound, so their tiers are compared on the
+40×40 grid of the same generator; at CSV7 scale they print their
+kernel tier only, as do the kernel-only functions (bridges,
+articulation points, Louvain). ``k_hop_nodes`` and ``random_walks``
+have one tier; they are checked against a pure-Python BFS and the
+edge list.
 
 Writes nothing but the temporary CSV; paste results into
 KERNEL_BENCH.md.
@@ -133,20 +137,38 @@ def main() -> int:
     assert len(walks) == len({v for a, b, _r, _c in g.roads for v in (a, b)})
     print(f"{'random_walks (8 steps)':32s} superstep={dt:6.2f}s ({jobs:4d} jobs) rows={len(rows):,} VALID")
 
-    # SCC: kernel tier at CSV7 scale; both tiers on the 40×40 grid
-    sc_rows, t_k, j_k = _timed(
-        sc, lambda: E.strongly_connected_components(roads, strategy="broadcast", projection=proj)
-    )
-    print(
-        f"{'strongly_connected_components':32s} kernel={t_k:6.2f}s ({j_k:3d} jobs) "
-        f"rows={len(sc_rows):,} sccs={len({r[1] for r in sc_rows}):,}"
-    )
+    # Kernel tier only at CSV7 scale: the kernel-only functions, and
+    # the functions whose superstep tier is diameter- or round-bound on
+    # the 160×160 grid (their tiers are compared on the 40×40 grid below)
+    kernel_only = [
+        ("strongly_connected_components",
+         lambda: E.strongly_connected_components(roads, strategy="broadcast", projection=proj)),
+        ("minimum_spanning_forest",
+         lambda: E.minimum_spanning_forest(roads, strategy="broadcast", projection=proj)),
+        ("truss_decomposition",
+         lambda: E.truss_decomposition(roads, strategy="broadcast", projection=proj)),
+        ("bridge_edges", lambda: E.bridge_edges(roads, projection=proj)),
+        ("articulation_points", lambda: E.articulation_points(roads, projection=proj)),
+        ("louvain", lambda: E.louvain(roads, projection=proj)),
+    ]
+    for name, kern in kernel_only:
+        rows, t_k, j_k = _timed(sc, kern)
+        print(f"{name:32s} kernel={t_k:6.2f}s ({j_k:3d} jobs) rows={len(rows):,}")
+
     _g40, roads40, proj40 = _load(spark, 40)
-    two_tier(
-        "scc on the 40x40 grid",
-        lambda: E.strongly_connected_components(roads40, strategy="broadcast", projection=proj40),
-        lambda: E.strongly_connected_components(roads40, strategy="bsp"),
-    )
+    grid40 = [
+        ("scc on the 40x40 grid",
+         lambda: E.strongly_connected_components(roads40, strategy="broadcast", projection=proj40),
+         lambda: E.strongly_connected_components(roads40, strategy="bsp")),
+        ("msf on the 40x40 grid",
+         lambda: E.minimum_spanning_forest(roads40, strategy="broadcast", projection=proj40),
+         lambda: E.minimum_spanning_forest(roads40, strategy="bsp")),
+        ("truss on the 40x40 grid",
+         lambda: E.truss_decomposition(roads40, strategy="broadcast", projection=proj40),
+         lambda: E.truss_decomposition(roads40, strategy="bsp")),
+    ]
+    for case in grid40:
+        two_tier(*case)
     return 0
 
 
